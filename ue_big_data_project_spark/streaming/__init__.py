@@ -12,8 +12,9 @@ replaying files — and the *logic* is shared with batch (same column
 expressions), giving batch-vs-stream equivalence tests for free.
 
 Scale notes: stateful aggs shuffle on (window, keys); the watermark
-bounds state. For large state, RocksDB state store (set in
-``session.get_spark``). Late data beyond the watermark is dropped —
+bounds window state, and dedup state only under the condition
+:func:`dedup_stream` states. For large state, RocksDB state store (set
+in ``session.get_spark``). Late data beyond the watermark is dropped —
 identical semantics to the reference's append-mode queries.
 """
 
@@ -131,11 +132,13 @@ def dedup_stream(
 ) -> DataFrame:
     """Keyed dedup (X13): state-backed on streams.
 
-    With a watermark the state for old keys is dropped
-    (``dropDuplicatesWithinWatermark`` semantics via dropDuplicates on
-    key+event-time bound) — the reference's unbounded-state
-    ``dropDuplicates(["entry_id"])`` (src/previous_tp_code.py:212) leaks
-    state forever on a stream; bounding it is the intended fix.
+    A watermark bounds the dedup state only when ``keys`` include
+    ``watermark_col``: Spark then evicts a key once the watermark passes
+    its event time. When the keys lack the event-time column, as in the
+    reference's ``dropDuplicates(["entry_id"])``
+    (src/previous_tp_code.py:212) that the wind query uses, nothing is
+    evicted and the state grows with every new key for the life of the
+    query.
     """
     if df.isStreaming and watermark_col and watermark:
         return df.withWatermark(watermark_col, watermark).dropDuplicates(keys)
