@@ -165,9 +165,19 @@ def local_relation(spark: SparkSession, rows, schema):
 
     if isinstance(schema, str):
         schema = T._parse_datatype_string(schema)
+    # Materialize once: a generator would be consumed by the Arrow
+    # attempt and leave the fallback below with nothing to read.
+    rows = list(rows)
+    # pandas/Arrow read a float NaN as a missing value, so a frame
+    # holding one must take the classic path to keep it a NaN.
+    if _has_nan(rows):
+        return spark.createDataFrame(rows, schema)
     try:
-        data = [tuple(r) for r in rows]
         names = [f.name for f in schema.fields]
+        data = [
+            tuple(r.get(n) for n in names) if isinstance(r, dict) else tuple(r)
+            for r in rows
+        ]
         if not data:
             # Zero rows: an empty pyarrow table with the exact Arrow
             # schema (the pandas path cannot type empty columns).
@@ -194,4 +204,14 @@ def local_relation(spark: SparkSession, rows, schema):
             )
         return df
     except Exception:
-        return spark.createDataFrame(list(rows), schema)
+        return spark.createDataFrame(rows, schema)
+
+
+def _has_nan(v) -> bool:
+    if isinstance(v, float):
+        return v != v
+    if isinstance(v, (list, tuple)):
+        return any(_has_nan(x) for x in v)
+    if isinstance(v, dict):
+        return any(_has_nan(x) for x in v.values())
+    return False
