@@ -171,3 +171,79 @@ def test_wind_pipeline_dedup_and_average(spark):
     rows = R.wind_rolling_average(df).collect()
     got = {r["window_start"].isoformat(): r["avg_wind_speed"] for r in rows}
     assert got == {"2025-01-25T16:00:00": 4.0, "2025-01-25T16:05:00": 7.0}
+
+
+def test_events_ewma_matches_python_recurrence(spark):
+    """The native array-fold EWMA equals the textbook per-key loop."""
+    import datetime as dt
+
+    from ue_big_data_project_spark.queries.events import events_ewma
+
+    # Drive through a temp parquet dir shaped like the testdata so the
+    # query's load_tables path is exercised end-to-end.
+    import tempfile, os, shutil
+
+    tmp = tempfile.mkdtemp(prefix="ewma_")
+    try:
+        base = dt.datetime(2024, 1, 1)
+        rows = [
+            (i, base + dt.timedelta(minutes=i), i % 3, "click", float(v), "{}")
+            for i, v in enumerate([10, 20, 30, 40, 50, 60, 70, 80, 90])
+        ]
+        spark.createDataFrame(
+            rows,
+            "event_id long, ts timestamp, user_id long, "
+            "event_type string, value double, props string",
+        ).write.parquet(os.path.join(tmp, "events.parquet"))
+        got = {
+            r.user_id: (r.n_events, r.ewma_value)
+            for r in events_ewma(spark, tmp).collect()
+        }
+        expect = {}
+        for u in range(3):
+            vals = [float(v) for i, v in enumerate([10, 20, 30, 40, 50, 60, 70, 80, 90]) if i % 3 == u]
+            acc = vals[0]
+            for x in vals[1:]:
+                acc = 0.3 * x + 0.7 * acc
+            expect[u] = (len(vals), acc)
+        for u, (n, e) in expect.items():
+            assert got[u][0] == n
+            assert abs(got[u][1] - e) < 1e-6, u
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
+def test_events_ewma_over_threshold_key_raises(spark):
+    """The bounded-per-key contract is ENFORCED (round-4 verdict task
+    5): a key whose history exceeds max_per_key fails loudly instead of
+    silently materializing an unbounded row."""
+    import datetime as dt
+    import os
+    import shutil
+    import tempfile
+
+    import pytest
+
+    from ue_big_data_project_spark.queries.events import events_ewma
+
+    tmp = tempfile.mkdtemp(prefix="ewma_guard_")
+    try:
+        base = dt.datetime(2024, 1, 1)
+        rows = [
+            (i, base + dt.timedelta(minutes=i), i % 2, "click", float(i), "{}")
+            for i in range(12)
+        ]
+        spark.createDataFrame(
+            rows,
+            "event_id long, ts timestamp, user_id long, "
+            "event_type string, value double, props string",
+        ).write.parquet(os.path.join(tmp, "events.parquet"))
+        # 6 events per key: fine at the default threshold...
+        assert events_ewma(spark, tmp).count() == 2
+        # ...and a loud failure BEFORE the fold materializes anything
+        # when the per-key bound is exceeded (the guard is a cheap
+        # counting pre-pass, so it raises at query-build time).
+        with pytest.raises(ValueError, match="bounded-per-key contract"):
+            events_ewma(spark, tmp, max_per_key=5)
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)

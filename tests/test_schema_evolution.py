@@ -29,3 +29,16 @@ def test_merge_schema_widens_and_nullfills(spark):
         nulls = merged.filter(F.col("lang").isNull()).count()
         assert nulls == 2  # wave-1 rows null-filled for the new columns
         assert merged.filter(F.col("doc_id") == 3).collect()[0]["lang"] == "en"
+
+
+def test_scrub_pii_redacts(spark):
+    from ue_big_data_project_spark.functions.text import pii_counts, scrub_pii
+
+    df = spark.createDataFrame(
+        [(1, "mail me at a.b+c@example.org or see https://x.io/p?q=1 now")],
+        "id int, text string",
+    )
+    e, u = pii_counts("text")
+    row = df.select(scrub_pii("text").alias("s"), e.alias("e"), u.alias("u")).collect()[0]
+    assert row["s"] == "mail me at <EMAIL> or see <URL> now"
+    assert (row["e"], row["u"]) == (1, 1)

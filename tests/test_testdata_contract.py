@@ -37,3 +37,26 @@ def test_load_tables_reads_every_table_query_ready(spark, sf):
     # Every table is actually scannable end to end.
     for name, df in tables.items():
         assert df.limit(1).count() in (0, 1), name
+
+
+@pytest.mark.parametrize("sf", SFS)
+def test_fixture_documents_have_no_parens_or_empty_text(spark, sf):
+    """The BPE oracles (TEXT_BPE_TOKENS_SQL / PIPELINE_PACK_BPE_SQL)
+    count subword tokens by counting '(' in a (sym)(sym) wrapped
+    spelling and drop empty word lists via list_filter — both exact
+    ONLY while no fixture word contains a literal paren and no document
+    is empty/whitespace-only (round-11 advice). Pin those assumptions
+    so a testdata regen that violates them fails HERE, not as an
+    opaque oracle hash mismatch."""
+    from pyspark.sql import functions as F
+
+    docs = load_tables(spark, f"/root/testdata/{sf}", ("documents",))[
+        "documents"
+    ]
+    bad = docs.filter(
+        F.col("text").isNull()
+        | (F.trim(F.col("text")) == "")
+        | F.col("text").contains("(")
+        | F.col("text").contains(")")
+    ).count()
+    assert bad == 0

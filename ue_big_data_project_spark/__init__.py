@@ -9,15 +9,15 @@ library:
 - ``session``    — SparkSession factory tuned for AQE / Arrow / UTC.
 - ``schemas``    — explicit StructType registry per source (SURVEY §1.2).
 - ``sources``    — batch & streaming Source API (kafka/file/rate/memory).
-- ``functions``  — scalar kit (time, geo, parsing) as native Catalyst
-                   expressions; UDFs only where unavoidable.
-- ``operators``  — composite relational operators: as-of joins,
-                   per-group top-k, haversine k-NN.
-- ``queries``    — the reference's four declared queries + wind query,
-                   plus the core-operator queries, each with its oracle.
+- ``functions``  — scalar kit (time, geo, text, vectors) as native
+                   Catalyst expressions; UDFs only where unavoidable.
+- ``operators``  — composite relational operators: as-of / range joins,
+                   per-group top-k, dedup (exact/minhash/simhash/jaccard),
+                   similarity search, haversine k-NN.
+- ``queries``    — the reference's four declared queries + wind pipeline,
+                   re-expressed over neutral fixture schemas.
 - ``streaming``  — watermarked windowed aggregation, streaming dedup,
                    foreachBatch sinks, query lifecycle helpers.
-- ``observability`` — observed metrics and the dead-letter split.
 
 Everything here is built only on the public Apache Spark / PySpark API.
 """

@@ -133,3 +133,12 @@ def french_time(ts: Column) -> Column:
     """``14h05m`` display format (src/plane_naolib_consumer.py:111)."""
     return F.date_format(ts, "H'h'mm'm'")
 
+
+def hex_digit_value(c: Column) -> Column:
+    """Hex character → 0..15 via ``instr`` — portable to any SQL engine.
+
+    Used by the hash-sketch operators (minhash/simhash) so the DuckDB
+    oracle can reproduce bit-level behavior exactly: both engines agree on
+    ``md5`` and on ``instr/strpos``.
+    """
+    return F.instr(F.lit("0123456789abcdef"), c) - 1

@@ -1,9 +1,11 @@
 """Composite relational operators.
 
 Each module composes public DataFrame primitives into an operator the
-reference exercises:
+reference exercises (or that a 100 TB training-data pipeline needs):
 
-- ``asof`` — as-of / range joins (reference's only join, SURVEY §2.5).
-- ``topk`` — per-group and global top-k (SURVEY §2.8).
-- ``geo``  — haversine k-NN (internalized REST pushdown, SURVEY S5/O3).
+- ``asof``       — as-of / range joins (reference's only join, SURVEY §2.5).
+- ``topk``       — per-group and global top-k (SURVEY §2.8).
+- ``geo``        — haversine k-NN (internalized REST pushdown, SURVEY S5/O3).
+- ``dedup``      — exact / minhash-LSH / simhash / n-gram-Jaccard dedup.
+- ``similarity`` — embedding similarity search (brute-force + LSH-bucketed).
 """

@@ -105,6 +105,9 @@ WIND = T.StructType(
 )
 WIND_CASTS = {"created_at": "timestamp", "wind_speed": "float"}
 
+# --- driver testdata props JSON (events.props) ------------------------------
+EVENT_PROPS = T.StructType([T.StructField("k", T.IntegerType())])
+
 REGISTRY: dict[str, T.DataType] = {
     "bus_position": BUS_POSITION,
     "bike_station": BIKE_STATION,
@@ -113,6 +116,7 @@ REGISTRY: dict[str, T.DataType] = {
     "bus_airport": BUS_AIRPORT,
     "bus_affluence": BUS_AFFLUENCE,
     "wind": WIND,
+    "event_props": EVENT_PROPS,
 }
 
 CASTS: dict[str, dict[str, str]] = {
