@@ -1,6 +1,7 @@
-"""The metadata-IO seam: ledger scans and marker writes must work on
-object stores, not just POSIX — and the artifact layer must not regress
-back to raw ``os``/``shutil``/``open`` calls."""
+"""The metadata-IO seam (round-8 verdict task 2): ledger scans,
+manifest read/write, sidecar discovery, and version pruning must work
+on object stores, not just POSIX — and the artifact layer must not
+regress back to raw ``os``/``shutil``/``open`` calls."""
 
 from __future__ import annotations
 
@@ -120,13 +121,18 @@ def test_hadoop_branch_requires_active_session(monkeypatch):
 def test_streaming_sink_roundtrip_through_hadoop_branch(
     spark, tmp_path, monkeypatch
 ):
-    """End-to-end: the exactly-once sink's ledger markers resolve
-    through the Hadoop branch when the ledger dir is a URI — the
-    deployment shape with the ledger on s3a/hdfs."""
+    """End-to-end: the bucketed merge sink's ledger + manifests + prune
+    all resolve through the Hadoop branch when the snapshot dir is a
+    URI — the exact 100 TB deployment shape (snapshot on s3a/hdfs)."""
+    from pyspark.sql import functions as F
+
     from ue_big_data_project_spark import streaming as ST
 
     monkeypatch.setattr(
         fs, "is_local", lambda p: not str(p).startswith("file://")
+    )
+    initial = spark.createDataFrame(
+        [(1, 10.0), (2, 20.0)], "id long, bal double"
     )
     import time
 
@@ -142,23 +148,23 @@ def test_streaming_sink_roundtrip_through_hadoop_branch(
         dst = os.path.join(stage, f"b{i}.parquet")
         os.symlink(os.path.join(bdir, part), dst)
         os.utime(dst, (now + i, now + i), follow_symlinks=False)
-
-    def source():
-        return spark.readStream.schema("id long, bal double").option(
-            "maxFilesPerTrigger", 1
-        ).parquet(stage)
-
-    ledger = "file://" + str(tmp_path / "ledger")
-    got: dict[int, float] = {}
-
-    def effect(batch_df, batch_id):
-        got.update((r.id, r.bal) for r in batch_df.collect())
-
-    ST.run_until_drained(ST.idempotent_foreach_batch(source(), effect, ledger))
-    assert ST._committed_batch_ids(ledger) == [0, 1]
-    assert got == {1: 11.0, 3: 33.0}
-    # A replay without a checkpoint re-delivers both batch ids; the
-    # markers read back through the same branch suppress the effect.
-    got.clear()
-    ST.run_until_drained(ST.idempotent_foreach_batch(source(), effect, ledger))
-    assert got == {}
+    sdf = spark.readStream.schema("id long, bal double").option(
+        "maxFilesPerTrigger", 1
+    ).parquet(stage)
+    snap = "file://" + str(tmp_path / "snap")
+    q = ST.bucketed_merge_ingest_stream(
+        sdf,
+        initial,
+        snap,
+        ["id"],
+        update_set={"bal": F.col("s.bal")},
+        insert_values={"bal": F.col("s.bal")},
+        n_buckets=2,
+    )
+    ST.run_until_drained(q)
+    assert ST._committed_batch_ids(snap + "/_ledger") == [0, 1]
+    got = {
+        r.id: r.bal
+        for r in ST.read_bucketed_merged_snapshot(spark, snap).collect()
+    }
+    assert got == {1: 11.0, 2: 20.0, 3: 33.0}
