@@ -1,9 +1,9 @@
-"""Entry-point contract (PySpark target).
+"""Driver contract for the spark-graft builder (PySpark target).
 
-An external harness runs ``entry(spark)`` as a smoke check, then runs each
-``queries()[name]`` against its testdata directory and compares it with
-the matching ``oracle_sql()[name]`` via DuckDB (row count, schema and an
-order-insensitive value hash).
+The driver's verify runs ``entry(spark)`` as a smoke check, runs each
+``queries()[name]`` at sf=0.01 and compares it against the matching
+``oracle_sql()[name]`` via DuckDB (row-count + schema + order-insensitive
+value-hash → CORRECTNESS_r{N}.json).
 
 The real implementation lives in ``ue_big_data_project_spark``; this
 module is a thin adapter over its query registry.
@@ -19,28 +19,32 @@ from pyspark.sql import DataFrame, SparkSession
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from ue_big_data_project_spark.queries import all_queries  # noqa: E402
+from ue_big_data_project_spark.queries import gate_queries  # noqa: E402
 
 
 def entry(spark: SparkSession) -> DataFrame:
-    """Flagship query: the reference's Q1 (plane → bus wait) on its
-    inline fixtures, so it needs no testdata tables."""
-    from ue_big_data_project_spark.queries.reference_registered import (
-        ref_q1_plane_bus_wait,
-    )
+    """Flagship query on /root/testdata/sf0.001; driver checks rows>0."""
+    from ue_big_data_project_spark.queries.tpch import q1_pricing_summary
 
-    return ref_q1_plane_bus_wait(spark, "")
+    return q1_pricing_summary(spark, "/root/testdata/sf0.001")
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """Every registry entry: the transit queries plus the core operators."""
-    return {name: spec.fn for name, spec in all_queries().items()}
+    """One entry per implemented operator from SURVEY.md §2.
+
+    The driver hashes at most 50 entries per round in dict order, so this
+    is the consolidated gate set (``gate_queries``): entries the driver
+    has not yet hashed first, near-duplicates merged into kit queries.
+    The full registry (every standalone query) runs in the local pytest
+    oracle gate, tests/test_oracle.py.
+    """
+    return {name: spec.fn for name, spec in gate_queries().items()}
 
 
 def oracle_sql() -> dict[str, str]:
     """DuckDB-runnable ANSI SQL twin for each query (same column names)."""
     return {
         name: spec.oracle
-        for name, spec in all_queries().items()
+        for name, spec in gate_queries().items()
         if spec.oracle is not None
     }

@@ -1,23 +1,581 @@
-"""Physical-plan assertions: shuffle budgets of the registry queries.
+"""Physical-plan assertions pinning the 100 TB scale contracts.
 
-The exchange count of each pinned query at the test fixture scale is an
-upper bound. A failure means a code change added a shuffle the query
-didn't pay before — a regression that is invisible in fixture-scale
-wall-clock. (Budgets are initial-plan counts at fixture stats; AQE may
-re-plan joins at other scales, which is data, not code.)
+The dedup/similarity verify stages must never *hint* a broadcast of an
+unbounded (grows-with-corpus) table: per-document shingle sets, SimHash
+signatures, or vector blocks. With the auto-broadcast threshold disabled
+(so Catalyst can't pick a broadcast on its own for the tiny test data),
+the only BroadcastExchange allowed in these plans is the explicitly
+bounded one — cosine_pairs' ids-only block list.
 """
 
 from __future__ import annotations
 
 import pytest
 
-from ue_big_data_project_spark.queries import all_queries
+from ue_big_data_project_spark.operators import dedup as DD
+from ue_big_data_project_spark.operators.similarity import cosine_pairs
+from ue_big_data_project_spark.session import load_tables
 
+SF = "/root/testdata/sf0.001"
+
+
+def plan_of(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+@pytest.fixture()
+def no_auto_broadcast(spark):
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    yield spark
+    spark.conf.set(key, old)
+
+
+def test_jaccard_verify_has_no_broadcast(no_auto_broadcast):
+    spark = no_auto_broadcast
+    d = load_tables(spark, SF, ("documents",))["documents"]
+    plan = plan_of(DD.ngram_jaccard_pairs(d, "doc_id", "text"))
+    assert "BroadcastExchange" not in plan, plan
+
+
+def test_simhash_verify_has_no_broadcast(no_auto_broadcast):
+    spark = no_auto_broadcast
+    d = load_tables(spark, SF, ("documents",))["documents"]
+    plan = plan_of(DD.simhash_pairs(d, "doc_id", "text"))
+    assert "BroadcastExchange" not in plan, plan
+
+
+def test_banding_parameter_guards(spark):
+    d = load_tables(spark, SF, ("documents",))["documents"]
+    with pytest.raises(ValueError, match="zero-width"):
+        DD.simhash_pairs(d, "doc_id", "text", bits=3, max_hamming=3)
+    with pytest.raises(ValueError, match="divide evenly"):
+        DD.minhash_lsh_pairs(d, "doc_id", "text", num_hashes=8, bands=3)
+
+
+def test_ivf_kmeans_recall_vs_brute(spark):
+    """k-means IVF (nprobe=2 of 16 cells) must keep reasonable recall
+    against exact brute force on the fixture corpus — guards against a
+    degenerate quantizer (the failure mode of placeholder centroids)."""
+    from pyspark.sql import functions as F
+
+    from ue_big_data_project_spark.operators.similarity import (
+        brute_force_knn,
+        ivf_knn,
+        kmeans_centroids,
+    )
+
+    e = load_tables(spark, SF, ("embeddings",))["embeddings"]
+    queries = e.filter(F.col("vec_id") < 10).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("query_vec"),
+    )
+    exact = {
+        (r["query_id"], r["vec_id"])
+        for r in brute_force_knn(e, queries, k=5).collect()
+    }
+    assert exact, "fixture produced no ground truth"
+
+    def recall_at(nprobe: int) -> float:
+        approx = {
+            (r["query_id"], r["vec_id"])
+            for r in ivf_knn(
+                e, queries, k=5, n_centroids=16, nprobe=nprobe
+            ).collect()
+        }
+        return len(exact & approx) / len(exact)
+
+    # The synthetic fixture embeddings are near-uniform random vectors,
+    # so cosine neighborhoods are weak and the recall ceiling at small
+    # nprobe is inherently modest — measured (deterministic md5 init +
+    # fixed data → exactly reproducible): 0.36 @ nprobe=2, 0.46 @ 4,
+    # 0.80 @ 8 with the default 1-in-4 sampled training. The gate
+    # therefore asserts (a) meaningfully above the 2/16 random-cell
+    # baseline at nprobe=2, (b) recall grows with probes — a collapsed
+    # quantizer (all cells alike) is flat across nprobe, and (c) most
+    # of the ground truth is recovered by half the cells.
+    r2, r4, r8 = recall_at(2), recall_at(4), recall_at(8)
+    assert r2 >= 0.3, f"recall@2 {r2:.2f} — quantizer degenerate?"
+    assert r4 >= r2, f"recall not monotone in nprobe: {r4:.2f} < {r2:.2f}"
+    assert r8 >= max(r4, 0.7), f"recall@8 {r8:.2f} — cells not selective"
+    # And the quantizer itself: k distinct, non-empty, finite centroids.
+    cents = kmeans_centroids(e, n_centroids=16, iters=2).collect()
+    assert len(cents) == 16
+    assert len({r["cent_id"] for r in cents}) == 16
+    for r in cents:
+        assert all(v is not None for v in r["cent_vec"])
+
+
+def test_interval_join_is_hash_not_nested_loop(no_auto_broadcast):
+    """The binned range join must plan as a shuffle hash/SMJ on the bin
+    key — the whole point of binning is escaping the nested-loop
+    fallback a pure range predicate forces."""
+    import datetime as dt
+
+    from pyspark.sql import functions as F
+
+    from ue_big_data_project_spark.operators.interval import (
+        point_in_interval_join,
+    )
+
+    spark = no_auto_broadcast
+    base = dt.datetime(2024, 1, 1)
+    p = spark.createDataFrame(
+        [(i, base + dt.timedelta(seconds=i * 40)) for i in range(50)],
+        "pid long, ts timestamp",
+    )
+    iv = spark.createDataFrame(
+        [
+            (j, base + dt.timedelta(seconds=j * 97),
+             base + dt.timedelta(seconds=j * 97 + 200))
+            for j in range(20)
+        ],
+        "iid long, start_ts timestamp, end_ts timestamp",
+    )
+    plan = plan_of(
+        point_in_interval_join(p, iv, "ts", "start_ts", "end_ts", 300)
+    )
+    assert "NestedLoop" not in plan, plan
+    assert "CartesianProduct" not in plan, plan
+
+
+def test_pack_sequences_single_shuffle(spark):
+    """Sequence packing must shuffle exactly once (on the packing-stream
+    key); the window running sum rides the same partitioning."""
+    from pyspark.sql import functions as F
+
+    from ue_big_data_project_spark.pipelines import pack_sequences
+
+    d = load_tables(spark, SF, ("documents",))["documents"]
+    counted = d.select("doc_id", F.length("text").alias("n_tokens"))
+    plan = plan_of(pack_sequences(counted, budget=512, writers=8))
+    assert plan.count("Exchange hashpartitioning") == 1, plan
+
+
+def test_cosine_pairs_broadcasts_only_block_ids(no_auto_broadcast):
+    spark = no_auto_broadcast
+    e = load_tables(spark, SF, ("embeddings",))["embeddings"]
+    plan = plan_of(cosine_pairs(e, threshold=0.4))
+    # Exactly one broadcast: the ids-only (blk_a <= blk_b) pair-key
+    # build, O(N/block_size) longs. The block payloads attach via
+    # shuffle equi-joins.
+    assert plan.count("BroadcastExchange") == 1, plan
+    assert "BroadcastNestedLoopJoin" in plan
+    assert "BroadcastHashJoin" not in plan, plan
+
+
+def test_append_components_never_shuffles_or_broadcasts_base(
+    no_auto_broadcast, tmp_path
+):
+    """Round-9 verdict task 3: in the incremental-CC append, the
+    increment (and increment-derived bounded sets) may broadcast — the
+    base map may NOT, and base rows must never cross a shuffle. Pinned
+    by walking the executed plans of all three AppendParts: zero
+    Exchange nodes with the base scan in their subtree, and the only
+    BroadcastExchange whose lineage touches the base is the bounded
+    new-node overlap (a LeftSemi that STREAMS the base against the
+    broadcast increment, output ≤ |increment|)."""
+    from pyspark.sql import functions as F
+
+    from ue_big_data_project_spark.operators.graph import (
+        append_components_detail,
+    )
+
+    spark = no_auto_broadcast
+    base_path = str(tmp_path / "base_cmap_marker")
+    spark.createDataFrame(
+        [(i, i - i % 3) for i in range(30)], "id long, component long"
+    ).write.parquet(base_path)
+    base = spark.read.parquet(base_path)
+    nn = spark.createDataFrame([(100,), (101,), (5,)], "id long")
+    ne = spark.createDataFrame(
+        [(100, 0), (101, 100), (5, 9)], "src long, dst long"
+    )
+    parts = append_components_detail(base, nn, ne)
+
+    def subtree_has_base(node) -> bool:
+        if "base_cmap_marker" in node.toString().split("\n")[0]:
+            return True
+        if node.nodeName() == "AdaptiveSparkPlan":
+            return subtree_has_base(node.initialPlan())
+        for seq in (node.children(), node.subqueries()):
+            for i in range(seq.size()):
+                if subtree_has_base(seq.apply(i)):
+                    return True
+        return False
+
+    def audit(df):
+        shuffles_over_base, broadcasts_with_base = [], []
+
+        def walk(node):
+            name = node.nodeName()
+            if name == "AdaptiveSparkPlan":
+                walk(node.initialPlan())
+                return
+            if name == "Exchange" and subtree_has_base(node):
+                shuffles_over_base.append(node.toString().split("\n")[0])
+            if "BroadcastExchange" in name and subtree_has_base(node):
+                broadcasts_with_base.append(node.treeString())
+            for seq in (node.children(), node.subqueries()):
+                for i in range(seq.size()):
+                    walk(seq.apply(i))
+
+        walk(df._jdf.queryExecution().executedPlan())
+        return shuffles_over_base, broadcasts_with_base
+
+    for label, df in (
+        ("assignment", parts.assignment),
+        ("relabel", parts.relabel),
+        ("fresh", parts.fresh),
+    ):
+        shuffles, bcasts = audit(df)
+        assert not shuffles, (
+            f"{label}: base rows cross a shuffle — O(corpus) per append:\n"
+            + "\n".join(shuffles)
+        )
+        for tree in bcasts:
+            assert "LeftSemi" in tree, (
+                f"{label}: a broadcast over base lineage is not the "
+                f"bounded LeftSemi overlap — the base map is being "
+                f"broadcast:\n{tree}"
+            )
+    # The relabel map itself must be base-lineage-free broadcast-wise
+    # (it derives from the checkpointed endpoint-label pass).
+    assert audit(parts.relabel) == ([], [])
+    # Semantics unchanged by the plan shape: the append equals the
+    # expected merged clustering on this fixture.
+    got = {(r.id, r.component) for r in parts.assignment.collect()}
+    assert {(100, 0), (101, 0), (5, 3)} <= got
+    assert len(got) == 32
+
+
+# Shuffle budgets: the exchange count of each headline query at the
+# test fixture scale, pinned as an upper bound. A failure here means a
+# code change added a shuffle the query didn't pay before — the exact
+# regression class that is invisible at sf0.001 wall-clock and ruinous
+# at 100 TB. (Budgets are initial-plan counts at fixture stats; AQE may
+# re-plan joins at other scales, which is data, not code.)
 SHUFFLE_BUDGETS = {
+    "q1_pricing_summary": 1,        # one agg exchange, nothing else
+    "q3_shipping_priority": 1,      # dims broadcast, one agg exchange
+    "q5_region_revenue": 1,         # 5 broadcasts, one agg exchange
+    "q17_small_quantity_revenue": 2,  # decorrelated agg + join key
+    "q18_large_orders": 1,
+    "q21_waiting_suppliers": 4,     # grouped-pass decorrelation
+    "dedup_exact": 1,               # the fingerprint group-by
+    "dedup_incremental": 2,         # batch group-by + anti join key
     "asof_first_ship": 1,
-    # The reference's Q1: the as-of join plus its display projection
-    # pay exactly one exchange.
+    "pipeline_prep_documents": 1,   # dedup + semi join share the key
+    # Round-3 gate rotation: pin the newly driver-facing shapes too.
+    "q8_market_share": 1,           # dims broadcast, one agg exchange
+    "q9_product_profit": 1,         # dims broadcast, one agg exchange
+    "q10_returned_revenue": 1,      # one join+agg exchange
+    "q11_important_parts": 3,       # group + global-scalar + HAVING join
+    "q13_order_count_distribution": 2,  # outer-join key + count-of-counts
+    "q20_dominant_part_suppliers": 3,   # agg-vs-agg threshold decorrelation
+    "interval_overlap_join": 2,     # bin key each side, no cartesian
+    "pipeline_contamination": 3,    # shingle index build + overlap agg
+    "pipeline_upsert_corpus": 1,    # one shuffle on the upsert key
+    "pipeline_stratified_sample": 1,  # per-language rank
+    "pipeline_source_quota": 1,     # per-source rank cap
+    # Round-4 additions.
+    "bloom_pruned_join": 2,         # agg + sort exchange; dim broadcasts
+    "pipeline_scrub_boilerplate": 3,  # line df + freq join + reassembly
+    "text_repetition": 0,           # pure per-row array fold
+    "text_bpe_tokens": 0,           # one Arrow pass, merge table is a
+                                    # closure constant, nothing shuffles
+    "pipeline_pack_bpe": 1,         # the BPE pass is shuffle-free, so
+                                    # packing keeps its single
+                                    # stream-key exchange
+    "multimodal_bmp": 0,            # mapInPandas scan, bytes never move
+    "multimodal_video_frames": 0,   # frame explode stays in-partition
+    # Mid-round-4 additions.
+    "q2_min_cost_supplier": 2,      # (part,supp) agg + part window; dims broadcast
+    "q4_order_priority": 1,         # semi-join key; 5-row agg collapses map-side
+    "events_pivot": 2,              # Spark plans pivot as two aggregates
+    "events_resample": 2,           # bucket agg + per-type ffill window
+    "window_rank_kit": 1,           # one WindowExec pass, one key exchange
+    "sql_text_nation_revenue": 1,   # SQL text plans like the DataFrame twin
+    "multimodal_resize": 1,         # ids-only repartition; decode +
+                                    # resize + digest all in-partition
+    "multimodal_wav_resample": 1,   # same shape on the audio axis
+    "multimodal_video_thumbs": 1,   # demux + decode + thumbnail all
+                                    # in-partition after the ids-only
+                                    # repartition
+    "dedup_image_dhash": 2,         # ids-only repartition + the one
+                                    # dup-group window on the hash key
+    "dedup_image_neardup": 3,       # ids repartition + band-key join +
+                                    # the multi-band pair distinct
+    "multimodal_audio_fp": 2,       # the dHash-group shape on the
+                                    # audio axis: ids repartition +
+                                    # dup-group window
+    "dedup_audio_neardup": 3,       # same banding operator as the
+                                    # image pairs, fp columns
+    "dedup_video_neardup": 5,       # ids repartition + cached distinct
+                                    # sig table (plan barrier: decode
+                                    # runs ONCE) + size agg + sig-key
+                                    # join + pair-count agg; size joins
+                                    # broadcast
+    "dedup_video_neardup_dhash": 5,  # the same pair shape over the
+                                    # production per-frame dHash
+                                    # signature (textured fixture)
+    "pipeline_media_prune": 2,      # ids repartition + the CC iterate
+                                    # partitioning (pairs ride the
+                                    # checkpointed hash table; returned
+                                    # plan is the CC tail)
+    "dedup_video_fp_incremental": 0,  # probe materializes via an eager
+                                    # localCheckpoint (fp-probe
+                                    # precedent) — returned plan is the
+                                    # truncated checkpoint scan
+    "streaming_video_sig_index": 0,  # same checkpointed probe tail
+                                    # after the streaming drain
+    "dedup_image_fp_incremental": 0,  # the probe materializes via an
+                                    # eager localCheckpoint (results
+                                    # must not lazily re-read expirable
+                                    # index files), so the returned
+                                    # plan is the truncated checkpoint
+                                    # scan — pinning that nothing is
+                                    # recomputed downstream
+    "dedup_audio_fp_incremental": 0,  # same contract on the audio axis
+    "streaming_fp_index": 0,        # probe returns the checkpoint scan
+                                    # (per-batch work happens in the
+                                    # drained stream)
+    "dedup_image_fp_pruned": 0,     # same checkpoint-truncated probe
+    "text_bm25_pruned": 0,          # retention rewrite runs eagerly;
+                                    # the returned probe is the
+                                    # checkpoint scan (probe shape
+                                    # pinned via text_bm25_probe)
+    "streaming_bm25_index": 0,      # probe returns the checkpoint scan
+                                    # (per-batch work happens in the
+                                    # drained stream)
+    "knn_cosine_ivf_pruned": 0,     # same checkpoint-truncated probe
+                                    # (probe shape pinned via
+                                    # knn_cosine_ivf_probe)
+    "text_classify_nb_incremental": 0,  # returns an eager
+                                    # localCheckpoint (results must not
+                                    # lazily re-read the scratch model
+                                    # artifact) — the classify shape is
+                                    # pinned via text_classify_nb
+    "pipeline_expectations": 2,     # ONE aggregation pass (the exact
+                                    # doc_id distinct adds the Expand
+                                    # exchange); bounds join broadcasts
+    "streaming_expectations": 0,    # verdict table returns as an eager
+                                    # localCheckpoint scan (per-batch
+                                    # suites ran in the drained stream)
+    "text_classify_nb": 13,         # train: (label,term) count + label
+                                    # rollup + vocab count-distinct (2)
+                                    # + doc-count priors (2); score:
+                                    # (doc,term) postings agg + model
+                                    # join + (doc,label) partial agg +
+                                    # dl rollup + completion join +
+                                    # argmax window — TWO corpus
+                                    # tokenizes total (train + score);
+                                    # everything else derives (the
+                                    # per-doc lengths ride the
+                                    # postings, so the completion's
+                                    # docs scan prunes to ids)
+    "dedup_image_clusters": 2,      # final label join + projection; the
+                                    # CC iterations run behind their own
+                                    # checkpoints (convergence-bounded,
+                                    # the dedup_clusters discipline)
+    "multimodal_png": 1,            # ids-only repartition for parallelism;
+                                    # payloads are built after it
+    "multimodal_mp4_frames": 1,     # same ids-only repartition; demux +
+                                    # sample decode stay in-partition
+    "multimodal_mp4_keyframes": 1,  # same; the stss walk, keyframe
+                                    # slice, and decode never shuffle
+                                    # payloads
+    "cdc_merge_into": 5,            # stats agg + source-count window +
+                                    # the full-outer key join + final
+                                    # project; synthetic-insert branch
+                                    # reuses the stats agg
+    "sketch_hll_cube": 10,          # leaf registers (checkpointed,
+                                    # counted once) + 4 bounded lattice
+                                    # rollups/estimates + the exact
+                                    # Expand-cube verification column
+                                    # (round-13: +1 exchange for the
+                                    # (dims, partkey) distinct that now
+                                    # sits BELOW the Expand — it shrinks
+                                    # the Expand's input from raw rows
+                                    # to distinct triples, the §2.5
+                                    # trade this pin deliberately buys)
+                                    # + the null-safe est-exact join
+    "sketch_join_size": 17,         # 2 bounded counter builds (orders
+                                    # sketch reused by both estimates)
+                                    # + 2 inner-product aggs + the
+                                    # exact twins (self-F2 group + FK
+                                    # join) + the round-9 in-plan
+                                    # shape guards: 2 per cms_join_size
+                                    # call, each ONE aggregate over a
+                                    # ≤ depth×width counter table —
+                                    # bounded rows, never data-scaled
+                                    # (the advice fix that makes
+                                    # mismatched sketches fail loudly)
+    "events_cube": 1,               # Expand feeds one aggregation exchange
+    "events_sliding_window": 1,     # the 2x window Expand feeds ONE
+                                    # aggregation exchange (fan-out is
+                                    # map-side, never an extra shuffle)
+    "events_props_variant": 1,      # variant path walk + one agg exchange
+    # Corpus-size-dependent: (doc,term) postings + term df + stats
+    # single-partition + score agg + per-query rank; the query-term
+    # semi join broadcasts (build side kept duplicate-tolerant, so no
+    # dedup exchange).
+    "text_bm25_search": 6,
+    # Round-5 pins (round-4 verdict tasks 3 + 6). The *_indexed gate
+    # entries return eager localCheckpoints (plan truncated at the
+    # probe result), so the probe twins pin the 100 TB-relevant probe
+    # shape instead.
+    "text_bm25_probe": 2,           # bucket-pruned postings scan + score agg
+    "text_bm25_capped": 2,          # same probe shape; the stop-term
+                                    # prune is a bounded checkpointed
+                                    # sidecar filter + broadcast semi
+                                    # join — no extra exchange
+    "knn_cosine_ivf_probe": 3,      # pruned cell scan + rescore + per-query rank
+    "text_hybrid_search": 6,        # BM25 pool (6); rerank joins broadcast
+    # Degree-oriented triangle chain at fixture stats, with the
+    # multi-consumer intermediates (distinct edges, degrees, oriented
+    # edges, adjacency) lazily persisted so no consumer re-derives the
+    # edge build (round-5 verdict task 1: was 32 when every branch
+    # re-planned it from scratch; 12 with the persisted self-join).
+    # Round 7 replaced the per-order self-join edge build with a
+    # grouped collect_set + map-side array pair expansion — one agg
+    # shuffle instead of join machinery (4.81 -> 3.88 s median).
+    "graph_triangle_parts": 9,
+    "graph_pagerank_nations": 1,    # per-round checkpoints truncate; final
+                                    # rank join + window pass
+    "knn_cosine_lsh": 1,            # band explode + per-query rank share key
+    "knn_cosine_pq": 3,             # codes agg + ADC score + per-query rank
+    "cdc_scd2_history": 1,          # one per-key lead window
+    "events_ewma": 1,               # one grouped collect/fold
+    "pipeline_weighted_sample": 0,  # global top-k collapses map-side
+    # The §2 flagship, in-gate forever; pinned after its r5 bench drift
+    # (0.84 → 1.08 s) was triaged as overhead/contention, not plan
+    # creep (round-5 verdict task 6): isolated sf0.1 median 1.77 s with
+    # samples 1.44–4.5 s, and the plan still pays exactly one exchange.
     "ref_q1_plane_bus_wait": 1,
+    # Round-5-new corpus-quality ops.
+    "text_surprisal": 7,            # postings agg + LM agg + totals +
+                                    # postings join + doc agg (tf-aggregated
+                                    # rows through the join, not raw tokens)
+    "text_source_kl": 9,            # (grp,term) agg re-derived per branch:
+                                    # the round-6 persist (9 -> 6 executed
+                                    # exchanges) was A/B'd SLOWER at sf0.1
+                                    # AND at a 10x corpus (round-7 verdict
+                                    # task 3, scripts/kl_persist_ab.py),
+                                    # so the default is persist_counts=
+                                    # False; True restores the 6-exchange
+                                    # plan for corpora where the tokenize
+                                    # dominates
+    # Round-7 cardinality sketches. The sketch side itself is 2
+    # exchanges (bounded register/k-min agg + estimate agg); the rest
+    # is the exact COUNT(DISTINCT) comparison column the query carries
+    # (2-phase distinct). The tiny estimate/exact join broadcasts.
+    "sketch_hll_parts_per_flag": 4,
+    "sketch_kmv_custkeys": 3,
+    # sketch_hll_merged_modes returns an eager localCheckpoint (scratch
+    # sidecar deleted before return), so its live plan is truncated;
+    # the register-build shape is pinned by tests/test_sketch.py::
+    # test_hll_register_shuffle_is_single_bounded_exchange instead.
+    # Counter agg + exact-count agg; the top-10 is TakeOrdered (no
+    # exchange) and the bounded counter table broadcasts to the lookup.
+    "sketch_cms_tokens": 2,
+    # The sketch side is 2 single-row global aggs (one per source);
+    # the other 6 exchanges are the exact-comparison columns the query
+    # carries (two 2-phase distincts, their join, the union distinct).
+    "sketch_kmv_overlap": 8,
+    # Live plan: hit-bin probe window (1) + final agg (1) — the
+    # counter build behind the eager localCheckpoint (1 bounded
+    # exchange, pinned by tests/test_sketch.py::
+    # test_qhist_counter_shuffle_is_single_bounded_exchange) and the
+    # driver-side hit collect are charged at operator-call time.
+    "sketch_qhist_prices": 2,
+    # Hit-bin probe window (single partition BY DESIGN — pass 2 holds
+    # only hit-bin rows, ~2^-s of the corpus) + scalar attach + global
+    # trim agg; the counter build hides behind the operator's eager
+    # localCheckpoint as above.
+    "pipeline_quantile_trim": 3,
+    # Broadcast join (planner picks it at fixture scale: customer is
+    # under the broadcast threshold) + grouped agg; the CMS planning
+    # pass only runs on the shuffle branch.
+    "join_auto_strategy": 2,
+    # One exchange: the exact count of CMS-prefiltered candidates. The
+    # probe joins are broadcasts of the checkpointed counter table and
+    # the counter build is charged at operator-call time — the whole
+    # point: the vocabulary-wide shuffle never happens.
+    "text_heavy_hitters": 1,
+    # Weighted counter agg + bounded CDF window, twice (histogram est
+    # + distinct-length exact walk); the 1-row crossJoin broadcasts.
+    "sketch_qhist_token_mass": 4,
+    # Round-10 pins (round-9 verdict task 3): the three incremental-
+    # dedup gate entries return eager localCheckpoints / persisted-map
+    # reads, so their LIVE plans are truncated (0 exchanges) and the
+    # budget pins that truncation — a change that starts returning an
+    # unbounded live plan trips it. The 100 TB-relevant shapes are
+    # pinned at the OPERATOR level instead:
+    # test_append_components_never_shuffles_or_broadcasts_base (zero
+    # base shuffles, increment-only broadcasts) plus the bucket-
+    # granularity and equivalence tests in tests/test_incremental_dedup.
+    "dedup_clusters_incremental": 0,
+    "streaming_dedup_clusters": 0,
+    "dedup_jaccard_incremental": 0,
+    # Round-10 retention twins: same truncated-return shape (pruned-map
+    # read / probe checkpoint); prune mechanics pinned by the
+    # test_rewrite_* equivalence tests.
+    "dedup_clusters_pruned": 0,
+    "dedup_jaccard_pruned": 0,
+    # Span-level substring dedup: gram-keyed df agg (2: distinct-expand
+    # partial + gram agg), doc window key, covered-position distinct,
+    # strip reassembly agg. The dup-gram → occurrence join and the
+    # covered anti join broadcast at fixture stats; the corpus never
+    # pays more than the gram key + the doc key.
+    "dedup_span_ngrams": 5,
+    # SemDeDup: quantizer trains driver-side (bounded sample, charged
+    # at call time), assignment is the broadcast-centroid Arrow scan
+    # (zero shuffle); the pair stage runs through the cell-scoped
+    # cosine_pairs TILE path (round-13: one numpy matmul per tile +
+    # exact rescore of survivors, replacing the interpreted per-pair
+    # fold cosine). The extra exchanges over the old self-join are all
+    # bounded-or-blocked: the (cell, blk) block agg, the ids-only
+    # block-key distinct, the two tile-payload attach joins, the
+    # candidate rescore attach, and the drop-id distinct — each moves
+    # block rows once or candidate ids, never the corpus per pair.
+    "dedup_semantic_prune": 6,
+    # Deterministic training-shard manifest: the position window and
+    # the manifest agg share the ONE shard-key exchange.
+    "pipeline_training_shards": 1,
+    # Winnowing per-doc fingerprints: pure array HOFs — ZERO shuffles.
+    "text_winnow": 0,
+    # Winnow pairs: (doc,hash) distinct + the df-cap window on the hash
+    # key (which the self-join reuses) + the pair-count agg.
+    "dedup_winnow_pairs": 3,
+    # Truncated-return shape (probe result is localCheckpoint-
+    # materialized at call time, like the retention twins); probe
+    # mechanics pinned by test_winnow_index_append_equals_rebuild.
+    "dedup_winnow_incremental": 0,
+    # Temperature mix: domain count agg, the 1-row global max, the
+    # keep-pass domain agg (+ its partial); the rate table broadcasts.
+    "pipeline_temperature_mix": 4,
+    # DSIR: feature-bucket count agg (≤1024 rows out regardless of
+    # corpus size), the 1-row totals agg, the per-doc decimal sum, and
+    # the k-row rank window; the log-ratio table broadcasts and the
+    # global top-k is TakeOrderedAndProject.
+    "pipeline_dsir_sample": 4,
+    # Truncated-return shape (top-20 scored against the tempdir model
+    # is localCheckpoint-materialized before the dir vanishes, like the
+    # probe/retention twins); frozen-model scoring mechanics pinned by
+    # tests/test_dsir_leakage.py::test_dsir_frozen_model_scores_match_
+    # inline_fit and the unseen-bucket coalesce test.
+    "pipeline_dsir_incremental": 0,
+    # Same truncated-return shape via the streaming sink drain; stream
+    # == one-shot equivalence and no-ledger replay safety pinned by
+    # tests/test_dsir_leakage.py::test_dsir_score_stream_*.
+    "streaming_dsir_scores": 0,
+    # Leakage split: the CC label join back over the node set plus the
+    # two-stage per-split countDistinct accounting; the CC iterations
+    # themselves are charged at operator-call time (checkpointed, the
+    # dedup_clusters convention) and pinned by tests/test_graph.py.
+    "pipeline_leakage_split": 4,
 }
 
 
@@ -62,8 +620,10 @@ def _exchange_count(df) -> int:
 
 
 @pytest.mark.parametrize("name", sorted(SHUFFLE_BUDGETS))
-def test_shuffle_budget_not_exceeded(spark, sf_dir, name):
-    df = all_queries()[name].fn(spark, sf_dir)
+def test_shuffle_budget_not_exceeded(spark, name):
+    from ue_big_data_project_spark.queries import all_queries
+
+    df = all_queries()[name].fn(spark, "/root/testdata/sf0.001")
     got = _exchange_count(df)
     assert got <= SHUFFLE_BUDGETS[name], (
         f"{name} now plans {got} shuffle exchanges "

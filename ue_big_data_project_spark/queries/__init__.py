@@ -1,9 +1,8 @@
 """Query registry.
 
-The reference's transit queries (``reference_registered``) and the core
-operators they are built from (``core``) are exposed here as named
-queries, each paired with the ANSI-SQL oracle DuckDB runs on the same
-data.
+Every implemented operator from SURVEY §2 (plus the LLM-pipeline
+extensions) is exposed here as a named query over the driver's testdata
+tables, paired with the ANSI-SQL oracle DuckDB runs on the same parquet.
 
 Cross-engine determinism conventions (so value-hashes match):
 
@@ -37,9 +36,503 @@ class QuerySpec:
 
 
 def all_queries() -> dict[str, QuerySpec]:
-    from ue_big_data_project_spark.queries import core as _core
+    from ue_big_data_project_spark.queries import events as _events
+    from ue_big_data_project_spark.queries import multimodal as _multimodal
     from ue_big_data_project_spark.queries import (
         reference_registered as _reference,
     )
+    from ue_big_data_project_spark.queries import sketches as _sketches
+    from ue_big_data_project_spark.queries import textops as _textops
+    from ue_big_data_project_spark.queries import tpch as _tpch
 
-    return {**_reference.QUERIES, **_core.QUERIES}
+    out: dict[str, QuerySpec] = {}
+    for mod in (_tpch, _events, _textops, _multimodal, _sketches, _reference):
+        out.update(mod.QUERIES)
+    return out
+
+
+# The driver's CORRECTNESS gate hashes at most 50 queries per round, in
+# registry order. Rounds 1–5 ROTATED this set so every registry query
+# got a driver-green row (114/114 cumulative by round 5, zero fails);
+# rounds 6–7 ran it FROZEN at the round-5 set (round-5 verdict task 2)
+# so the r6 regression and r7 recovery compared identical query sets.
+# ROUND 8 performed the one-time rotation the round-7 verdict mandated
+# (13 round-7-new queries in — all 13 hashed green, CORRECTNESS_r08 —
+# 13 ≥4-round-green entries out to BENCH_EXTRA). ROUND 9 repeated that
+# precedent on the round-8 verdict's mandate (7 round-8-new in, all 7
+# hashed green — CORRECTNESS_r09 — 7 ≥5-round-green out). ROUND 10
+# repeated it on the round-9 verdict's mandate (3 round-9-new
+# incremental-dedup entries in — all 3 hashed green, CORRECTNESS_r10 —
+# 3 multi-round-green entries out). ROUND 11 performed the rotation
+# the round-10 verdict mandated (task 1): the ENTIRE 18-entry
+# never-hashed round-10 pool in — all 18 hashed green,
+# CORRECTNESS_r11, 50/50 zero err — and 18 multi-round-green entries
+# out to BENCH_EXTRA. ROUND 12 repeats that precedent on the round-11
+# verdict's mandate (task 1): the 11 round-11-new entries the driver
+# has never hashed — the audio perceptual fingerprint + its banded
+# near-dup, the video near-dup, the persisted media fp band index
+# (image/audio incremental appends, retention prune, streaming
+# drain), the winnow streaming drain, image near-dup clustering, and
+# the BPE token-accounting pair — swap IN to face the driver's
+# independent sf0.01 hash (the round-11 judge pre-verified all 11 at
+# sf0.01 on a vanilla local[8] session: 11/11 exact match, so the
+# residual risk is box-shaped, not semantic), and 11 multi-round-green
+# entries (the three CDC shapes r9–r11, the sketch join-size planner
+# r9–r11, the jaccard incremental r10–r11, the PNG decode twin
+# r7–r11, triangle counting r7–r11, the MP4 frame demux r8–r11, the
+# EWMA running window r7–r11, weighted sampling r7–r11, the events
+# cube r7–r11 — each with an in-gate family anchor mapped in
+# tests/test_gate.py) swap OUT into BENCH_EXTRA. The bench SET is
+# unchanged at 137 (all 11 in-rotators were already benched — round 11
+# registered them into BENCH_EXTRA post-re-freeze), and
+# bench.py reports the r11-gate-50 and r12-gate-50 dict sums side by
+# side this round so the perf series stays comparable. All rotated-out
+# entries stay in all_queries(), the pytest oracle gate
+# (tests/test_oracle.py, which always hash-checks the FULL registry
+# against DuckDB), and the bench set. ROUND 13 repeats the precedent
+# on the round-12 verdict's mandate (task 2): the 14 round-12-new
+# entries the driver has never hashed swap IN (all 14 pytest-oracle
+# green at both SFs since round 12), and 14 driver-green r11–r12
+# entries swap OUT into BENCH_EXTRA (see _ROTATED_OUT_R13; each with
+# an in-gate family anchor mapped in tests/test_gate.py). The bench
+# SET is unchanged at 151, and bench.py reports the r12-gate-50 and
+# r13-gate-50 dict sums side by side this round so the perf series
+# stays comparable. tests/test_gate.py pins the new set — editing
+# GATE_ORDER again is a test failure, not a rotation.
+#
+# Every registry entry OUTSIDE the gate maps to an in-gate family
+# anchor; the authoritative (test-enforced) mappings live in
+# tests/test_gate.py::PROXIED (near-duplicate shapes / post-freeze
+# additions) and ::ROTATED_OUT (driver-green rotations, rounds 3–12).
+GATE_CAP = 50
+GATE_ORDER = (
+    # -- never driver-hashed: run first (round-12-new; round-13
+    # rotation, round-12 verdict task 2). The round-12 build-round
+    # additions the driver has never hashed — the production
+    # dHash-signature video near-dup, the build_corpus media-prune
+    # stage, the persisted video signature index (incremental probe +
+    # streaming drain), the BM25 lifecycle closers (retention prune,
+    # stop-term cap, streaming drain), IVF retention, the multinomial
+    # NB source classifier (in-memory + persisted-model increment),
+    # Deequ-style constraint verification (batch + streaming drain),
+    # and sliding/hopping windows (batch + streamed twins) — face the
+    # driver's independent sf0.01 hash for the first time. ---------------
+    "dedup_video_neardup_dhash",
+    "pipeline_media_prune",
+    "dedup_video_fp_incremental",
+    "streaming_video_sig_index",
+    "text_bm25_pruned",
+    "text_bm25_capped",
+    "streaming_bm25_index",
+    "knn_cosine_ivf_pruned",
+    "text_classify_nb",
+    "text_classify_nb_incremental",
+    "pipeline_expectations",
+    "events_sliding_window",
+    "streaming_sliding_window",
+    "streaming_expectations",
+    # -- first hashed (green) in round 12 --------------------------------
+    "multimodal_audio_fp",
+    "dedup_audio_neardup",
+    "dedup_audio_fp_incremental",
+    "dedup_video_neardup",
+    "dedup_image_fp_incremental",
+    "dedup_image_fp_pruned",
+    "streaming_fp_index",
+    "streaming_winnow_index",
+    "dedup_image_clusters",
+    "text_bpe_tokens",
+    "pipeline_pack_bpe",
+    # -- first hashed (green) in round 11 --------------------------------
+    # (14 of the 18 round-11-first-hashed entries rotated out in ROUND
+    # 13 — see _ROTATED_OUT_R13 below. These four stay in-gate
+    # deliberately: dedup_jaccard_pruned and dedup_semantic_prune are
+    # round-13 optimization targets whose driver-visible series must
+    # not break mid-change; pipeline_temperature_mix anchors the
+    # deterministic md5-draw sampling family (4 proxied dependents);
+    # multimodal_video_thumbs anchors the MP4 demux∘decode∘resize
+    # family (4 proxied dependents) and is the suite's one
+    # genuinely compute-scaling entry.)
+    "dedup_jaccard_pruned",
+    "dedup_semantic_prune",
+    "pipeline_temperature_mix",
+    "multimodal_video_thumbs",
+    # -- first hashed (green) in round 10 --------------------------------
+    # (dedup_jaccard_incremental rotated out in ROUND 12 — see
+    # _ROTATED_OUT_R12 below.)
+    "dedup_clusters_incremental",
+    "streaming_dedup_clusters",
+    # -- first hashed (green) in round 9 ---------------------------------
+    # (multimodal_mp4_keyframes rotated out in ROUND 11; cdc_merge_into,
+    # streaming_cdc_merge, and sketch_join_size rotated out in ROUND 12
+    # — see _ROTATED_OUT_R11/_R12 below. The bucketed streaming MERGE
+    # stays as the CDC family's in-gate anchor.)
+    "streaming_cdc_merge_bucketed",
+    "sketch_hll_cube",
+    "streaming_cms_tokens",
+    # -- first hashed (green) in round 8 ---------------------------------
+    # (six sketch twins, the streaming HLL drain, and the CMS heavy
+    # hitters rotated out in ROUND 11; multimodal_mp4_frames rotated
+    # out in ROUND 12, anchored on the in-gate video-thumbs demux+decode
+    # composite — see _ROTATED_OUT_R11/_R12 below.)
+    "sketch_qhist_prices",
+    "text_bm25_appended",
+    "pipeline_quantile_trim",
+    "join_auto_strategy",
+    # -- first hashed (green) in round 7 ---------------------------------
+    # (the bm25 search/indexed/probe/hybrid shapes, pagerank, the
+    # appended-IVF composite, the variant parse twin, and the
+    # surprisal/KL text metrics rotated out in ROUND 11;
+    # graph_triangle_parts, cdc_scd2_history, multimodal_png,
+    # events_cube, events_ewma, and pipeline_weighted_sample rotated
+    # out in ROUND 12 — see _ROTATED_OUT_R11/_R12 below.)
+    "window_rank_kit",
+    "multimodal_jpeg",
+    "knn_cosine_ivf_probe",
+    # -- first hashed (green) in round 4 ---------------------------------
+    "text_repetition",
+    "bloom_pruned_join",
+    "streaming_asof_join",
+    "q2_min_cost_supplier",
+    # -- first hashed (green) in round 2 ---------------------------------
+    "ref_q1_plane_bus_wait",
+    "scan_filter_agg_kit",
+    # -- long-green anchors (distinct operator shapes kept in-gate) ------
+    "streaming_sessionize",
+    "streaming_tumbling_window",
+    "dedup_clusters",
+)
+
+# The round-12 gate set, kept verbatim so bench.py can report the
+# old-gate-50 sum NEXT TO the new-gate-50 sum this round — the perf
+# series (r12-set sum 152.6 s driver at sentinel drift 4.16 in
+# BENCH_r12.json) stays directly comparable across the rotation
+# (round-12 verdict task 2, following the r11→r12 precedent: "record
+# both gate-50 sums"). Every entry is still benched (the bench set is
+# unchanged this round), so the sum is computed from live medians, not
+# replayed. (The round-11 set's crossover sums were recorded in
+# BENCH_r12.json — gate50_r11_sum 142.8 s driver vs r11's 165.1 — so
+# the r11-set series is already closed.)
+GATE_ORDER_R12 = (
+    "multimodal_audio_fp",
+    "dedup_audio_neardup",
+    "dedup_audio_fp_incremental",
+    "dedup_video_neardup",
+    "dedup_image_fp_incremental",
+    "dedup_image_fp_pruned",
+    "streaming_fp_index",
+    "streaming_winnow_index",
+    "dedup_image_clusters",
+    "text_bpe_tokens",
+    "pipeline_pack_bpe",
+    "dedup_clusters_pruned",
+    "dedup_jaccard_pruned",
+    "dedup_span_ngrams",
+    "dedup_semantic_prune",
+    "pipeline_training_shards",
+    "text_winnow",
+    "dedup_winnow_pairs",
+    "dedup_winnow_incremental",
+    "pipeline_temperature_mix",
+    "pipeline_dsir_sample",
+    "pipeline_dsir_incremental",
+    "streaming_dsir_scores",
+    "pipeline_leakage_split",
+    "multimodal_resize",
+    "multimodal_wav_resample",
+    "multimodal_video_thumbs",
+    "dedup_image_dhash",
+    "dedup_image_neardup",
+    "dedup_clusters_incremental",
+    "streaming_dedup_clusters",
+    "streaming_cdc_merge_bucketed",
+    "sketch_hll_cube",
+    "streaming_cms_tokens",
+    "sketch_qhist_prices",
+    "text_bm25_appended",
+    "pipeline_quantile_trim",
+    "join_auto_strategy",
+    "window_rank_kit",
+    "multimodal_jpeg",
+    "knn_cosine_ivf_probe",
+    "text_repetition",
+    "bloom_pruned_join",
+    "streaming_asof_join",
+    "q2_min_cost_supplier",
+    "ref_q1_plane_bus_wait",
+    "scan_filter_agg_kit",
+    "streaming_sessionize",
+    "streaming_tumbling_window",
+    "dedup_clusters",
+)
+
+# Rotated out of the gate in ROUND 8 (each ≥4 consecutive driver-green
+# rounds) to hand their slots to the 13 round-7-new entries above — the
+# one-time rotation the round-7 verdict mandated. All stay benched every
+# round (appended to BENCH_EXTRA below, so the bench SET is identical to
+# round 7's) and hash-checked by the full pytest oracle gate; their
+# operator families keep in-gate anchors (tests/test_gate.py maps each).
+_ROTATED_OUT_R8 = (
+    "q8_market_share",
+    "q10_returned_revenue",
+    "q13_order_count_distribution",
+    "q18_large_orders",
+    "semi_anti_join_kit",
+    "text_nlp_kit",
+    "knn_cosine_lsh",
+    "dedup_ngram_jaccard",
+    "dedup_incremental",
+    "asof_first_ship",
+    "window_top1_per_order",
+    "pipeline_pack_sequences",
+    "pipeline_stratified_sample",
+)
+
+# Rotated out of the gate in ROUND 9 (each ≥5 consecutive driver-green
+# rounds: r4–r8, or r3–r8 for the interval join) to hand their slots to
+# the 7 round-8-new entries — the rotation the round-8 verdict mandated
+# (task 1), following the round-8 precedent exactly. All stay benched
+# every round (appended to BENCH_EXTRA below, so the bench SET is
+# identical to round 8's) and hash-checked by the full pytest oracle
+# gate; their operator families keep in-gate anchors (tests/test_gate.py
+# maps each).
+_ROTATED_OUT_R9 = (
+    "multimodal_wav",
+    "multimodal_bmp",
+    "multimodal_video_frames",
+    "pipeline_profile",
+    "events_resample",
+    "pipeline_scrub_boilerplate",
+    "streaming_interval_join",
+)
+
+# Rotated out of the gate in ROUND 10 (streaming_incremental_rollup
+# driver-green r3–r9, the other two r4–r9) to hand their slots to the 3
+# round-9-new incremental-dedup entries — the rotation the round-9
+# verdict mandated (task 1), following the r8/r9 precedent exactly. All
+# stay benched every round (appended to BENCH_EXTRA below, so the bench
+# SET is identical to round 9's) and hash-checked by the full pytest
+# oracle gate; their operator families keep in-gate anchors
+# (tests/test_gate.py maps each: the windowed-rollup family anchors on
+# streaming_tumbling_window, the IVF family on knn_cosine_ivf_probe /
+# knn_cosine_ivf_appended, the grouped-agg family on
+# scan_filter_agg_kit).
+_ROTATED_OUT_R10 = (
+    "streaming_incremental_rollup",
+    "knn_cosine_ivf_indexed",
+    "sql_text_nation_revenue",
+)
+
+# Rotated out of the gate in ROUND 11 (the bm25/surprisal/KL/variant/
+# pagerank/appended-IVF cohort driver-green r7–r10, the sketch cohort
+# r8–r10, the keyframe demux twin r9–r10) to hand their slots to the
+# 18-entry never-hashed round-10 pool — the rotation the round-10
+# verdict mandated (task 1), following the r8/r9/r10 precedent. All
+# stay benched every round (appended to BENCH_EXTRA below) and
+# hash-checked by the full pytest oracle gate; their operator families
+# keep in-gate anchors (tests/test_gate.py maps each: the BM25 shapes
+# anchor on text_bm25_appended, the sketch twins on sketch_hll_cube /
+# streaming_cms_tokens / sketch_qhist_prices, the IVF composite on
+# knn_cosine_ivf_probe, the text metrics on text_repetition, the
+# keyframe demux on multimodal_mp4_frames).
+# Rotated out of the gate in ROUND 12 (the CDC trio and the sketch
+# join-size planner driver-green r9–r11, the jaccard incremental
+# r10–r11, the rest r7/r8–r11) to hand their slots to the 11-entry
+# never-hashed round-11 pool — the rotation the round-11 verdict
+# mandated (task 1), following the r8–r11 precedent. All stay benched
+# every round (appended to BENCH_EXTRA below, so the bench SET is
+# identical to round 11's) and hash-checked by the full pytest oracle
+# gate; their operator families keep in-gate anchors
+# (tests/test_gate.py maps each: the CDC shapes anchor on the in-gate
+# bucketed streaming MERGE, the sketch planner on join_auto_strategy
+# (which consumes the same CMS/KMV estimates), the jaccard incremental
+# on the winnow incremental (the same persisted-band-index append
+# contract), PNG decode on the JPEG twin, triangle counting on the
+# in-gate distributed-CC closer, the MP4 frame demux on the
+# video-thumbs demux∘decode∘resize composite, EWMA and the running
+# windows on the in-gate BPE-budgeted packer, weighted sampling on the
+# temperature mix (same deterministic md5 draw), and the events cube
+# on the HLL cube (same grouping-sets Expand shape)).
+_ROTATED_OUT_R12 = (
+    "cdc_merge_into",
+    "streaming_cdc_merge",
+    "cdc_scd2_history",
+    "sketch_join_size",
+    "dedup_jaccard_incremental",
+    "multimodal_png",
+    "graph_triangle_parts",
+    "multimodal_mp4_frames",
+    "events_ewma",
+    "pipeline_weighted_sample",
+    "events_cube",
+)
+
+# Rotated out of the gate in ROUND 13 (all driver-green r11–r12,
+# first hashed in round 11) to hand their slots to the 14-entry
+# never-hashed round-12 pool — the rotation the round-12 verdict
+# mandated (task 2), following the r8–r12 precedent. All stay benched
+# every round (appended to BENCH_EXTRA below, so the bench SET is
+# identical to round 12's) and hash-checked by the full pytest oracle
+# gate; their operator families keep in-gate anchors
+# (tests/test_gate.py maps each: the pruned/clique CC shapes anchor on
+# dedup_clusters, span n-grams on the in-gate jaccard-pruned PPJoin
+# twin, the winnow fingerprint family on its in-gate streaming drain,
+# the DSIR sampling draw on the in-gate temperature mix and its
+# frozen-model increment/scoring on the in-gate NB increment twin
+# (the same persisted-model O(increment) contract), the DSIR scoring
+# drain on the in-gate fp-index drain shape, leakage split on the
+# in-gate CC closer, resize on the in-gate thumbs composite (whose
+# decode∘resize superset it is), wav resample on the in-gate audio
+# fingerprint decode family, the image dHash pair on the in-gate
+# image clustering closure over the same hash → band-pair machinery,
+# and the training shards packer on the in-gate BPE-budgeted packer).
+_ROTATED_OUT_R13 = (
+    "dedup_clusters_pruned",
+    "dedup_span_ngrams",
+    "pipeline_training_shards",
+    "text_winnow",
+    "dedup_winnow_pairs",
+    "dedup_winnow_incremental",
+    "pipeline_dsir_sample",
+    "pipeline_dsir_incremental",
+    "streaming_dsir_scores",
+    "pipeline_leakage_split",
+    "multimodal_resize",
+    "multimodal_wav_resample",
+    "dedup_image_dhash",
+    "dedup_image_neardup",
+)
+
+_ROTATED_OUT_R11 = (
+    "text_bm25_search",
+    "text_bm25_indexed",
+    "text_bm25_probe",
+    "text_hybrid_search",
+    "text_surprisal",
+    "text_source_kl",
+    "text_heavy_hitters",
+    "events_props_variant",
+    "graph_pagerank_nations",
+    "knn_cosine_ivf_appended",
+    "sketch_hll_parts_per_flag",
+    "sketch_kmv_custkeys",
+    "sketch_kmv_overlap",
+    "sketch_cms_tokens",
+    "sketch_hll_merged_modes",
+    "sketch_qhist_token_mass",
+    "streaming_hll_distinct",
+    "multimodal_mp4_keyframes",
+)
+
+# Rotated out of the gate in earlier rounds (driver-green) — but still
+# BENCHED every round via bench_queries(), so per-query deltas stay
+# directly comparable across rounds even as the correctness gate
+# rotates (the round-3 verdict asked for a stable bench set).
+BENCH_EXTRA = (
+    "q1_pricing_summary",
+    "events_rollup",
+    "theta_join_next_error",
+    "pipeline_split",
+    "pipeline_corpus_stats",
+    "dedup_exact",
+    "knn_cosine_ivf",
+    "q3_shipping_priority",
+    "q5_region_revenue",
+    "pipeline_prep_documents",
+    "salted_hot_key_agg",
+    # Rotated out mid-round-4 (driver-green r2+r3) to hand slots to the
+    # new q2/q4 and the first gating of pipeline_scrub_boilerplate; the
+    # real-codec trio and the lsh/pq/ivf knn entries cover the families.
+    "multimodal_features",
+    "multimodal_frames",
+    "knn_cosine_brute",
+    "q9_product_profit",
+    "interval_overlap_join",
+    "q20_dominant_part_suppliers",
+    # Rotated out in round 5 (driver-green >= 2 rounds each) to hand
+    # slots to the 13 never-hashed round-4 entries now leading the gate.
+    "knn_cosine_pq",
+    "pipeline_chunk_documents",
+    "q11_important_parts",
+    "pipeline_contamination",
+    "pipeline_upsert_corpus",
+    "pipeline_source_quota",
+    "ref_q2_affluence",
+    "ref_q3_bus_positions",
+    "ref_q4_bike_occupancy",
+    "ref_wind_rolling_avg",
+    "dedup_minhash_lsh",
+    "dedup_simhash_pairs",
+    "dedup_embedding_cosine",
+    # Rotated out mid-round-5 (driver-green r4, near-duplicate shapes
+    # whose family kits stay in-gate) to hand slots to the 5
+    # round-5-new entries, so the ENTIRE registry is driver-hashed this
+    # round and the gate can freeze.
+    "text_langid",
+    "text_tokens",
+    "text_fingerprint",
+    "events_pivot",
+    "q4_order_priority",
+    # Rotated out in ROUND 8 (see _ROTATED_OUT_R8 above): the 13
+    # multi-round-green entries whose gate slots went to the round-7-new
+    # queries. Benched every round, so the bench set is unchanged.
+    *_ROTATED_OUT_R8,
+    # Rotated out in ROUND 9 (see _ROTATED_OUT_R9 above): the 7
+    # multi-round-green entries whose gate slots went to the 7
+    # round-8-new queries (which moved OUT of this tuple and INTO the
+    # gate — the bench set is unchanged).
+    *_ROTATED_OUT_R9,
+    # Rotated out in ROUND 10 (see _ROTATED_OUT_R10 above): the 3
+    # multi-round-green entries whose gate slots went to the 3
+    # round-9-new incremental-dedup queries (which moved OUT of this
+    # tuple and INTO the gate — the bench set is unchanged).
+    *_ROTATED_OUT_R10,
+    # Rotated out in ROUND 11 (see _ROTATED_OUT_R11 above): the 18
+    # multi-round-green entries whose gate slots went to the 18-entry
+    # never-hashed round-10 pool (the 9 of those that sat in this tuple
+    # moved INTO the gate; the other 9 — the DSIR family, the leakage
+    # split, resize/resample, video thumbnails, and the image dHash
+    # pair — were registry-only before, so the bench set grows 117 →
+    # 126 this round).
+    *_ROTATED_OUT_R11,
+    # Rotated out in ROUND 12 (see _ROTATED_OUT_R12 above): the 11
+    # multi-round-green entries whose gate slots went to the 11-entry
+    # never-hashed round-11 pool (the audio fp pair, video near-dup,
+    # the persisted media fp band index family, the winnow streaming
+    # drain, image clustering, and the BPE pair — all of which moved
+    # OUT of this tuple and INTO the gate, so the bench set is
+    # unchanged at 137).
+    *_ROTATED_OUT_R12,
+    # Rotated out in ROUND 13 (see _ROTATED_OUT_R13 above): the 14
+    # driver-green r11–r12 entries whose gate slots went to the
+    # 14-entry never-hashed round-12 pool (the round-12-new entries
+    # that sat at the tail of this tuple moved OUT of it and INTO the
+    # gate — the bench set is unchanged at 151).
+    *_ROTATED_OUT_R13,
+)
+
+# BENCH_EXTRA must stay disjoint from the gate and duplicate-free, or
+# the bench-set size reported in docs drifts from the real entry count
+# (round-4 advice).
+assert len(set(BENCH_EXTRA)) == len(BENCH_EXTRA), "duplicate in BENCH_EXTRA"
+assert not set(BENCH_EXTRA) & set(GATE_ORDER), "BENCH_EXTRA overlaps gate"
+
+
+def gate_queries() -> dict[str, QuerySpec]:
+    """The ≤50-entry, ordered query set handed to the driver's
+    CORRECTNESS gate (``__spark_entry__.queries()``); a strict subset of
+    :func:`all_queries`, which the local pytest gate runs in full."""
+    registry = all_queries()
+    assert len(GATE_ORDER) <= GATE_CAP, (
+        f"gate has {len(GATE_ORDER)} entries; the driver hashes only "
+        f"{GATE_CAP} per round"
+    )
+    return {name: registry[name] for name in GATE_ORDER}
+
+
+def bench_queries() -> dict[str, QuerySpec]:
+    """The bench.py set: the gate plus the round-4-rotated-out entries,
+    so per-query timings stay comparable across rounds even when the
+    correctness gate rotates."""
+    registry = all_queries()
+    return {name: registry[name] for name in GATE_ORDER + BENCH_EXTRA}
