@@ -1,12 +1,12 @@
-"""Equivalence of the three as-of join physical strategies (SURVEY §2.5):
-same results, different plans — grouped/bucketed are the scale paths,
-broadcast_rank is the reference's formulation."""
+"""``asof_join`` (one sort-and-fill plan) against the reference's own
+formulation, theta join + rank 1 (``tests/asof_oracle.py``), SURVEY §2.5."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
 
+from tests.asof_oracle import asof_oracle
 from ue_big_data_project_spark.operators.asof import asof_join
 
 
@@ -39,83 +39,43 @@ def collect_asof(df):
     }
 
 
+def both(left, right, **kwargs):
+    """(asof_join, oracle) results for the same arguments."""
+    kwargs = dict(left_ts="lts", right_ts="rts", left_keys=["id"], **kwargs)
+    return (
+        collect_asof(asof_join(left, right, **kwargs)),
+        collect_asof(asof_oracle(left, right, **kwargs)),
+    )
+
+
 def test_forward_strategies_agree(spark, sides):
     left, right = sides
-    results = {}
-    for strategy, kwargs in [
-        ("broadcast_rank", {}),
-        ("bucketed", {"tolerance_seconds": 3600}),
-    ]:
-        out = asof_join(
-            left,
-            right.drop("grp"),
-            left_ts="lts",
-            right_ts="rts",
-            left_keys=["id"],
-            right_cols=["rts", "payload"],
-            strategy=strategy,
-            **kwargs,
+    for kwargs in [{}, {"tolerance_seconds": 3600}]:
+        got, want = both(
+            left, right.drop("grp"), right_cols=["rts", "payload"], **kwargs
         )
-        results[strategy] = collect_asof(out)
-    assert results["broadcast_rank"] == results["bucketed"]
+        assert got == want, kwargs
     # id1 matches the equal timestamp (non-strict ≥).
-    assert results["broadcast_rank"][1] == "2024-01-01T10:00:00"
-    assert results["broadcast_rank"][2] == "2024-01-01T10:05:00"
+    assert got[1] == "2024-01-01T10:00:00"
+    assert got[2] == "2024-01-01T10:05:00"
 
 
-def test_sorted_array_agrees_with_reference_shape(spark, sides):
+def test_strict_and_backward_match_oracle(spark, sides):
     left, right = sides
-    results = {}
-    for strategy in [
-        "broadcast_rank", "broadcast_agg", "sorted_array", "bucket_minima",
+    for kwargs in [
+        {"strict": True},
+        {"direction": "backward"},
+        {"direction": "backward", "strict": True},
     ]:
-        out = asof_join(
-            left,
-            right.drop("grp"),
-            left_ts="lts",
-            right_ts="rts",
-            left_keys=["id"],
-            right_cols=["rts"],
-            strategy=strategy,
-        )
-        results[strategy] = collect_asof(out)
-    assert results["sorted_array"] == results["broadcast_rank"]
-    assert results["sorted_array"] == results["broadcast_agg"]
-    assert results["bucket_minima"] == results["broadcast_rank"]
-
-
-@pytest.mark.parametrize("strategy", ["sorted_array", "bucket_minima"])
-def test_ts_only_strategies_strict_and_backward(spark, sides, strategy):
-    left, right = sides
-    for kwargs in [{"strict": True}, {"direction": "backward"}]:
-        got = asof_join(
-            left, right.drop("grp"),
-            left_ts="lts", right_ts="rts", left_keys=["id"],
-            right_cols=["rts"], strategy=strategy, **kwargs,
-        )
-        ref = asof_join(
-            left, right.drop("grp"),
-            left_ts="lts", right_ts="rts", left_keys=["id"],
-            right_cols=["rts"], strategy="broadcast_rank", **kwargs,
-        )
-        assert collect_asof(got) == collect_asof(ref), kwargs
+        got, want = both(left, right.drop("grp"), right_cols=["rts"], **kwargs)
+        assert got == want, kwargs
 
 
 def test_grouped_respects_by_keys(spark, sides):
     left, right = sides
-    out = asof_join(
-        left,
-        right,
-        left_ts="lts",
-        right_ts="rts",
-        left_keys=["id"],
-        by=["grp"],
-        right_cols=["rts", "payload"],
-        strategy="grouped",
-    )
-    got = collect_asof(out)
+    got, want = both(left, right, by=["grp"], right_cols=["rts", "payload"])
     # g2 rows only match g2 buses; id4 has no forward match → dropped.
-    assert got == {
+    assert got == want == {
         1: "2024-01-01T10:00:00",
         2: "2024-01-01T10:05:00",
         3: "2024-01-01T10:10:00",
@@ -124,79 +84,44 @@ def test_grouped_respects_by_keys(spark, sides):
 
 def test_default_right_cols_with_by_keys(spark, sides):
     """Regression: with right_cols=None (all right columns) + by=, the
-    by column exists on both join sides; the packed struct must resolve
-    against the right side, not raise AMBIGUOUS_REFERENCE."""
+    by column exists on both sides; the packed struct must come from the
+    right side, not raise AMBIGUOUS_REFERENCE."""
     left, right = sides
-    for strategy, kwargs in [
-        ("grouped", {}),
-        ("broadcast_rank", {}),
-        ("broadcast_agg", {}),
-    ]:
-        out = asof_join(
-            left,
-            right,
-            left_ts="lts",
-            right_ts="rts",
-            left_keys=["id"],
-            by=["grp"],
-            strategy=strategy,
-            **kwargs,
-        )
+    kwargs = dict(left_ts="lts", right_ts="rts", left_keys=["id"], by=["grp"])
+    for fn in (asof_join, asof_oracle):
+        out = fn(left, right, **kwargs)
         got = {r["id"]: (r["asof"]["rts"].isoformat(), r["asof"]["grp"])
                for r in out.collect()}
         assert got == {
             1: ("2024-01-01T10:00:00", "g1"),
             2: ("2024-01-01T10:05:00", "g1"),
             3: ("2024-01-01T10:10:00", "g2"),
-        }, strategy
+        }, fn.__name__
 
 
 def test_backward_direction(spark, sides):
     left, right = sides
-    out = asof_join(
-        left,
-        right.drop("grp"),
-        left_ts="lts",
-        right_ts="rts",
-        left_keys=["id"],
-        right_cols=["rts"],
-        direction="backward",
-        strategy="broadcast_rank",
+    got, want = both(
+        left, right.drop("grp"), right_cols=["rts"], direction="backward"
     )
-    got = collect_asof(out)
+    assert got == want
     assert got[2] == "2024-01-01T10:00:00"  # nearest at-or-before
     assert got[4] == "2024-01-01T10:59:59"
 
 
 def test_bucketed_tolerance_bounds(spark, sides):
     left, right = sides
-    out = asof_join(
-        left,
-        right.drop("grp"),
-        left_ts="lts",
-        right_ts="rts",
-        left_keys=["id"],
-        right_cols=["rts"],
-        strategy="bucketed",
-        tolerance_seconds=60,
+    got, want = both(
+        left, right.drop("grp"), right_cols=["rts"], tolerance_seconds=60
     )
-    got = collect_asof(out)
     # Only matches within 60 s qualify: id1 exact, id2→10:05 (30 s),
     # id3→10:10 (1 s); id4 has nothing within an hour.
+    assert got == want
     assert set(got) == {1, 2, 3}
 
 
 def test_strict_excludes_equal_timestamps(spark, sides):
     left, right = sides
-    out = asof_join(
-        left,
-        right.drop("grp"),
-        left_ts="lts",
-        right_ts="rts",
-        left_keys=["id"],
-        right_cols=["rts"],
-        strategy="broadcast_rank",
-        strict=True,
-    )
-    got = collect_asof(out)
+    got, want = both(left, right.drop("grp"), right_cols=["rts"], strict=True)
+    assert got == want
     assert got[1] == "2024-01-01T10:05:00"  # equal ts excluded

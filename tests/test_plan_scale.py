@@ -140,6 +140,17 @@ def test_interval_join_is_hash_not_nested_loop(no_auto_broadcast):
     assert "CartesianProduct" not in plan, plan
 
 
+def test_q1_asof_plans_no_nested_loop_join(spark):
+    """Q1's as-of join is a sort-and-fill window over the union of both
+    sides: no (plane, bus) pair is built, so no nested-loop join."""
+    from ue_big_data_project_spark.queries import all_queries
+
+    df = all_queries()["ref_q1_plane_bus_wait"].fn(spark, SF)
+    plan = plan_of(df)
+    assert "NestedLoopJoin" not in plan, plan
+    assert "CartesianProduct" not in plan, plan
+
+
 def test_pack_sequences_single_shuffle(spark):
     """Sequence packing must shuffle exactly once (on the packing-stream
     key); the window running sum rides the same partitioning."""

@@ -1,5 +1,5 @@
 """Property-based checks (hypothesis): randomized inputs must keep the
-as-of strategy family in agreement and sessionization internally
+as-of join equal to its theta-join oracle and sessionization internally
 consistent. Small example counts — each example runs Spark jobs."""
 
 from __future__ import annotations
@@ -9,49 +9,63 @@ import datetime as dt
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
+from tests.asof_oracle import asof_oracle
 from ue_big_data_project_spark.operators.asof import asof_join
 from ue_big_data_project_spark.operators.sessions import sessionize_batch
 
 EPOCH = dt.datetime(2024, 1, 1)
 
-ts_strategy = st.integers(min_value=0, max_value=200_000).map(
-    lambda s: EPOCH + dt.timedelta(seconds=s)
+# Wide seconds, or a 30 s grid so equal and repeated timestamps and the
+# 60 s tolerance edge come up often; None is a null timestamp or key.
+ts_strategy = st.one_of(
+    st.integers(min_value=0, max_value=200_000),
+    st.integers(min_value=0, max_value=40).map(lambda m: 30 * m),
+).map(lambda s: EPOCH + dt.timedelta(seconds=s))
+asof_rows = st.lists(
+    st.tuples(st.none() | ts_strategy, st.sampled_from([None, "a", "b"])),
+    min_size=1,
+    max_size=12,
 )
-
-lefts = st.lists(ts_strategy, min_size=1, max_size=12, unique=True)
-rights = st.lists(ts_strategy, min_size=1, max_size=12)
 
 
 @settings(
-    max_examples=8,
+    max_examples=10,
     deadline=None,
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
-@given(lts=lefts, rts=rights, strict=st.booleans(), fwd=st.booleans())
-def test_asof_strategies_agree_on_random_data(spark, lts, rts, strict, fwd):
+@given(
+    lrows=asof_rows,
+    rrows=asof_rows,
+    strict=st.booleans(),
+    fwd=st.booleans(),
+    use_by=st.booleans(),
+    tol=st.sampled_from([None, 60]),
+)
+def test_asof_strategies_agree_on_random_data(
+    spark, lrows, rrows, strict, fwd, use_by, tol
+):
     left = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(lts)], "id int, lts timestamp"
+        [(i, t, k) for i, (t, k) in enumerate(lrows)],
+        "id int, lts timestamp, k string",
     )
-    right = spark.createDataFrame([(t,) for t in rts], "rts timestamp")
+    right = spark.createDataFrame(rrows, "rts timestamp, k string")
     kwargs = dict(
         left_ts="lts",
         right_ts="rts",
         left_keys=["id"],
+        by=["k"] if use_by else None,
+        tolerance_seconds=tol,
         right_cols=["rts"],
         strict=strict,
         direction="forward" if fwd else "backward",
     )
-    out = {}
-    # sorted_array rejoined the family in round 3: the searchsorted
-    # pandas-UDF rewrite removed the outer-reference HOF lambda whose
-    # transient AQE rebinding error had kept it out.
-    for strategy in ["broadcast_rank", "bucket_minima", "sorted_array"]:
-        df = asof_join(left, right, strategy=strategy, **kwargs)
-        out[strategy] = sorted(
-            (r["id"], r["asof"]["rts"]) for r in df.collect()
-        )
-    assert out["bucket_minima"] == out["broadcast_rank"]
-    assert out["sorted_array"] == out["broadcast_rank"]
+
+    def rows(df):
+        return sorted((r["id"], r["asof"]["rts"]) for r in df.collect())
+
+    assert rows(asof_join(left, right, **kwargs)) == rows(
+        asof_oracle(left, right, **kwargs)
+    )
 
 
 words = st.sampled_from(

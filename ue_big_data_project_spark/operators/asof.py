@@ -1,50 +1,27 @@
-"""As-of / range join.
+"""As-of join.
 
 The reference's only join is a theta (non-equi) inner join followed by a
 ``row_number`` window and ``rank == 1`` filter — "first bus at-or-after
 each plane arrival" (reference: src/plane_naolib_consumer.py:91-105).
 With no equi key Spark executes that as a BroadcastNestedLoopJoin, which
-is O(n·m): fine for one day of flights, fatal at 100 TB.
+builds every (left, right) pair that passes the theta predicate before
+ranking them: for one day of Q1 that is ≈ 862 k pairs for ≈ 9.6 k rows.
 
-This module keeps the reference semantics but offers three physical
-strategies, selected by data shape:
+``asof_join`` keeps the reference semantics with one plan and no join:
+both sides are unioned on one time column, sorted, and each left row
+takes the last right row seen so far (a running ``last(ignorenulls)``
+window). ``tests/test_asof.py`` checks it against the reference
+formulation.
 
-- ``grouped``        — equi keys available (``by=``): shuffle hash/sort-merge
-                       join on the keys + theta predicate, then one
-                       ``min_by``/``max_by`` aggregation. Scales linearly;
-                       the default whenever ``by`` is given.
-- ``bucketed``       — no equi key but a ``tolerance`` bound: both sides are
-                       bucketed on ``floor(epoch / tolerance)`` and each right
-                       row is duplicated into the two buckets it can serve,
-                       turning the range join into an equi join. Scales to
-                       arbitrarily large sides; shuffle is on bucket ids.
-- ``broadcast_rank`` — the reference's own formulation (theta join +
-                       window rank), with an explicit ``broadcast()`` of the
-                       right side. Correct for small right sides only.
-
-All three are equivalence-tested against each other in
-``tests/test_asof.py``.
+``asof_join_stream`` is the streaming twin (custom stateful operator).
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-
-def _best_struct(
-    rdf: DataFrame, right_cols: list[str], right_ts: str, direction: str
-) -> Column:
-    # Resolve every field against the RIGHT side explicitly: with the
-    # default right_cols (all right columns) plus by= keys, the key
-    # columns exist on both sides of the join and unqualified F.col
-    # would raise AMBIGUOUS_REFERENCE.
-    packed = F.struct(*[rdf[c].alias(c) for c in right_cols])
-    if direction == "forward":
-        return F.min_by(packed, rdf[right_ts])
-    return F.max_by(packed, rdf[right_ts])
 
 
 def asof_join(
@@ -58,269 +35,71 @@ def asof_join(
     tolerance_seconds: int | None = None,
     direction: str = "forward",
     right_cols: list[str] | None = None,
-    strategy: str = "auto",
     strict: bool = False,
 ) -> DataFrame:
     """For each left row, the nearest right row at-or-after (``forward``)
-    or at-or-before (``backward``) its timestamp.
+    or at-or-before (``backward``) its timestamp, with equal ``by`` keys.
+    ``strict`` excludes equal timestamps.
 
     ``left_keys`` must uniquely identify left rows (they become the output
     grain). ``left_ts`` and ``right_ts`` must be distinct column names.
     Output = ``left_keys`` + ``left_ts`` [+ ``by``] + an ``asof`` struct
-    holding the matched right row. Unmatched left rows are dropped,
-    matching the reference's inner-join semantics
-    (src/plane_naolib_consumer.py:93).
+    holding the matched right row (``right_cols``, default all). Unmatched
+    left rows are dropped, matching the reference's inner-join semantics
+    (src/plane_naolib_consumer.py:93); so are rows with a null timestamp
+    or a null ``by`` key, as in an equi join.
+
+    Plan: union both sides on one time column, order by time (descending
+    for ``forward``, ascending for ``backward``) with right rows before
+    left rows on a tie (after them if ``strict``), and carry the last
+    right payload forward over a running ``ROWS`` frame per ``by``
+    partition — O((n + m) log(n + m)), no pair is ever built. The frame
+    must be a running one: ``UNBOUNDED FOLLOWING`` is recomputed per row
+    and the default ``RANGE`` frame lets tied rows see each other.
+    ``tolerance_seconds`` filters the match afterwards, which is exact:
+    the nearest match is within tolerance iff any match is. Without
+    ``by`` the window runs in ONE partition, which is sized for this
+    system's inputs (one service day: ≈ 10 k planes, ≈ 180 departures).
     """
     if direction not in ("forward", "backward"):
         raise ValueError(f"direction must be forward|backward, got {direction}")
     if left_ts == right_ts:
         raise ValueError("left_ts and right_ts must have distinct names")
-    right_cols = list(
-        dict.fromkeys([*(right_cols or right.columns), right_ts])
+    by = list(by or [])
+    right_cols = list(dict.fromkeys([*(right_cols or right.columns), right_ts]))
+    group_cols = list(dict.fromkeys([*left_keys, left_ts, *by]))
+    fwd = direction == "forward"
+    # Tie rank: the side with the lower rank sorts first at equal time.
+    left_rank, right_rank = (0, 1) if strict else (1, 0)
+
+    lrows = left.dropna(subset=[left_ts, *by]).select(
+        *group_cols, F.col(left_ts).alias("_t"), F.lit(left_rank).alias("_o")
     )
-    if strategy == "auto":
-        strategy = (
-            "grouped" if by else "bucketed" if tolerance_seconds else "broadcast_rank"
-        )
-    group_cols = list(dict.fromkeys([*left_keys, left_ts, *(by or [])]))
-
-    def theta(lts: Column, rts: Column) -> Column:
-        if direction == "forward":
-            cond = rts > lts if strict else rts >= lts
-            if tolerance_seconds:
-                cond &= rts <= F.timestamp_add("SECOND", F.lit(tolerance_seconds), lts)
-        else:
-            cond = rts < lts if strict else rts <= lts
-            if tolerance_seconds:
-                cond &= rts >= F.timestamp_add("SECOND", F.lit(-tolerance_seconds), lts)
-        return cond
-
-    if strategy == "grouped":
-        rsel = right.select(*dict.fromkeys([*right_cols, *(by or [])]))
-        cond = theta(left[left_ts], rsel[right_ts])
-        for k in by or []:
-            cond &= left[k] == rsel[k]
-        joined = left.join(rsel, cond, "inner")
-        return joined.groupBy(*[left[c] for c in group_cols]).agg(
-            _best_struct(rsel, right_cols, right_ts, direction).alias("asof")
-        )
-
-    if strategy == "bucketed":
-        if not tolerance_seconds:
-            raise ValueError("bucketed strategy requires tolerance_seconds")
-        tol = F.lit(float(tolerance_seconds))
-        rb = F.floor(F.unix_timestamp(F.col(right_ts)) / tol)
-        # A right row in bucket b can answer left rows in bucket b or the
-        # adjacent one (the tolerance window straddles a bucket edge).
-        shift = [0, -1] if direction == "forward" else [0, 1]
-        r = right.select(*dict.fromkeys([*right_cols, *(by or [])])).withColumn(
-            "_bucket", F.explode(F.array(*[rb + s for s in shift]))
-        )
-        l = left.select(*group_cols).withColumn(
-            "_bucket", F.floor(F.unix_timestamp(F.col(left_ts)) / tol)
-        )
-        cond = (l["_bucket"] == r["_bucket"]) & theta(l[left_ts], r[right_ts])
-        for k in by or []:
-            cond &= l[k] == r[k]
-        joined = l.join(r, cond, "inner")
-        return joined.groupBy(*[l[c] for c in group_cols]).agg(
-            _best_struct(r, right_cols, right_ts, direction).alias("asof")
-        )
-
-    if strategy == "broadcast_rank":
-        # Reference formulation: theta join → row_number over
-        # partitionBy(left keys) orderBy(right ts) → keep rank 1
-        # (src/plane_naolib_consumer.py:91-105), right side broadcast.
-        rsel = right.select(*dict.fromkeys([*right_cols, *(by or [])]))
-        cond = theta(left[left_ts], rsel[right_ts])
-        for k in by or []:
-            cond &= left[k] == rsel[k]
-        joined = left.join(F.broadcast(rsel), cond, "inner")
-        order = rsel[right_ts].asc() if direction == "forward" else rsel[right_ts].desc()
-        # Qualify both sides: by= keys may exist on left AND right.
-        w = Window.partitionBy(*[left[c] for c in group_cols]).orderBy(order)
-        return (
-            joined.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .select(
-                *[left[c] for c in group_cols],
-                F.struct(*[rsel[c].alias(c) for c in right_cols]).alias("asof"),
-            )
-        )
-
-    if strategy == "sorted_array":
-        # For a bounded right side that contributes only its timestamp
-        # (the reference case: one day's bus schedule), skip the join
-        # entirely: collect the right timestamps ONCE into a sorted
-        # driver-side vector (the same boundedness contract as
-        # broadcasting a dimension — guarded below, fails loudly), close
-        # over it in an Arrow-batched pandas UDF, and binary-search each
-        # left batch with ``np.searchsorted``: O(log m) per row, zero
-        # join machinery, zero row multiplication, zero shuffle. No
-        # higher-order-function lambda captures an outer column, so the
-        # transient AQE rebinding failure the HOF formulation could hit
-        # cannot occur here.
-        if right_cols != [right_ts]:
-            raise ValueError("sorted_array strategy returns only right_ts")
-        # Collected via Arrow (toArrow), so the driver really holds ~one
-        # int64 buffer: ~80 MB at the cap, not millions of Row objects.
-        max_rows = 10_000_000
-        bounded = (
-            right.filter(F.col(right_ts).isNotNull())
-            .select(F.unix_micros(F.col(right_ts)).alias("_us"))
-            .limit(max_rows + 1)
-            .toArrow()
-        )
-        if bounded.num_rows > max_rows:
-            raise ValueError(
-                f"sorted_array right side exceeds {max_rows} rows; use "
-                "bucket_minima (unbounded) or bucketed (tolerance) instead"
-            )
-        arr = np.sort(bounded.column("_us").to_numpy().astype("int64"))
-        fwd = direction == "forward"
-        side = ("right" if strict else "left") if fwd else (
-            "left" if strict else "right"
-        )
-        tol_us = tolerance_seconds * 1_000_000 if tolerance_seconds else None
-
-        @F.pandas_udf("long")
-        def _match_us(ts_us: pd.Series) -> pd.Series:
-            v = ts_us.to_numpy(dtype="int64", na_value=np.iinfo("int64").min)
-            idx = np.searchsorted(arr, v, side=side)
-            if not fwd:
-                idx = idx - 1
-            # A null left timestamp never matches (inner-join semantics).
-            valid = (idx >= 0) & (idx < len(arr)) & ~ts_us.isna().to_numpy()
-            m = arr[np.clip(idx, 0, max(len(arr) - 1, 0))] if len(arr) else (
-                np.zeros_like(v)
-            )
-            if tol_us is not None:
-                valid &= (m <= v + tol_us) if fwd else (m >= v - tol_us)
-            out = pd.Series(m).astype("Int64")
-            out[~valid] = pd.NA
-            return out
-
-        return (
-            left.select(*group_cols)
-            .withColumn(
-                "_m_us", _match_us(F.unix_micros(F.col(left_ts)))
-            )
-            .filter(F.col("_m_us").isNotNull())
-            .select(
-                *group_cols,
-                F.struct(
-                    F.timestamp_micros(F.col("_m_us")).alias(right_ts)
-                ).alias("asof"),
-            )
-        )
-
-    if strategy == "bucket_minima":
-        # Unbounded-range as-of with NO nested loop and NO wide array
-        # scans: bucket right timestamps (1 bucket = `bucket_seconds`),
-        # reduce to one min (forward) / max (backward) per bucket, and
-        # take a running suffix/prefix extremum over the (dense, tiny —
-        # O(time-range/width), independent of row count) bucket table.
-        # Each left row then needs only (a) the broadcast bucket-table
-        # lookup for "best in strictly-later/earlier buckets" and (b) an
-        # equi join on its OWN bucket for same-bucket candidates. Every
-        # join is an equi join; every shuffle key is a bucket id.
-        if right_cols != [right_ts]:
-            raise ValueError("bucket_minima strategy returns only right_ts")
-        if tolerance_seconds:
-            raise ValueError(
-                "bucket_minima is for unbounded as-of; use bucketed with a tolerance"
-            )
-        width = F.lit(3600.0)
-        fwd = direction == "forward"
-        rb = right.select(
-            F.floor(F.unix_timestamp(F.col(right_ts)) / width)
-            .cast("long")
-            .alias("_b"),
-            F.col(right_ts),
-        )
-        best = F.min(right_ts) if fwd else F.max(right_ts)
-        mins = rb.groupBy("_b").agg(best.alias("_bbest"))
-        rng = mins.agg(F.min("_b").alias("_lo"), F.max("_b").alias("_hi"))
-        dense = (
-            rng.select(F.explode(F.sequence("_lo", "_hi")).alias("_b"))
-            .join(mins, "_b", "left")
-        )
-        # Running best over buckets ≥/≤ b. The window is over the BUCKET
-        # table (thousands of rows), never the data — a driver-bounded
-        # global window, like any dimension build.
-        w = (
-            Window.orderBy(F.asc("_b")).rowsBetween(0, Window.unboundedFollowing)
+    rrows = right.dropna(subset=[right_ts, *by]).select(
+        *by,
+        F.col(right_ts).alias("_t"),
+        F.lit(right_rank).alias("_o"),
+        F.struct(*right_cols).alias("_p"),
+    )
+    t = F.col("_t").desc() if fwd else F.col("_t").asc()
+    w = (
+        Window.partitionBy(*by)
+        .orderBy(t, F.col("_o"))
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    out = (
+        lrows.unionByName(rrows, allowMissingColumns=True)
+        .withColumn("_p", F.last("_p", ignorenulls=True).over(w))
+        .filter((F.col("_o") == left_rank) & F.col("_p").isNotNull())
+    )
+    if tolerance_seconds:
+        m, lts = F.col("_p")[right_ts], F.col(left_ts)
+        out = out.filter(
+            m <= F.timestamp_add("SECOND", F.lit(tolerance_seconds), lts)
             if fwd
-            else Window.orderBy(F.asc("_b")).rowsBetween(
-                Window.unboundedPreceding, 0
-            )
+            else m >= F.timestamp_add("SECOND", F.lit(-tolerance_seconds), lts)
         )
-        dense = dense.select(
-            "_b", (F.min("_bbest") if fwd else F.max("_bbest")).over(w).alias("_adj")
-        )
-        l = left.select(*group_cols).withColumn(
-            "_b",
-            F.floor(F.unix_timestamp(F.col(left_ts)) / width).cast("long"),
-        )
-        l = l.join(F.broadcast(rng))
-        # Adjacent-bucket pointer: strictly-later (earlier) buckets start
-        # at b±1, clamped into the dense range on the far side only — a
-        # miss past the near edge correctly yields NULL (no candidate).
-        bj = (
-            F.greatest(F.col("_b") + 1, F.col("_lo"))
-            if fwd
-            else F.least(F.col("_b") - 1, F.col("_hi"))
-        )
-        l = l.withColumn("_bj", bj).join(
-            F.broadcast(dense.withColumnRenamed("_b", "_bj")), "_bj", "left"
-        )
-        # Same-bucket candidates: equi join on the bucket id + theta.
-        # (Fresh aliases — rb also feeds the bucket table, and Spark
-        # rejects ambiguous self-join lineage otherwise.)
-        rbs = right.select(
-            F.floor(F.unix_timestamp(F.col(right_ts)) / width)
-            .cast("long")
-            .alias("_rb"),
-            F.col(right_ts).alias("_rts"),
-        )
-        same = l.join(
-            rbs,
-            (l["_b"] == rbs["_rb"]) & theta(l[left_ts], rbs["_rts"]),
-            "left",
-        )
-        agg_same = (F.min("_rts") if fwd else F.max("_rts")).alias("_same")
-        combined = same.groupBy(
-            *[l[c] for c in group_cols], l["_adj"]
-        ).agg(agg_same)
-        # least/greatest skip NULLs, so whichever side has a candidate wins.
-        m = (
-            F.least(F.col("_same"), F.col("_adj"))
-            if fwd
-            else F.greatest(F.col("_same"), F.col("_adj"))
-        )
-        return (
-            combined.withColumn("_m", m)
-            .filter(F.col("_m").isNotNull())
-            .select(
-                *group_cols, F.struct(F.col("_m").alias(right_ts)).alias("asof")
-            )
-        )
-
-    if strategy == "broadcast_agg":
-        # Same BNLJ theta join, but the top-1 is a min_by/max_by grouped
-        # aggregation instead of a window: partial aggregation runs
-        # map-side, so the shuffle moves one row per left key instead of
-        # every joined pair — the faster form of the reference shape.
-        rsel = right.select(*dict.fromkeys([*right_cols, *(by or [])]))
-        cond = theta(left[left_ts], rsel[right_ts])
-        for k in by or []:
-            cond &= left[k] == rsel[k]
-        joined = left.join(F.broadcast(rsel), cond, "inner")
-        return joined.groupBy(*[left[c] for c in group_cols]).agg(
-            _best_struct(rsel, right_cols, right_ts, direction).alias("asof")
-        )
-
-    raise ValueError(f"unknown strategy {strategy!r}")
+    return out.select(*group_cols, F.col("_p").alias("asof"))
 
 
 # Output schema template for asof_join_stream; the key slot takes the
@@ -369,8 +148,8 @@ def asof_join_stream(
     is O(rate × (watermark + tolerance)) regardless of stream length,
     and an event-time timeout clears keys that go idle entirely.
 
-    Inner semantics: a left event with no eligible right never emits
-    (mirrors the reference's theta-join + rank-1 shape, asof.py:1-27).
+    Inner semantics: a left event with no eligible right never emits,
+    as in the batch ``asof_join``.
     Input contract: ``left`` columns (key, left_id, left_ts), ``right``
     columns (key, right_ts); both must share the event-time column name
     used for the watermark only via their own ``left_ts``/``right_ts``.

@@ -228,10 +228,10 @@ FROM x GROUP BY 1
 
 
 def theta_join_next_error(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J1 reference-exact shape: pure non-equi theta join (no key) +
-    rank-1, right side broadcast — "first error event platform-wide
-    strictly after each day-1 signup" (the plane→bus query shape,
-    src/plane_naolib_consumer.py:91-105)."""
+    """J1 reference shape: pure non-equi theta join (no key) + rank-1 —
+    "first error event platform-wide strictly after each day-1 signup"
+    (the plane→bus query shape, src/plane_naolib_consumer.py:91-105),
+    run as the sort-and-fill ``asof_join``."""
     e = load_tables(spark, sf_dir, ("events",))["events"]
     signups = e.filter(
         (F.col("event_type") == "signup")
@@ -247,7 +247,6 @@ def theta_join_next_error(spark: SparkSession, sf_dir: str) -> DataFrame:
         right_ts="err_ts",
         left_keys=["event_id"],
         right_cols=["err_ts"],
-        strategy="bucket_minima",
         strict=True,
     )
     return out.select(
@@ -277,9 +276,9 @@ GROUP BY s.event_id, s.ts
 
 
 def asof_bucketed_prev_click(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J2 at scale, ``bucketed`` strategy: range join → equi join on time
-    buckets. "Nearest click at-or-before each purchase, within 30 min" —
-    no equi key, both sides unbounded; shuffle is on bucket ids, O(n+m)."""
+    """J2 with a tolerance: "nearest click at-or-before each purchase,
+    within 30 min" — no equi key; the sort-and-fill ``asof_join`` takes
+    the nearest click and then drops it if it is more than 30 min away."""
     e = load_tables(spark, sf_dir, ("events",))["events"]
     purchases = e.filter(F.col("event_type") == "purchase").select("event_id", "ts")
     clicks = e.filter(F.col("event_type") == "click").select(
@@ -294,7 +293,6 @@ def asof_bucketed_prev_click(spark: SparkSession, sf_dir: str) -> DataFrame:
         right_cols=["click_ts"],
         tolerance_seconds=1800,
         direction="backward",
-        strategy="bucketed",
     )
     return out.select(
         "event_id",

@@ -77,15 +77,13 @@ def q1_plane_bus_wait(
     begin_epoch: int,
     end_epoch: int,
     service_date: str,
-    strategy: str = "broadcast_rank",
 ) -> DataFrame:
     """Minimum wait between each plane arrival and the next city-bound bus.
 
     Reference shape: theta join ``bus_time > arrival_time`` + window
-    rank 1 (src/plane_naolib_consumer.py:91-105). ``strategy`` picks the
-    as-of physical plan (``broadcast_rank`` = reference parity; the
-    schedule side is tiny so broadcast is the right call at any scale).
-    Epoch range and service date are parameters (§2.11 bug 5).
+    rank 1 (src/plane_naolib_consumer.py:91-105), run as the sort-and-fill
+    ``asof_join`` with ``strict=True`` (no pair is built). Epoch range and
+    service date are parameters (§2.11 bug 5).
     """
     planes = (
         plane_df.withColumn("arrival_time", epoch_to_ts("lastSeen"))
@@ -100,7 +98,6 @@ def q1_plane_bus_wait(
         right_ts="bus_time",
         left_keys=["icao24", "callsign"],
         right_cols=["bus", "bus_time"],
-        strategy=strategy,
         strict=True,
     )
     return out.select(

@@ -213,12 +213,11 @@ GROUP BY r_name, n_name
 
 # --------------------------------------------------------------------------
 def asof_first_ship(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """As-of join, ``grouped`` strategy (J2 at scale).
+    """As-of join with an equi key (J2 at scale).
 
     "First lineitem shipped at-or-after each order's date" — the Q1
     plane→bus shape (src/plane_naolib_consumer.py:91-105) with an equi key
-    available, so the theta join rides a scalable shuffle join + min_by
-    instead of a nested loop.
+    available, so the sort-and-fill window is partitioned by the key.
     """
     t = load_tables(spark, sf_dir, ("orders", "lineitem"))
     right = t["lineitem"].select(
@@ -234,7 +233,6 @@ def asof_first_ship(spark: SparkSession, sf_dir: str) -> DataFrame:
         left_keys=["o_orderkey"],
         by=["o_orderkey"],
         right_cols=["l_shipdate"],
-        strategy="grouped",
     )
     return out.select(
         "o_orderkey",
