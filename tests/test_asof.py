@@ -60,14 +60,34 @@ def test_forward_strategies_agree(spark, sides):
     assert got[2] == "2024-01-01T10:05:00"
 
 
-def test_strict_and_backward_match_oracle(spark, sides):
+def _ts_only_right(right):
+    return right.drop("grp")
+
+
+def _ts_only_right_with_ties(right):
+    # Every right timestamp twice, with different payloads: a tie on the
+    # matched timestamp must not change which timestamp is matched.
+    right = right.drop("grp")
+    return right.unionByName(right.withColumn("payload", F.col("payload") + 1))
+
+
+# The ids name the timestamp-only strategies these cases were first
+# written for; asof_join now has one plan, checked on both right shapes.
+@pytest.mark.parametrize(
+    "make_right",
+    [
+        pytest.param(_ts_only_right, id="sorted_array"),
+        pytest.param(_ts_only_right_with_ties, id="bucket_minima"),
+    ],
+)
+def test_ts_only_strategies_strict_and_backward(spark, sides, make_right):
     left, right = sides
     for kwargs in [
         {"strict": True},
         {"direction": "backward"},
         {"direction": "backward", "strict": True},
     ]:
-        got, want = both(left, right.drop("grp"), right_cols=["rts"], **kwargs)
+        got, want = both(left, make_right(right), right_cols=["rts"], **kwargs)
         assert got == want, kwargs
 
 
