@@ -44,7 +44,7 @@ def timed_median(spark, runs: int, make_df) -> float:
     samples = []
     for _ in range(runs):
         # Fresh cache per sample — the persist under test must be paid
-        # (or skipped) inside the timed region, exactly as bench.py does.
+        # (or skipped) inside the timed region.
         spark.catalog.clearCache()
         t0 = time.perf_counter()
         make_df().write.mode("overwrite").format("noop").save()

@@ -80,8 +80,7 @@ ROTATED_OUT = {
     "haversine_knn": "knn_cosine_ivf_probe",  # distance top-k family
     "scalar_kit": "ref_q1_plane_bus_wait",  # X3-X10 scalar family
     # Rotated out in round 4 (driver-green r1-r3) for the last 7
-    # never-hashed entries; all still benched via BENCH_EXTRA and
-    # pytest-oracle-gated:
+    # never-hashed entries; all still pytest-oracle-gated:
     "dedup_exact": "dedup_clusters",  # exact-fingerprint dedup
     "pipeline_split": "pipeline_temperature_mix",  # deterministic-hash draw family (weighted_sample rotated out r12)
     "pipeline_corpus_stats": "pipeline_quantile_trim",  # one-pass stats family (profile rotated out r9)
@@ -104,8 +103,8 @@ ROTATED_OUT = {
     "interval_overlap_join": "streaming_asof_join",  # interval-predicate join (interval entry rotated out r9)
     "q20_dominant_part_suppliers": "q2_min_cost_supplier",  # correlated agg threshold
     # Rotated out in round 5 (driver-green >= 2 rounds each) to hand
-    # slots to the 13 never-hashed round-4 entries; all still benched
-    # via BENCH_EXTRA and pytest-oracle-gated:
+    # slots to the 13 never-hashed round-4 entries; all still
+    # pytest-oracle-gated:
     "knn_cosine_pq": "knn_cosine_ivf_probe",  # quantizer-train + code-scored knn
     "pipeline_chunk_documents": "text_repetition",  # per-doc text transform (scrub rotated out r9)
     "q11_important_parts": "q2_min_cost_supplier",  # scalar threshold + join-agg
@@ -129,8 +128,7 @@ ROTATED_OUT = {
     # Rotated out in ROUND 8 (each >= 4 consecutive driver-green rounds,
     # r1-r7) in the one-time rotation that put the 13 round-7-new
     # entries in front of the driver's hash (round-7 verdict task 1).
-    # All stay benched every round (BENCH_EXTRA) and full-registry
-    # pytest-oracle-gated:
+    # All stay full-registry pytest-oracle-gated:
     "q8_market_share": "join_auto_strategy",  # multi-join grouped agg
     "q10_returned_revenue": "join_auto_strategy",  # join + grouped agg + top-k
     "q13_order_count_distribution": "join_auto_strategy",  # outer join + distribution
@@ -146,8 +144,8 @@ ROTATED_OUT = {
     "pipeline_stratified_sample": "pipeline_temperature_mix",  # hash-draw sampling (weighted_sample rotated out r12)
     # Rotated out in ROUND 9 (each >= 5 consecutive driver-green rounds)
     # in the rotation that put the 7 round-8-new entries in front of the
-    # driver's hash (round-8 verdict task 1). All stay benched every
-    # round (BENCH_EXTRA) and full-registry pytest-oracle-gated:
+    # driver's hash (round-8 verdict task 1). All stay full-registry
+    # pytest-oracle-gated:
     "multimodal_wav": "multimodal_jpeg",  # real-codec decode family
     "multimodal_bmp": "multimodal_jpeg",  # real-codec decode family (png twin rotated out r12)
     "multimodal_video_frames": "multimodal_video_thumbs",  # frame-stream demux family (mp4_frames rotated out r12)
@@ -159,8 +157,7 @@ ROTATED_OUT = {
     # consecutive driver-green rounds r3–r9; the other two r4–r9) in the
     # rotation that put the 3 round-9-new incremental-dedup entries in
     # front of the driver's hash (round-9 verdict task 1). All stay
-    # benched every round (BENCH_EXTRA) and full-registry
-    # pytest-oracle-gated:
+    # full-registry pytest-oracle-gated:
     "streaming_incremental_rollup": "streaming_tumbling_window",  # windowed rollup family
     "knn_cosine_ivf_indexed": "knn_cosine_ivf_probe",  # IVF build (probe twin in gate)
     "sql_text_nation_revenue": "scan_filter_agg_kit",  # grouped-agg family (spark.sql entry)
@@ -168,8 +165,7 @@ ROTATED_OUT = {
     # rounds r7–r10, the r8 sketch cohort r8–r10, the keyframe twin
     # r9–r10) in the rotation that put the 18-entry never-hashed
     # round-10 pool in front of the driver's hash (round-10 verdict
-    # task 1). All stay benched every round (BENCH_EXTRA) and
-    # full-registry pytest-oracle-gated:
+    # task 1). All stay full-registry pytest-oracle-gated:
     "text_bm25_search": "text_bm25_appended",  # BM25 inverted-index family
     "text_bm25_indexed": "text_bm25_appended",  # persisted BM25 index build
     "text_bm25_probe": "text_bm25_appended",  # pruned postings probe (appended probes too)
@@ -192,8 +188,8 @@ ROTATED_OUT = {
     # consecutive driver-green rounds r9-r11, the jaccard incremental
     # r10-r11, the rest r7/r8-r11) in the rotation that put the
     # 11-entry never-hashed round-11 pool in front of the driver's hash
-    # (round-11 verdict task 1). All stay benched every round
-    # (BENCH_EXTRA) and full-registry pytest-oracle-gated:
+    # (round-11 verdict task 1). All stay full-registry
+    # pytest-oracle-gated:
     "cdc_merge_into": "streaming_cdc_merge_bucketed",  # MERGE INTO contract (bucketed streaming twin runs the same merge semantics)
     "streaming_cdc_merge": "streaming_cdc_merge_bucketed",  # streaming MERGE drain (bucketed twin in gate)
     "cdc_scd2_history": "streaming_cdc_merge_bucketed",  # keyed-version CDC family
@@ -208,8 +204,7 @@ ROTATED_OUT = {
     # Rotated out in ROUND 13 (all driver-green r11–r12) in the
     # rotation that put the 14-entry never-hashed round-12 pool in
     # front of the driver's hash (round-12 verdict task 2). All stay
-    # benched every round (BENCH_EXTRA) and full-registry
-    # pytest-oracle-gated:
+    # full-registry pytest-oracle-gated:
     "dedup_clusters_pruned": "dedup_clusters",  # pruned variant of the in-gate CC closer
     "dedup_span_ngrams": "dedup_jaccard_pruned",  # n-gram candidate-pair family (PPJoin twin in gate)
     "pipeline_training_shards": "pipeline_pack_bpe",  # sequence-packing shard family (BPE-budgeted packer in gate)
@@ -239,8 +234,7 @@ def test_gate_is_frozen_at_round13_set():
     green; r11: the full 18-entry never-hashed round-10 pool in, 18/18
     green; r12: the 11-entry never-hashed round-11 pool in, 11/11
     green; r13: the 14-entry never-hashed round-12 pool in, 14
-    driver-green r11–r12 entries out to BENCH_EXTRA, bench reports
-    BOTH gate-50 sums for series continuity) and RE-FROZE after each.
+    driver-green r11–r12 entries out) and RE-FROZE after each.
     Editing GATE_ORDER again is a deliberate act that requires updating
     this pin (and accepting a delta-baseline reset)."""
     import hashlib
@@ -300,38 +294,3 @@ def test_unhashed_entries_run_first():
         "streaming_expectations",
     }
 
-
-def test_bench_stdout_line_fits_driver_tail():
-    # The driver records only the last 2000 bytes of bench stdout
-    # (BENCH_r04 overflowed and came back "parsed": null). Worst-case
-    # compact line: every gate entry timed at 999.99 s plus the
-    # envelope bench.py emits — must fit with newline slack.
-    import json
-
-    line = json.dumps(
-        {
-            "metric": "engine_query_suite_seconds",
-            "value": 99999.999,
-            "unit": "sec",
-            "queries": {name: 999.99 for name in sorted(GATE_ORDER)},
-            "sf": 0.1,
-            "runs_per_query": 3,
-            "gate50_sum": 99999.999,
-            "gate50_r12_sum": 99999.999,
-            "bench_n": 99,
-            "dropped": 50,
-            "full": "bench_full.json",
-        },
-        separators=(",", ":"),
-    )
-    assert len(line) <= 1900, f"bench stdout line would be {len(line)} bytes"
-
-
-def test_bench_set_superset_of_gate_and_r3_comparable():
-    from ue_big_data_project_spark.queries import BENCH_EXTRA, bench_queries
-
-    bench = bench_queries()
-    assert set(GATE_ORDER) <= set(bench)
-    # Every round-3 gate entry (the BENCH_r03 set) is still benched.
-    assert set(BENCH_EXTRA) <= set(bench)
-    assert not (set(BENCH_EXTRA) & set(GATE_ORDER))

@@ -696,9 +696,8 @@ def source_unigram_kl(
     Cache lifecycle contract (round-6 advice): the persisted count
     table stays in Spark's CacheManager until the session ends or the
     caller clears it; looping callers should
-    ``spark.catalog.clearCache()`` between calls (what bench.py does
-    per query) — eviction is LRU under pressure and never affects
-    correctness.
+    ``spark.catalog.clearCache()`` between calls — eviction is LRU
+    under pressure and never affects correctness.
     """
     gtoks = docs.select(
         F.col(group_col).alias("grp"), _token_array(text_col).alias("toks")
