@@ -1,6 +1,7 @@
 """Property-based checks (hypothesis): randomized inputs must keep the
-as-of join equal to its theta-join oracle and sessionization internally
-consistent. Small example counts — each example runs Spark jobs."""
+as-of join equal to its theta-join oracle, Q3's bus positions equal to
+the reference walk and sessionization internally consistent. Small
+example counts — each example runs Spark jobs."""
 
 from __future__ import annotations
 
@@ -10,8 +11,10 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
 from tests.asof_oracle import asof_oracle
+from tests.q3_oracle import detect_positions
 from ue_big_data_project_spark.operators.asof import asof_join
 from ue_big_data_project_spark.operators.sessions import sessionize_batch
+from ue_big_data_project_spark.queries.reference import q3_bus_positions
 
 EPOCH = dt.datetime(2024, 1, 1)
 
@@ -66,6 +69,58 @@ def test_asof_strategies_agree_on_random_data(
     assert rows(asof_join(left, right, **kwargs)) == rows(
         asof_oracle(left, right, **kwargs)
     )
+
+
+Q3_STOPS = ["AAAA", "BBBB", "CCCC", "DDDD", "EEEE"]
+# Wait strings as the feed sends them: "Nmn" (0 included), "proche"
+# (parsed as 0), non-numeric leftovers and a missing value (both null).
+temps_strategy = st.one_of(
+    st.integers(min_value=0, max_value=20).map(lambda m: f"{m}mn"),
+    st.sampled_from(["0mn", "proche", "", "mn", "Horaire"]),
+    st.none(),
+)
+# (sens, stop, temps, minute, second): a random subset of the line's
+# stops per direction over two one-minute windows.
+q3_rows = st.lists(
+    st.tuples(
+        st.sampled_from([1, 2]),
+        st.sampled_from(Q3_STOPS),
+        temps_strategy,
+        st.integers(min_value=0, max_value=1),
+        st.integers(min_value=0, max_value=59),
+    ),
+    min_size=1,
+    max_size=16,
+)
+
+
+@settings(
+    max_examples=10,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(rows=q3_rows, repeat_temps=temps_strategy)
+def test_q3_positions_match_reference_walk(spark, rows, repeat_temps):
+    # Measure the first row's stop again in the same window, so every
+    # example has a repeated stop where the first measurement must win.
+    sens, stop, _, minute, second = rows[0]
+    rows = [*rows, (sens, stop, repeat_temps, minute, second)]
+    df = spark.createDataFrame(
+        [
+            (d, "Term", False, t, "true", at, "C6", f"2025-03-25T14:0{5 + m}:{sec:02d}")
+            for d, at, t, m, sec in rows
+        ],
+        "sens int, terminus string, infotrafic boolean, temps string, "
+        "tempsReel string, stop string, numLigne string, created_at string",
+    )
+    out = q3_bus_positions(df, Q3_STOPS, line="C6").collect()
+    assert sum(len(r["stops"]) for r in out) == len(rows)
+    assert {(r["sens"], r["window"]["start"].minute) for r in out} == {
+        (d, 5 + m) for d, _, _, m, _ in rows
+    }
+    for r in out:
+        got = [(p["location"], p["status"]) for p in r["positions"]]
+        assert got == detect_positions(r["stops"], r["sens"], Q3_STOPS)
 
 
 words = st.sampled_from(

@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import pytest
 
+from tests.q3_oracle import detect_positions
 from ue_big_data_project_spark.queries import reference as R
 
 STOPS = ["AAAA", "BBBB", "CCCC", "DDDD"]
@@ -109,30 +110,41 @@ def positions_df(spark):
     )
 
 
-@pytest.mark.parametrize("use_udf", [False, True])
-def test_q3_positions_native_and_udf(spark, positions_df, use_udf):
-    out = R.q3_bus_positions(
-        positions_df, STOPS, line="C6", use_udf=use_udf
-    ).collect()
-    by_sens = {r["sens"]: r["positions"] for r in out}
-    sens1 = {(p["location"], p["status"]) for p in by_sens[1]}
+def _native(rows):
+    """Each row's ``positions`` by (sens, window start)."""
+    return {
+        (r["sens"], r["window"]["start"]): [
+            (p["location"], p["status"]) for p in r["positions"]
+        ]
+        for r in rows
+    }
+
+
+def _walked(rows):
+    """Each row's positions as the reference walk reads its own ``stops``."""
+    return {
+        (r["sens"], r["window"]["start"]): detect_positions(
+            r["stops"], r["sens"], STOPS
+        )
+        for r in rows
+    }
+
+
+@pytest.mark.parametrize("reference_walk", [False, True])
+def test_q3_positions_native_and_udf(spark, positions_df, reference_walk):
+    out = R.q3_bus_positions(positions_df, STOPS, line="C6").collect()
+    walk = _walked if reference_walk else _native
+    by_sens = {sens: set(ps) for (sens, _), ps in walk(out).items()}
     # AT BBBB; CCCC(5) > DDDD(2) > 0 → between CCCC|DDDD.
-    assert sens1 == {("BBBB", True), ("CCCC|DDDD", False)}
-    sens2 = {(p["location"], p["status"]) for p in by_sens[2]}
+    assert by_sens[1] == {("BBBB", True), ("CCCC|DDDD", False)}
     # Reversed walk DDDD→AAAA: DDDD(9)>CCCC(6) → DDDD|CCCC;
     # CCCC(6)>BBBB(3) → CCCC|BBBB; BBBB(3) < AAAA(8) → no.
-    assert sens2 == {("DDDD|CCCC", False), ("CCCC|BBBB", False)}
+    assert by_sens[2] == {("DDDD|CCCC", False), ("CCCC|BBBB", False)}
 
 
 def test_q3_native_equals_udf(spark, positions_df):
-    a = R.q3_bus_positions(positions_df, STOPS, use_udf=False).collect()
-    b = R.q3_bus_positions(positions_df, STOPS, use_udf=True).collect()
-    key = lambda r: (r["sens"], r["window"]["start"])
-    norm = lambda rows: {
-        key(r): [(p["location"], p["status"]) for p in r["positions"]]
-        for r in rows
-    }
-    assert norm(a) == norm(b)
+    rows = R.q3_bus_positions(positions_df, STOPS).collect()
+    assert _native(rows) == _walked(rows)
 
 
 def test_q4_bike_occupancy(spark):

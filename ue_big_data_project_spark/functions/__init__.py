@@ -9,8 +9,8 @@ semantics allow:
   built from ``repeat``/``concat`` (pure expression, no Python worker).
 - U3 ``parse_time_udf`` (batch_bus_affluence.ipynb cell 4) → ``hour_bucket``
   built from ``regexp_replace`` + ``pmod`` + ``format_string``.
-- U1 ``detect_bus_positions_udf`` stays custom logic but is provided as a
-  vectorized pandas UDF in ``queries.reference`` (Arrow-batched).
+- U1 ``detect_bus_positions_udf`` → ``detect_positions_expr`` in
+  ``queries.reference``, a native array walk (``transform``/``filter``).
 """
 
 from __future__ import annotations

@@ -17,10 +17,8 @@ Queries (reference README.md:5-13):
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from ue_big_data_project_spark.functions import (
     digits_only,
@@ -152,16 +150,6 @@ def q2_affluence_per_hour(
 # ---------------------------------------------------------------------------
 # Q3 — live bus positions on an ordered line (src/naolib_consumer.py)
 # ---------------------------------------------------------------------------
-POSITION_SCHEMA = T.ArrayType(
-    T.StructType(
-        [
-            T.StructField("location", T.StringType(), False),
-            T.StructField("status", T.BooleanType(), False),
-        ]
-    )
-)
-
-
 def detect_positions_expr(
     stops_col: Column, sens_col: Column, ordered_stops: list[str]
 ) -> Column:
@@ -205,49 +193,12 @@ def detect_positions_expr(
     return F.filter(walked, lambda x: x.isNotNull())
 
 
-def make_detect_positions_udf(ordered_stops: list[str]):
-    """U1 as a vectorized pandas UDF — reference-parity twin of
-    :func:`detect_positions_expr` (equivalence-tested). Arrow-batched:
-    one Python roundtrip per micro-batch, not per row."""
-
-    @F.pandas_udf(POSITION_SCHEMA)
-    def detect(stops: pd.Series, sens: pd.Series) -> pd.Series:
-        out = []
-        for row_stops, row_sens in zip(stops, sens):
-            order = (
-                ordered_stops if row_sens == 1 else list(reversed(ordered_stops))
-            )
-            lookup = {}
-            for item in row_stops if row_stops is not None else []:
-                lookup.setdefault(item["stop"], item["minutes"])
-            result = []
-            for idx, stop in enumerate(order):
-                cur = lookup.get(stop)
-                prev = lookup.get(order[idx - 1]) if idx > 0 else None
-                if cur == 0:
-                    result.append({"location": stop, "status": True})
-                elif (
-                    cur is not None
-                    and prev is not None
-                    and cur > 0
-                    and prev > cur
-                ):
-                    result.append(
-                        {"location": f"{order[idx - 1]}|{stop}", "status": False}
-                    )
-            out.append(result)
-        return pd.Series(out)
-
-    return detect
-
-
 def q3_bus_positions(
     positions_df: DataFrame,
     ordered_stops: list[str],
     line: str | None = None,
     window: str = "1 minute",
     watermark: str = "1 minute",
-    use_udf: bool = False,
 ) -> DataFrame:
     """Live estimated bus positions per (event-time window, direction).
 
@@ -272,9 +223,6 @@ def q3_bus_positions(
         group_cols=["sens"],
         watermark=watermark,
     )
-    if use_udf:
-        detect = make_detect_positions_udf(ordered_stops)
-        return agg.withColumn("positions", detect(F.col("stops"), F.col("sens")))
     return agg.withColumn(
         "positions",
         detect_positions_expr(F.col("stops"), F.col("sens"), ordered_stops),

@@ -177,8 +177,9 @@ GROUP BY 1
 # ---------------------------------------------------------------------------
 def ref_q3_bus_positions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The ordered-stop positional walk (U1) — the engine's
-    custom-expression escape hatch, equivalence-tested against its
-    pandas-UDF twin in tests/test_reference_queries.py.
+    custom-expression escape hatch, checked against a plain Python walk
+    (tests/q3_oracle.py) in tests/test_reference_queries.py and
+    tests/test_properties.py.
 
     The general operator takes an arbitrary runtime stop list, but with
     the fixture's literal stop order the walk IS SQL-expressible (join
