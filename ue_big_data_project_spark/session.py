@@ -23,10 +23,31 @@ from ue_big_data_project_spark import fs
 from pyspark.sql import SparkSession
 
 
+# The timestamp/timezone contract every session needs, whether get_spark
+# built it or a caller handed it in (apply_session_conf).
+SESSION_CONF = {
+    # The driver's events.parquet stores TIMESTAMP(NANOS); Spark has no
+    # nanos timestamp type, so read as long and rebuild micros in
+    # load_tables (DuckDB coerces the same way → values agree).
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
+    # Micros parquet timestamps written without isAdjustedToUTC would
+    # otherwise infer TIMESTAMP_NTZ, which unix_micros/window() reject;
+    # read them as regular (LTZ) timestamps — with the session pinned
+    # UTC the stored value IS the epoch, matching DuckDB's naive reads.
+    "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
+    "spark.sql.session.timeZone": "UTC",
+    # Write timestamps as TIMESTAMP_MICROS (not legacy INT96): INT96
+    # columns carry no usable row-group min/max statistics, which
+    # silently disables footer-stat file skipping for range-sorted /
+    # z-ordered layouts on timestamp sort keys (sources.py).
+    "spark.sql.parquet.outputTimestampType": "TIMESTAMP_MICROS",
+}
+
+
 def get_spark(
     app_name: str = "ue_big_data_project_spark",
     master: str | None = None,
-    shuffle_partitions: int | None = None,
+    shuffle_partitions: int = 32,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or reuse) the engine's SparkSession.
@@ -37,8 +58,6 @@ def get_spark(
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     master = master or os.environ.get("SPARK_MASTER", f"local[{cpus}]")
-    if shuffle_partitions is None:
-        shuffle_partitions = int(os.environ.get("SPARK_GRAFT_SHUFFLE", "32"))
     builder = (
         SparkSession.builder.master(master)
         .appName(app_name)
@@ -46,23 +65,8 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.filterPushdown", "true")
-        # The driver's events.parquet stores TIMESTAMP(NANOS); Spark has no
-        # nanos timestamp type, so read as long and rebuild micros in
-        # load_tables (DuckDB coerces the same way → values agree).
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        # Micros parquet timestamps written without isAdjustedToUTC would
-        # otherwise infer TIMESTAMP_NTZ, which unix_micros/window() reject;
-        # read them as regular (LTZ) timestamps — with the session pinned
-        # UTC the stored value IS the epoch, matching DuckDB's naive reads.
-        .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-        # Write timestamps as TIMESTAMP_MICROS (not legacy INT96): INT96
-        # columns carry no usable row-group min/max statistics, which
-        # silently disables footer-stat file skipping for range-sorted /
-        # z-ordered layouts on timestamp sort keys (sources.py).
-        .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
         .config(
             "spark.driver.memory",
             os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"),
@@ -74,7 +78,7 @@ def get_spark(
             "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
         )
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in {**SESSION_CONF, **(extra_conf or {})}.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -90,10 +94,8 @@ def apply_session_conf(spark: SparkSession) -> None:
     timezone. Every entry point that may receive a foreign session
     (load_tables, the streaming query functions) calls this.
     """
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+    for k, v in SESSION_CONF.items():
+        spark.conf.set(k, v)
 
 
 def load_tables(spark: SparkSession, sf_dir: str, names: tuple[str, ...] | None = None):
