@@ -23,10 +23,13 @@ from ue_big_data_project_spark.queries import gate_queries  # noqa: E402
 
 
 def entry(spark: SparkSession) -> DataFrame:
-    """Flagship query on /root/testdata/sf0.001; driver checks rows>0."""
-    from ue_big_data_project_spark.queries.tpch import q1_pricing_summary
+    """Flagship transit query (Q1, plane → next bus wait) over its
+    fixture feeds; driver checks rows>0."""
+    from ue_big_data_project_spark.queries.reference_registered import (
+        ref_q1_plane_bus_wait,
+    )
 
-    return q1_pricing_summary(spark, "/root/testdata/sf0.001")
+    return ref_q1_plane_bus_wait(spark, "/root/testdata/sf0.001")
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
