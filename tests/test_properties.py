@@ -72,6 +72,7 @@ def test_asof_strategies_agree_on_random_data(
 
 
 Q3_STOPS = ["AAAA", "BBBB", "CCCC", "DDDD", "EEEE"]
+DAY = "2025-03-25"
 # Wait strings as the feed sends them: "Nmn" (0 included), "proche"
 # (parsed as 0), non-numeric leftovers and a missing value (both null).
 temps_strategy = st.one_of(
@@ -107,8 +108,8 @@ def test_q3_positions_match_reference_walk(spark, rows, repeat_temps):
     rows = [*rows, (sens, stop, repeat_temps, minute, second)]
     df = spark.createDataFrame(
         [
-            (d, "Term", False, t, "true", at, "C6", f"2025-03-25T14:0{5 + m}:{sec:02d}")
-            for d, at, t, m, sec in rows
+            (d, "Term", False, t, "true", at, "C6", f"{DAY}T14:0{5 + m}:{s:02d}")
+            for d, at, t, m, s in rows
         ],
         "sens int, terminus string, infotrafic boolean, temps string, "
         "tempsReel string, stop string, numLigne string, created_at string",
