@@ -473,7 +473,8 @@ SHUFFLE_BUDGETS = {
                                     # the round-6 persist (9 -> 6 executed
                                     # exchanges) was A/B'd SLOWER at sf0.1
                                     # AND at a 10x corpus (round-7 verdict
-                                    # task 3, scripts/kl_persist_ab.py),
+                                    # task 3, scripts/kl_persist_ab.py,
+                                    # removed after commit d34de9f),
                                     # so the default is persist_counts=
                                     # False; True restores the 6-exchange
                                     # plan for corpora where the tokenize

@@ -169,6 +169,126 @@ def test_q4_bike_occupancy(spark):
     assert [r["station"] for r in rows] == sorted(bars)
 
 
+def test_dirty_time_fields_become_nulls_not_errors(
+    spark, plane_df, bus_df, positions_df
+):
+    """One unreadable time value next to good rows in each of Q1-Q4.
+
+    Under ANSI mode (Spark 4's default) a plain cast or ``to_timestamp``
+    raises on such a value; the reference ran with ANSI off and got a
+    null. Each query must run, the good rows' results must not change,
+    and Q2 must report missing and malformed hours in the NULL hour."""
+
+    def q1(buses):
+        return sorted(
+            R.q1_plane_bus_wait(
+                plane_df,
+                buses,
+                begin_epoch=1_742_166_015,
+                end_epoch=1_742_252_385,
+                service_date="2025-03-17",
+            ).collect()
+        )
+
+    # Read leniently, 7h + 87 min would be 08:27, ab1's next bus.
+    dirty_buses = bus_df.union(
+        spark.createDataFrame(
+            [(38, "zzh", ["10"]), (98, "7h", ["87"])],
+            "bus int, heure string, passages array<string>",
+        )
+    )
+    assert q1(dirty_buses) == q1(bus_df)
+
+    affluence = spark.createDataFrame(
+        [
+            ("23", "CRQU4", "6h", "01"),
+            ("23", "CRQU4", "25h", "40"),
+            ("23", "CRQU4", "xh", "05"),
+            ("23", "CRQU4", None, "07"),
+        ],
+        "numLigne string, stop string, heure string, passage string",
+    )
+    got = {
+        r["hour"]: r["bus_count"]
+        for r in R.q2_affluence_per_hour(affluence, stop="CRQU4").collect()
+    }
+    assert got == {"06:00": 1, "01:00": 1, None: 2}
+
+    dirty_positions = positions_df.union(
+        spark.createDataFrame(
+            [(1, "Term", False, "4mn", "true", "AAAA", "C6", "not-a-time")],
+            positions_df.schema,
+        )
+    )
+    assert _native(
+        R.q3_bus_positions(dirty_positions, STOPS, line="C6").collect()
+    ) == _native(R.q3_bus_positions(positions_df, STOPS, line="C6").collect())
+
+    schema = (
+        "name string, number string, address string, available_bikes string, "
+        "available_bike_stands string, bike_stands int, last_update string"
+    )
+    good = [
+        ("Gare", "001", "Rue", "5", "10", 20, "2025-03-25T14:04:10+01:00"),
+        ("Quai", "002", "Av", "3", "7", 10, "2025-03-25T14:04:20+01:00"),
+    ]
+    bad = [("Gare", "001", "Rue", "20", "0", 20, "garbage")]
+    assert R.q4_bike_occupancy(
+        spark.createDataFrame(good + bad, schema)
+    ).collect() == R.q4_bike_occupancy(spark.createDataFrame(good, schema)).collect()
+
+
+def test_nearest_points_matches_python_haversine(spark):
+    """``geo.nearest_points`` in the benchmark's call shape (k=5 within
+    10 km, ties broken by name) against a plain-Python haversine walk."""
+    import math
+
+    from ue_big_data_project_spark.functions import EARTH_RADIUS_KM
+    from ue_big_data_project_spark.operators import geo
+
+    lon0, lat0 = -1.5536, 47.2173  # Nantes centre
+
+    def km(lon, lat):
+        p1, p2 = math.radians(lat0), math.radians(lat)
+        a = (
+            math.sin((p2 - p1) / 2) ** 2
+            + math.cos(p1) * math.cos(p2)
+            * math.sin(math.radians(lon - lon0) / 2) ** 2
+        )
+        return 2 * EARTH_RADIUS_KM * math.asin(math.sqrt(a))
+
+    # One degree of latitude is ~111.2 km, so 0.0899° is ~10.0 km.
+    rows = [
+        ("far", lon0, lat0 + 0.0905),  # just outside 10 km
+        ("edge", lon0, lat0 + 0.0895),  # just inside
+        ("tie-b", lon0 + 0.01, lat0),  # two stations at one spot
+        ("tie-a", lon0 + 0.01, lat0),
+        ("near", lon0, lat0 + 0.001),
+        ("out", lon0 + 1.0, lat0),
+    ]
+    df = spark.createDataFrame(
+        [(n, (lon, lat)) for n, lon, lat in rows],
+        "name string, position struct<lon:double,lat:double>",
+    )
+    got = [
+        (r["name"], r["distance_km"])
+        for r in geo.nearest_points(
+            df, "position.lon", "position.lat", lon0, lat0,
+            k=5, radius_km=10.0, tie_breaker="name",
+        ).collect()
+    ]
+    walk = sorted(
+        (km(lon, lat), n) for n, lon, lat in rows if km(lon, lat) <= 10.0
+    )[:5]
+    assert km(lon0, lat0 + 0.0905) > 10.0 > km(lon0, lat0 + 0.0895)
+    # Four stations lie within 10 km, so without the radius "far" would
+    # fill the fifth place.
+    assert [n for n, _ in got] == [n for _, n in walk]
+    assert [n for n, _ in got] == ["near", "tie-a", "tie-b", "edge"]
+    for (_, d), (e, _) in zip(got, walk):
+        assert d == pytest.approx(e, rel=1e-12)
+
+
 def test_wind_pipeline_dedup_and_average(spark):
     df = spark.createDataFrame(
         [

@@ -653,7 +653,8 @@ def test_heavy_hitters_dispatch_branches_agree(spark):
 def test_heavy_hitters_default_cutover_picks_naive_at_fixture_scale(spark):
     """At any vocabulary a test fixture can produce, the default 2M
     cutover must choose the naive plan — the measured single-box
-    winner (scripts/heavy_hitters_scale_check.py: 0.66 s naive vs
+    winner (scripts/heavy_hitters_scale_check.py, removed after commit
+    d34de9f: 0.66 s naive vs
     3.55 s CMS at 200k distinct)."""
     df = _ids(spark, 2000, "t", groups=1)
     out, decision = SK.heavy_hitters(df, F.col("v"), 1, 2)

@@ -45,14 +45,18 @@ def hour_norm(heure: Column | str) -> Column:
 
     TAN uses 24h/25h for after-midnight service (reference:
     batch_bus_affluence.ipynb cell 4 lines 50-65, src/plane_naolib_consumer.py:80).
+    A malformed hour (``"xh"``) is null, as the reference's non-ANSI cast
+    made it, instead of failing the query under ANSI mode.
     """
     c = F.col(heure) if isinstance(heure, str) else heure
-    return F.pmod(F.regexp_replace(c, "h", "").cast("int"), F.lit(24))
+    return F.pmod(F.regexp_replace(c, "h", "").try_cast("int"), F.lit(24))
 
 
 def hour_bucket(heure: Column | str) -> Column:
-    """``"25h"`` → ``"01:00"`` display bucket (U3's intended output)."""
-    return F.format_string("%02d:00", hour_norm(heure))
+    """``"25h"`` → ``"01:00"`` display bucket (U3's intended output);
+    null when the hour is missing or malformed."""
+    h = hour_norm(heure)
+    return F.when(h.isNotNull(), F.format_string("%02d:00", h))
 
 
 def parse_wait_minutes(temps: Column | str) -> Column:

@@ -1539,7 +1539,7 @@ def rewrite_jaccard_index(spark, path: str, keep_docs: DataFrame) -> int:
     consistent order stays lossless, so pruning must not move it
     (re-freezing to re-tighten prefixes is a separate, measured rebuild
     decision: :func:`jaccard_index_staleness` + the drift curve in
-    ``scripts/jaccard_drift_check.py``).
+    ``scripts/jaccard_drift_check.py``, removed after commit d34de9f).
 
     Probe equivalence after the prune (test-pinned): probe results ==
     pre-prune results restricted to pairs whose INDEX endpoint
@@ -1595,7 +1595,8 @@ def jaccard_index_staleness(spark, path: str) -> dict:
     shingle, so exposure is the (up-to-dedup) prefix-join candidate
     count. ``staleness_ratio = exposure_frozen / exposure_fresh ≥ ~1``;
     1.0 means the frozen order is still candidate-optimal, and the
-    drift curve in ``scripts/jaccard_drift_check.py`` maps the ratio to
+    drift curve in ``scripts/jaccard_drift_check.py`` (removed after
+    commit d34de9f) maps the ratio to
     measured probe-candidate inflation (SCALE.md records the rebuild
     threshold). One corpus-size pass over the arrays sidecar — an
     OFFLINE audit/retention decision, not a probe-path cost.

@@ -29,7 +29,7 @@ Scale contract (100 TB):
   O(increment + vocabulary) at any corpus size (measured: the same
   500-doc increment appends in 1.53 s into the sf0.1 index and 1.66 s
   into a 10×-replicated one — ratio 1.08, flat —
-  ``scripts/append_scale_check.py``).
+  ``scripts/append_scale_check.py``, removed after commit d34de9f).
 
 Determinism (oracle hash-matching): the per-term partial score is
 rounded to 6 dp (``pround`` — bit-identical IEEE ops in any engine),
@@ -683,7 +683,8 @@ def source_unigram_kl(
     tokenize + explode + count subplan, re-reading (and re-regexing)
     the whole corpus once per branch. ``persist_counts=True`` caches
     it (lazy, memory-and-disk). The default is FALSE because the A/B
-    (round 7, scripts/kl_persist_ab.py, 5-run medians) measured the
+    (round 7, scripts/kl_persist_ab.py, removed after commit d34de9f;
+    5-run medians) measured the
     persist SLOWER at every reachable scale: 0.59 vs 1.00 s at sf0.1
     (5k docs, 1.71x) and 0.70 vs 0.89 s at a 10x-replicated corpus
     (50k docs, 1.27x) — the fixed materialization cost exceeds three

@@ -347,7 +347,8 @@ def _assign_clusters(
       becomes a BLAS-free numpy sweep. Assignment is the
       O(rows × n_centroids) stage of every IVF/PQ build, append, and
       probe — measured on the 500-vector append
-      (scripts/append_scale_check.py): 0.99 → 0.63 s total at 16
+      (scripts/append_scale_check.py, removed after commit d34de9f):
+      0.99 → 0.63 s total at 16
       cells and 3.66 → 1.27 s at 160 (scale ratio 3.7 → 2.0); the
       self-contained bench entries dropped too (isolated medians:
       knn_cosine_ivf 3.0 → 1.9 s, ivf_appended 4.7 → 3.9 s,
@@ -996,7 +997,8 @@ def _write_tagged(
     # many-cell index no longer pays one near-empty writer task per
     # cell, and the file commits still parallelize across the
     # executors. All three shapes measured appending 500 vectors into
-    # a 160-cell index (scripts/append_scale_check.py, 5-run medians):
+    # a 160-cell index (scripts/append_scale_check.py, removed after
+    # commit d34de9f; 5-run medians):
     # one task per cell 3.73 s; AQE-sized (plain repartition("cell"),
     # which over-coalesces the tiny increment to ONE task committing
     # every file serially) 5.34 s; width-capped 3.66 s — the floor,
@@ -1036,7 +1038,8 @@ def ivf_index_append(
     0.63 s against 16 centroids and 1.27 s against 160 (2.0× with the
     vectorized arrow assignment; the interpreted HOF backend read
     0.99 s / 3.66 s, 3.7×, linear in C as brute-force assignment
-    predicts; ``scripts/append_scale_check.py``). Existing postings
+    predicts; ``scripts/append_scale_check.py``, removed after commit
+    d34de9f). Existing postings
     are never
     read, so this stays increment-bounded: the rebuild alternative at
     10× corpus × 10× centroids costs ~100× the original build. When

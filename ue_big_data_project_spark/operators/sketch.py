@@ -1056,7 +1056,8 @@ def cms_heavy_hitters(
     (12.4k) while the naive plan's grow linearly (3.2M at 8× corpus,
     258× more), but on a single box the naive partial aggregate wins
     wall-time because the md5 probe math costs more than the shuffle
-    it avoids (`scripts/heavy_hitters_scale_check.py` records both).
+    it avoids (`scripts/heavy_hitters_scale_check.py`, removed after
+    commit d34de9f, records both).
     Reach for it when vocabulary × map-tasks shuffle rows are the
     bottleneck — wide vocabularies on real clusters.
     """
@@ -1145,7 +1146,8 @@ def heavy_hitters(
       258× fewer exchange rows at 8× corpus under a 200k vocabulary).
 
     The default cutover is 2,000,000 distinct: the measured trade
-    (``scripts/heavy_hitters_scale_check.py``) is that on one box the
+    (``scripts/heavy_hitters_scale_check.py``, removed after commit
+    d34de9f) is that on one box the
     naive plan wins WALL TIME at every vocabulary that fits the
     per-task aggregate hash table (0.66 s vs 3.55 s at 200k distinct —
     the md5 probe math costs more than the shuffle it avoids), while

@@ -142,7 +142,8 @@ def sketch_join_plan(
       over-estimate-only bound on the hottest key's row count. The
       round-7 plan paid ``big.count()`` PLUS the counter build — two
       full scans; fusing them halves planning cost with the identical
-      decision (A/B in ``scripts/join_plan_ab.py``). If even the
+      decision (A/B in ``scripts/join_plan_ab.py``, removed after
+      commit d34de9f). If even the
       OVER-estimate is under ``skew_ratio``× the average reducer load,
       the key is provably not skewed — the one-sided CMS error aims
       the test in the safe direction (false "skewed" possible, false

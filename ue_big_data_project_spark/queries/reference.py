@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ue_big_data_project_spark import schemas
 from ue_big_data_project_spark.functions import (
     digits_only,
     epoch_to_ts,
@@ -37,13 +38,17 @@ from ue_big_data_project_spark.streaming import windowed_agg
 # ---------------------------------------------------------------------------
 # Q1 — plane → next bus wait (src/plane_naolib_consumer.py)
 # ---------------------------------------------------------------------------
-def expand_bus_schedule(bus_df: DataFrame, service_date: str) -> Column:
+def expand_bus_schedule(bus_df: DataFrame, service_date: str) -> DataFrame:
     """Bus schedule (bus, heure "4h".."25h", passages ["50d","12",...]) →
     one row per departure with a ``bus_time`` timestamp.
 
     Mirrors process_bus_data (src/plane_naolib_consumer.py:77-89) but the
     service date is a parameter, not a hard-coded literal (§2.11 bug 5),
     and hour normalization handles the 24h/25h after-midnight encoding.
+    A malformed hour (``"zzh"``) drops the departure and an impossible
+    time (minute ``"75"``) gets a null ``bus_time``, as under the
+    reference's non-ANSI parse, instead of failing the query under ANSI
+    mode; ``asof_join`` skips null times.
     """
     return (
         bus_df.select(
@@ -54,7 +59,7 @@ def expand_bus_schedule(bus_df: DataFrame, service_date: str) -> Column:
         .filter(F.col("dep_hour").isNotNull() & F.col("dep_minute").isNotNull())
         .withColumn(
             "bus_time",
-            F.to_timestamp(
+            F.try_to_timestamp(
                 F.concat(
                     F.lit(service_date),
                     F.lit(" "),
@@ -213,7 +218,7 @@ def q3_bus_positions(
     df = (
         df.filter(F.col("tempsReel") == "true")
         .withColumn("minutes", parse_wait_minutes("temps"))
-        .withColumn("created_at", F.col("created_at").cast("timestamp"))
+        .withColumn("created_at", F.col("created_at").try_cast("timestamp"))
     )
     agg = windowed_agg(
         df,
@@ -254,8 +259,8 @@ def q4_bike_occupancy(
             .try_cast("int")
             .alias("available_bike_stands"),
             F.col("bike_stands").try_cast("int").alias("bike_stands"),
-            F.to_timestamp(
-                "last_update", "yyyy-MM-dd'T'HH:mm:ssXXX"
+            F.try_to_timestamp(
+                "last_update", F.lit(schemas.BIKE_LAST_UPDATE_FORMAT)
             ).alias("last_update"),
         )
     )

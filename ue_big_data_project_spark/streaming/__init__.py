@@ -1788,7 +1788,8 @@ def merge_ingest_stream(
     :func:`bucketed_merge_ingest_stream` **by default.** Per-batch cost
     here is one key-equi merge join + an O(snapshot) copy-on-write
     rewrite, measured at **30.9× the bytes per batch** of the bucketed/
-    manifest sink at 32 buckets (``scripts/merge_scale_check.py``) —
+    manifest sink at 32 buckets (``scripts/merge_scale_check.py``,
+    removed after commit d34de9f) —
     write amplification that scales with SNAPSHOT size, which a
     continuous MERGE against a 100 TB table cannot pay. Keep this form
     for small dimension-table snapshots where a whole-table rewrite is
@@ -1906,7 +1907,8 @@ def bucketed_merge_ingest_stream(
     to the version that last rewrote it. Per-batch cost is
     O(touched buckets), not O(snapshot) — the property that makes a
     continuous MERGE viable against a 100 TB table
-    (``scripts/merge_scale_check.py`` measures the contrast).
+    (``scripts/merge_scale_check.py``, removed after commit d34de9f,
+    measured the contrast).
 
     Same two replay-safety mechanisms as the copy-on-write sink, now
     over (bucket, version) granularity:
