@@ -33,18 +33,17 @@ def sides(spark):
     return left, right
 
 
-def collect_asof(df):
-    return {
-        r["id"]: r["asof"]["rts"].isoformat() for r in df.collect()
-    }
+def collect_asof(df, key="id", ts="rts"):
+    return {r[key]: r["asof"][ts].isoformat() for r in df.collect()}
 
 
 def both(left, right, **kwargs):
     """(asof_join, oracle) results for the same arguments."""
-    kwargs = dict(left_ts="lts", right_ts="rts", left_keys=["id"], **kwargs)
+    kwargs = {"left_ts": "lts", "right_ts": "rts", "left_keys": ["id"], **kwargs}
+    key, ts = kwargs["left_keys"][0], kwargs["right_ts"]
     return (
-        collect_asof(asof_join(left, right, **kwargs)),
-        collect_asof(asof_oracle(left, right, **kwargs)),
+        collect_asof(asof_join(left, right, **kwargs), key, ts),
+        collect_asof(asof_oracle(left, right, **kwargs), key, ts),
     )
 
 
@@ -60,34 +59,55 @@ def test_forward_strategies_agree(spark, sides):
     assert got[2] == "2024-01-01T10:05:00"
 
 
-def _ts_only_right(right):
-    return right.drop("grp")
+def _ts_only_right(left, right):
+    return left, right.drop("grp"), {}
 
 
-def _ts_only_right_with_ties(right):
+def _ts_only_right_with_ties(left, right):
     # Every right timestamp twice, with different payloads: a tie on the
     # matched timestamp must not change which timestamp is matched.
     right = right.drop("grp")
-    return right.unionByName(right.withColumn("payload", F.col("payload") + 1))
+    right = right.unionByName(right.withColumn("payload", F.col("payload") + 1))
+    return left, right, {}
 
 
-# The ids name the timestamp-only strategies these cases were first
-# written for; asof_join now has one plan, checked on both right shapes.
+def _names_that_need_quoting(left, right):
+    # Key, by key and timestamps named with a space and a hyphen, which
+    # SQL text must backtick-quote.
+    names = {
+        "left_ts": "arrival time",
+        "right_ts": "bus time",
+        "left_keys": ["plane id"],
+        "by": ["line-id"],
+    }
+    return (
+        left.toDF("plane id", "arrival time", "line-id"),
+        right.toDF("bus time", "line-id", "payload"),
+        names,
+    )
+
+
+# The first two ids name the timestamp-only strategies these cases were
+# first written for; asof_join now has one plan, checked on each input.
 @pytest.mark.parametrize(
-    "make_right",
+    "make_sides",
     [
         pytest.param(_ts_only_right, id="sorted_array"),
         pytest.param(_ts_only_right_with_ties, id="bucket_minima"),
+        pytest.param(_names_that_need_quoting, id="quoted_names"),
     ],
 )
-def test_ts_only_strategies_strict_and_backward(spark, sides, make_right):
-    left, right = sides
+def test_ts_only_strategies_strict_and_backward(spark, sides, make_sides):
+    left, right, names = make_sides(*sides)
+    names.setdefault("right_ts", "rts")
     for kwargs in [
         {"strict": True},
         {"direction": "backward"},
         {"direction": "backward", "strict": True},
     ]:
-        got, want = both(left, make_right(right), right_cols=["rts"], **kwargs)
+        got, want = both(
+            left, right, right_cols=[names["right_ts"]], **names, **kwargs
+        )
         assert got == want, kwargs
 
 

@@ -151,6 +151,86 @@ def test_q1_asof_plans_no_nested_loop_join(spark):
     assert "CartesianProduct" not in plan, plan
 
 
+# Py4J round trips to build each batch transit request, from reading its
+# feed files to the analysed plan. Each Column operator is one round trip
+# and a SQL text is one however long, so a request rebuilt as Column
+# chains blows these (the Column versions took 1,074 / 168 / 363).
+PLAN_CALL_BUDGETS = {"q1": 250, "q2_stop": 60, "knn": 150}
+
+
+def test_batch_requests_build_in_few_jvm_calls(spark, tmp_path, monkeypatch):
+    """Q1, Q2 for one stop and nearest-5 in the benchmark's call shape,
+    counted in ``ClientServerConnection.send_command`` calls. py4j's
+    object-release messages make one count vary, so the least of three
+    builds is compared."""
+    import json
+
+    import py4j.clientserver
+
+    from ue_big_data_project_spark import schemas, sources
+    from ue_big_data_project_spark.operators import geo
+    from ue_big_data_project_spark.queries import reference as R
+
+    feeds = {
+        "plane_arrival": [
+            {"icao24": "ab1", "callsign": "AF1", "lastSeen": 1_742_200_000},
+            {"icao24": "ab2", "callsign": "AF2", "lastSeen": 1_742_203_600},
+        ],
+        "bus_airport": [
+            {"bus": 38, "heure": "8h", "passages": ["10", "30d"]},
+            {"bus": 98, "heure": "9h", "passages": ["45"]},
+        ],
+        "bus_affluence": [
+            {"numLigne": "23", "stop": "CRQU4", "heure": "6h", "passage": "01"},
+            {"numLigne": "23", "stop": "CRQU4", "heure": "25h", "passage": "40"},
+        ],
+        "bike_station": [
+            {"name": "Gare", "number": "1", "position": {"lon": -1.54, "lat": 47.21},
+             "available_bikes": "5", "available_bike_stands": "10", "bike_stands": 20},
+        ],
+    }
+
+    def read(name):
+        path = tmp_path / f"{name}.json"
+        if not path.exists():
+            path.write_text("".join(json.dumps(r) + "\n" for r in feeds[name]))
+        df = sources.json_file(spark, str(path), schemas.schema(name))
+        return schemas.apply_casts(df, name)
+
+    builds = {
+        "q1": lambda: R.q1_plane_bus_wait(
+            read("plane_arrival"), read("bus_airport"),
+            1_742_166_015, 1_742_252_385, "2025-03-17",
+        ),
+        "q2_stop": lambda: R.q2_affluence_per_hour(read("bus_affluence"), stop="CRQU4"),
+        "knn": lambda: geo.nearest_points(
+            read("bike_station"), "position.lon", "position.lat", -1.55, 47.22,
+            k=5, radius_km=10.0, tie_breaker="name",
+        ),
+    }
+    calls = [0]
+    send = py4j.clientserver.ClientServerConnection.send_command
+
+    def counting_send(self, *args, **kwargs):
+        calls[0] += 1
+        return send(self, *args, **kwargs)
+
+    monkeypatch.setattr(
+        py4j.clientserver.ClientServerConnection, "send_command", counting_send
+    )
+    got = {}
+    for name, build in builds.items():
+        counts = []
+        for _ in range(3):
+            before = calls[0]
+            build()._jdf.queryExecution().analyzed()
+            counts.append(calls[0] - before)
+        got[name] = min(counts)
+    assert all(got.values()), f"no Py4J call was counted: {got}"
+    over = {k: v for k, v in got.items() if v > PLAN_CALL_BUDGETS[k]}
+    assert not over, f"JVM calls {got} over budget {PLAN_CALL_BUDGETS}"
+
+
 def test_pack_sequences_single_shuffle(spark):
     """Sequence packing must shuffle exactly once (on the packing-stream
     key); the window running sum rides the same partitioning."""

@@ -62,6 +62,57 @@ def test_q1_plane_bus_wait(spark, plane_df, bus_df):
     assert "out" not in out  # epoch-range filter (parameterized, §2.11.5)
 
 
+def test_values_are_bound_not_spliced(spark, plane_df, bus_df):
+    """French stop names carry apostrophes; Q2 binds them as parameters.
+    A service date that is not an ISO date never reaches the SQL text."""
+    rows = [
+        ("23", "Pont de l'Arche", "6h", "01"),
+        ("23", "Pont de l'Arche", "6h", "22"),
+        ("23", "Pont de l'Arche", "25h", "40"),
+        ("23", "Pont de l''Arche", "7h", "05"),
+        ("23", "Gare", "6h", "09"),
+    ]
+    df = spark.createDataFrame(
+        rows, "numLigne string, stop string, heure string, passage string"
+    )
+    want: dict[str, int] = {}
+    for _, stop, heure, _ in rows:
+        if stop == "Pont de l'Arche":
+            hour = f"{int(heure[:-1]) % 24:02d}:00"
+            want[hour] = want.get(hour, 0) + 1
+    got = {
+        r["hour"]: r["bus_count"]
+        for r in R.q2_affluence_per_hour(df, stop="Pont de l'Arche").collect()
+    }
+    assert got == want == {"06:00": 2, "01:00": 1}
+    with pytest.raises(ValueError):
+        R.q1_plane_bus_wait(
+            plane_df, bus_df, 1_742_166_015, 1_742_252_385, "2025-03-17' OR '1"
+        )
+
+
+def test_cached_inputs_stay_cached(spark):
+    """``spark.sql`` drops the temp view it registers for each DataFrame
+    argument, and dropping a view uncaches a DataFrame with the same
+    plan; Q2 and ``asof_join`` must leave a cached input cached."""
+    from ue_big_data_project_spark.operators.asof import asof_join
+
+    aff = spark.createDataFrame(
+        [("23", "CRQU4", "6h", "01")],
+        "numLigne string, stop string, heure string, passage string",
+    )
+    left = spark.sql("SELECT 1L AS id, TIMESTAMP'2025-03-17 08:00' AS lts")
+    right = spark.sql("SELECT TIMESTAMP'2025-03-17 08:30' AS rts")
+    inputs = [df.cache() for df in (aff, left, right)]
+    try:
+        assert R.q2_affluence_per_hour(aff, stop="CRQU4").count() == 1
+        assert asof_join(left, right, "lts", "rts", ["id"]).count() == 1
+        assert all(df.storageLevel.useMemory for df in inputs)
+    finally:
+        for df in inputs:
+            df.unpersist()
+
+
 def test_q2_affluence_counts_rows_not_chars(spark):
     df = spark.createDataFrame(
         [

@@ -1,9 +1,14 @@
 """Scalar function kit — native Catalyst expressions first.
 
 Every scalar the reference uses (SURVEY §2.9/§2.10) re-expressed as
-JVM-side column expressions so they stay inside whole-stage codegen.
-The reference's three row-at-a-time Python UDFs are replaced where the
-semantics allow:
+JVM-side expressions so they stay inside whole-stage codegen. The
+scalars of the batch transit queries are SQL fragments: each takes SQL
+expressions (usually quoted column names, see ``ident``) and returns SQL
+text for ``selectExpr``/``where``/``spark.sql``, or for ``F.expr`` where
+a ``Column`` is needed. A fragment reaches the JVM in one call however
+long it is, where a ``Column`` chain pays one Py4J round trip per
+operator. The reference's three row-at-a-time Python UDFs are replaced
+where the semantics allow:
 
 - U2 ``compute_bar_udf`` (src/bike_consumer.py:103-122) → ``occupancy_bar``
   built from ``repeat``/``concat`` (pure expression, no Python worker).
@@ -14,6 +19,8 @@ semantics allow:
 """
 
 from __future__ import annotations
+
+import math
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -40,7 +47,28 @@ def sql_round(expr: str, scale: int) -> str:
     return f"floor(({expr}) * {k} + 0.5) / {k}"
 
 
-def hour_norm(heure: Column | str) -> Column:
+def ident(name: str) -> str:
+    """``name`` as one backtick-quoted SQL identifier; a backtick inside
+    it is doubled."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def col_path(name: str) -> str:
+    """A column path as ``F.col`` reads it, each part quoted:
+    ``"position.lon"`` → ``"`position`.`lon`"``."""
+    return ".".join(ident(p) for p in name.split("."))
+
+
+def double_lit(x: float) -> str:
+    """``x`` as an exact DOUBLE literal (``47.2154D``); Spark parses a
+    bare ``47.2154`` as DECIMAL."""
+    x = float(x)
+    if not math.isfinite(x):
+        raise ValueError(f"not a finite number: {x!r}")
+    return f"{x!r}D"
+
+
+def hour_norm(heure: str) -> str:
     """``"25h"`` → 1: strip the 'h' suffix and normalize modulo 24.
 
     TAN uses 24h/25h for after-midnight service (reference:
@@ -48,15 +76,14 @@ def hour_norm(heure: Column | str) -> Column:
     A malformed hour (``"xh"``) is null, as the reference's non-ANSI cast
     made it, instead of failing the query under ANSI mode.
     """
-    c = F.col(heure) if isinstance(heure, str) else heure
-    return F.pmod(F.regexp_replace(c, "h", "").try_cast("int"), F.lit(24))
+    return f"pmod(try_cast(regexp_replace({heure}, 'h', '') AS INT), 24)"
 
 
-def hour_bucket(heure: Column | str) -> Column:
+def hour_bucket(heure: str) -> str:
     """``"25h"`` → ``"01:00"`` display bucket (U3's intended output);
     null when the hour is missing or malformed."""
     h = hour_norm(heure)
-    return F.when(h.isNotNull(), F.format_string("%02d:00", h))
+    return f"CASE WHEN {h} IS NOT NULL THEN format_string('%02d:00', {h}) END"
 
 
 def parse_wait_minutes(temps: Column | str) -> Column:
@@ -71,10 +98,9 @@ def parse_wait_minutes(temps: Column | str) -> Column:
     )
 
 
-def digits_only(col: Column | str) -> Column:
+def digits_only(col: str) -> str:
     """Strip every non-digit: ``"50d"`` → 50 (src/plane_naolib_consumer.py:81)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.regexp_replace(c, "[^0-9]", "").try_cast("int")
+    return f"try_cast(regexp_replace({col}, '[^0-9]', '') AS INT)"
 
 
 def occupancy_bar(
@@ -100,42 +126,36 @@ def occupancy_bar(
     ).otherwise(bar)
 
 
-def haversine_km(
-    lon1: Column, lat1: Column, lon2: Column, lat2: Column
-) -> Column:
-    """Great-circle distance in km as a pure column expression.
+def haversine_km(lon1: str, lat1: str, lon2: str, lat2: str) -> str:
+    """Great-circle distance in km.
 
     Internalizes the geo pushdown the reference delegates to the Nantes
     open-data REST API (``within_distance``/``distance`` params,
     src/bike_producer.py:23-40). Stays in whole-stage codegen: no UDF.
     """
-    rlon1, rlat1 = F.radians(lon1), F.radians(lat1)
-    rlon2, rlat2 = F.radians(lon2), F.radians(lat2)
-    dlon = rlon2 - rlon1
-    dlat = rlat2 - rlat1
+    rlat1, rlat2 = f"radians({lat1})", f"radians({lat2})"
+    dlon = f"(radians({lon2}) - radians({lon1}))"
+    dlat = f"({rlat2} - {rlat1})"
     a = (
-        F.sin(dlat / 2) ** 2
-        + F.cos(rlat1) * F.cos(rlat2) * F.sin(dlon / 2) ** 2
+        f"pow(sin({dlat} / 2), 2)"
+        f" + cos({rlat1}) * cos({rlat2}) * pow(sin({dlon} / 2), 2)"
     )
-    return F.lit(2 * EARTH_RADIUS_KM) * F.asin(F.sqrt(a))
+    return f"{double_lit(2 * EARTH_RADIUS_KM)} * asin(sqrt({a}))"
 
 
-def epoch_to_ts(epoch_s: Column | str) -> Column:
+def epoch_to_ts(epoch_s: str) -> str:
     """Unix epoch seconds → timestamp (src/plane_naolib_consumer.py:61)."""
-    c = F.col(epoch_s) if isinstance(epoch_s, str) else epoch_s
-    return F.timestamp_seconds(c)
+    return f"timestamp_seconds({epoch_s})"
 
 
-def minutes_between(later: Column, earlier: Column) -> Column:
+def minutes_between(later: str, earlier: str) -> str:
     """Whole minutes between two timestamps (src/plane_naolib_consumer.py:96-99)."""
-    return (
-        (F.unix_timestamp(later) - F.unix_timestamp(earlier)) / 60
-    ).cast("int")
+    return f"CAST((unix_timestamp({later}) - unix_timestamp({earlier})) / 60 AS INT)"
 
 
-def french_time(ts: Column) -> Column:
+def french_time(ts: str) -> str:
     """``14h05m`` display format (src/plane_naolib_consumer.py:111)."""
-    return F.date_format(ts, "H'h'mm'm'")
+    return f"date_format({ts}, 'H''h''mm''m''')"
 
 
 def hex_digit_value(c: Column) -> Column:

@@ -10,8 +10,9 @@ ranking them: for one day of Q1 that is ≈ 862 k pairs for ≈ 9.6 k rows.
 ``asof_join`` keeps the reference semantics with one plan and no join:
 both sides are unioned on one time column, sorted, and each left row
 takes the last right row seen so far (a running ``last(ignorenulls)``
-window). ``tests/test_asof.py`` checks it against the reference
-formulation.
+window). The plan is one SQL text, so building it costs a few JVM
+calls however many columns it names. ``tests/test_asof.py`` checks it
+against the reference formulation.
 
 ``asof_join_stream`` is the streaming twin (custom stateful operator).
 """
@@ -20,8 +21,10 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ue_big_data_project_spark.functions import ident
 
 
 def asof_join(
@@ -72,34 +75,44 @@ def asof_join(
     # Tie rank: the side with the lower rank sorts first at equal time.
     left_rank, right_rank = (0, 1) if strict else (1, 0)
 
-    lrows = left.dropna(subset=[left_ts, *by]).select(
-        *group_cols, F.col(left_ts).alias("_t"), F.lit(left_rank).alias("_o")
-    )
-    rrows = right.dropna(subset=[right_ts, *by]).select(
-        *by,
-        F.col(right_ts).alias("_t"),
-        F.lit(right_rank).alias("_o"),
-        F.struct(*right_cols).alias("_p"),
-    )
-    t = F.col("_t").desc() if fwd else F.col("_t").asc()
-    w = (
-        Window.partitionBy(*by)
-        .orderBy(t, F.col("_o"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    out = (
-        lrows.unionByName(rrows, allowMissingColumns=True)
-        .withColumn("_p", F.last("_p", ignorenulls=True).over(w))
-        .filter((F.col("_o") == left_rank) & F.col("_p").isNotNull())
-    )
+    def q(name: str) -> str:
+        # Braces are doubled because spark.sql formats the text when it
+        # is given DataFrames (``{l}``, ``{r}``).
+        return ident(name).replace("{", "{{").replace("}", "}}")
+
+    def present(df: DataFrame, ts: str) -> DataFrame:
+        # Filtered before spark.sql sees it: the temp view spark.sql
+        # registers for a DataFrame uncaches a cached one when dropped,
+        # and a filtered frame's plan is not the cached plan.
+        return df.where(" AND ".join(f"{ident(c)} IS NOT NULL" for c in [ts, *by]))
+
+    lts, rts = q(left_ts), q(right_ts)
+    cols = ", ".join(map(q, group_cols))
+    partition = f"PARTITION BY {', '.join(map(q, by))} " if by else ""
+    tolerance = ""
     if tolerance_seconds:
-        m, lts = F.col("_p")[right_ts], F.col(left_ts)
-        out = out.filter(
-            m <= F.timestamp_add("SECOND", F.lit(tolerance_seconds), lts)
+        tol = int(tolerance_seconds)
+        tolerance = (
+            f" AND _p.{rts} <= timestampadd(SECOND, {tol}, {lts})"
             if fwd
-            else m >= F.timestamp_add("SECOND", F.lit(-tolerance_seconds), lts)
+            else f" AND _p.{rts} >= timestampadd(SECOND, {-tol}, {lts})"
         )
-    return out.select(*group_cols, F.col("_p").alias("asof"))
+    text = f"""
+SELECT {cols}, _p AS asof FROM (
+  SELECT {cols}, _o, last(_p, true) OVER (
+    {partition}ORDER BY _t {"DESC" if fwd else "ASC"}, _o
+    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS _p
+  FROM (
+    SELECT {cols}, {lts} AS _t, {left_rank} AS _o, NULL AS _p FROM {{l}}
+    UNION ALL
+    SELECT {", ".join(q(c) if c in by else "NULL" for c in group_cols)},
+      {rts}, {right_rank}, struct({", ".join(map(q, right_cols))}) FROM {{r}}
+  )
+) WHERE _o = {left_rank} AND _p IS NOT NULL{tolerance}
+"""
+    return left.sparkSession.sql(
+        text, l=present(left, left_ts), r=present(right, right_ts)
+    )
 
 
 # Output schema template for asof_join_stream; the key slot takes the

@@ -3,8 +3,9 @@
 The reference asks the Nantes open-data API to do
 ``within_distance(position, POINT(lon lat), 10km)`` + ``order_by=distance``
 + ``limit=5`` server-side (src/bike_producer.py:23-40). Spark never sees
-the geometry. In this engine the same query is a native column expression
-(``functions.haversine_km``) + TakeOrderedAndProject, so it distributes.
+the geometry. In this engine the same query is a native SQL expression
+(the ``functions.haversine_km`` fragment, one ``F.expr``) +
+TakeOrderedAndProject, so it distributes.
 
 At 100 TB scale, brute-force distance-to-point is a single scan with no
 shuffle (the top-k merge moves k rows per partition). For repeated queries
@@ -17,7 +18,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ue_big_data_project_spark.functions import haversine_km
+from ue_big_data_project_spark.functions import (
+    col_path,
+    double_lit,
+    haversine_km,
+    ident,
+)
 from ue_big_data_project_spark.operators.topk import topk_global
 
 
@@ -33,16 +39,15 @@ def nearest_points(
     dist_col: str = "distance_km",
 ) -> DataFrame:
     """Top-``k`` rows nearest to (center_lon, center_lat), optionally
-    bounded by ``radius_km`` (the API's ``within_distance`` semantics)."""
-    out = df.withColumn(
-        dist_col,
-        haversine_km(
-            F.col(lon_col), F.col(lat_col), F.lit(center_lon), F.lit(center_lat)
-        ),
+    bounded by ``radius_km`` (the API's ``within_distance`` semantics).
+    ``lon_col``/``lat_col`` are column paths, as ``F.col`` reads them."""
+    dist = haversine_km(
+        col_path(lon_col),
+        col_path(lat_col),
+        double_lit(center_lon),
+        double_lit(center_lat),
     )
+    out = df.withColumn(dist_col, F.expr(dist))
     if radius_km is not None:
-        out = out.filter(F.col(dist_col) <= radius_km)
-    order = [F.col(dist_col).asc()]
-    if tie_breaker:
-        order.append(F.col(tie_breaker).asc())
-    return topk_global(out, order, k)
+        out = out.where(f"{ident(dist_col)} <= {double_lit(radius_km)}")
+    return topk_global(out, [dist_col, *([tie_breaker] if tie_breaker else [])], k)

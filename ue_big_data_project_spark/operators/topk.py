@@ -50,6 +50,6 @@ def argmin(
     )
 
 
-def topk_global(df: DataFrame, order_cols: list[Column], k: int) -> DataFrame:
+def topk_global(df: DataFrame, order_cols: list[Column | str], k: int) -> DataFrame:
     """Global top-k → TakeOrderedAndProject (no full sort at scale)."""
     return df.orderBy(*order_cols).limit(k)

@@ -17,6 +17,8 @@ Queries (reference README.md:5-13):
 
 from __future__ import annotations
 
+import datetime
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -45,32 +47,20 @@ def expand_bus_schedule(bus_df: DataFrame, service_date: str) -> DataFrame:
     Mirrors process_bus_data (src/plane_naolib_consumer.py:77-89) but the
     service date is a parameter, not a hard-coded literal (§2.11 bug 5),
     and hour normalization handles the 24h/25h after-midnight encoding.
-    A malformed hour (``"zzh"``) drops the departure and an impossible
-    time (minute ``"75"``) gets a null ``bus_time``, as under the
-    reference's non-ANSI parse, instead of failing the query under ANSI
-    mode; ``asof_join`` skips null times.
+    ``service_date`` must be an ISO date (``ValueError`` otherwise).
+    A malformed hour (``"zzh"``) or an impossible time (minute ``"75"``)
+    gets a null ``bus_time``, as under the reference's non-ANSI parse,
+    instead of failing the query under ANSI mode; ``asof_join`` skips
+    null times.
     """
-    return (
-        bus_df.select(
-            "bus", "heure", F.explode("passages").alias("passage")
-        )
-        .withColumn("dep_hour", hour_norm("heure"))
-        .withColumn("dep_minute", digits_only("passage"))
-        .filter(F.col("dep_hour").isNotNull() & F.col("dep_minute").isNotNull())
-        .withColumn(
-            "bus_time",
-            F.try_to_timestamp(
-                F.concat(
-                    F.lit(service_date),
-                    F.lit(" "),
-                    F.col("dep_hour").cast("string"),
-                    F.lit(":"),
-                    F.lpad(F.col("dep_minute").cast("string"), 2, "0"),
-                    F.lit(":00"),
-                )
-            ),
-        )
-        .select("bus", "bus_time")
+    day = datetime.date.fromisoformat(service_date).isoformat()
+    minute = f"lpad(CAST({digits_only('passage')} AS STRING), 2, '0')"
+    return bus_df.selectExpr(
+        "bus", f"{hour_norm('heure')} AS hour", "explode(passages) AS passage"
+    ).selectExpr(
+        "bus",
+        f"try_to_timestamp(concat('{day}', ' ', CAST(hour AS STRING), ':',"
+        f" {minute}, ':00')) AS bus_time",
     )
 
 
@@ -88,11 +78,9 @@ def q1_plane_bus_wait(
     ``asof_join`` with ``strict=True`` (no pair is built). Epoch range and
     service date are parameters (§2.11 bug 5).
     """
-    planes = (
-        plane_df.withColumn("arrival_time", epoch_to_ts("lastSeen"))
-        .filter(F.col("lastSeen").between(begin_epoch, end_epoch))
-        .select("icao24", "callsign", "arrival_time")
-    )
+    planes = plane_df.where(
+        f"lastSeen BETWEEN {int(begin_epoch)} AND {int(end_epoch)}"
+    ).selectExpr("icao24", "callsign", f"{epoch_to_ts('lastSeen')} AS arrival_time")
     buses = expand_bus_schedule(bus_df, service_date)
     out = asof_join(
         planes,
@@ -103,22 +91,15 @@ def q1_plane_bus_wait(
         right_cols=["bus", "bus_time"],
         strict=True,
     )
-    return out.select(
+    return out.selectExpr(
         "icao24",
         "callsign",
         "arrival_time",
-        F.col("asof.bus").alias("bus"),
-        F.col("asof.bus_time").alias("bus_time"),
-        minutes_between(F.col("asof.bus_time"), F.col("arrival_time")).alias(
-            "wait_minutes"
-        ),
-        french_time(F.col("arrival_time")).alias("arrival_display"),
-        F.concat(
-            minutes_between(F.col("asof.bus_time"), F.col("arrival_time")).cast(
-                "string"
-            ),
-            F.lit("m"),
-        ).alias("wait_display"),
+        "asof.bus AS bus",
+        "asof.bus_time AS bus_time",
+        f"{minutes_between('asof.bus_time', 'arrival_time')} AS wait_minutes",
+        f"{french_time('arrival_time')} AS arrival_display",
+        "concat(CAST(wait_minutes AS STRING), 'm') AS wait_display",
     )
 
 
@@ -137,18 +118,21 @@ def q2_affluence_per_hour(
     passage string, double-counting "22" (§2.11 bug 1; the pure-Python
     variant in cell 2 has the correct per-message count). Hour
     normalization (`"25h"` → `"01:00"`) is a native expression, no UDF
-    (U3 rewrite, SURVEY §2.10).
+    (U3 rewrite, SURVEY §2.10). ``stop`` and ``line`` are bound as
+    parameters, never spliced into the SQL text.
     """
-    df = affluence_df
-    if stop is not None:
-        df = df.filter(F.col("stop") == stop)
-    if line is not None:
-        df = df.filter(F.col("numLigne") == line)
-    return (
-        df.select(hour_bucket("heure").alias("hour"))
-        .groupBy("hour")
-        .agg(F.count(F.lit(1)).alias("bus_count"))
-        .orderBy("hour")
+    args = {k: v for k, v in (("stop", stop), ("line", line)) if v is not None}
+    where = " AND ".join(f"{k} = :{k}" for k in args)
+    # Projected before spark.sql sees it: the temp view spark.sql
+    # registers for a DataFrame uncaches a cached one when dropped.
+    hours = affluence_df.selectExpr(
+        "stop", "numLigne AS line", f"{hour_bucket('heure')} AS hour"
+    )
+    return affluence_df.sparkSession.sql(
+        "SELECT hour, count(1) AS bus_count FROM {df}"
+        f" {'WHERE ' + where if where else ''} GROUP BY hour ORDER BY hour",
+        args=args,
+        df=hours,
     )
 
 

@@ -13,6 +13,8 @@ from __future__ import annotations
 
 from pyspark.sql import types as T
 
+from ue_big_data_project_spark.functions import ident
+
 # --- Q3: live bus positions (src/naolib_consumer.py:37-46) -----------------
 BUS_POSITION = T.StructType(
     [
@@ -135,13 +137,19 @@ def apply_casts(df, source: str):
     """Post-parse cast layer: stringly-typed fields → declared types.
 
     Mirrors the reference's cast-after-parse contract (e.g.
-    src/bike_consumer.py:78-84, src/previous_tp_code.py:141-147).
+    src/bike_consumer.py:78-84, src/previous_tp_code.py:141-147). One
+    ``selectExpr`` keeps every column in place; ``try_cast`` turns a
+    malformed value into null even under ANSI mode, preserving the
+    reference's PERMISSIVE contract.
     """
-    from pyspark.sql import functions as F
-
-    for col, typ in CASTS.get(source, {}).items():
-        if col in df.columns:
-            # try_cast: malformed values → null even under ANSI mode,
-            # preserving the reference's PERMISSIVE contract.
-            df = df.withColumn(col, F.col(col).try_cast(typ))
-    return df
+    casts = CASTS.get(source)
+    if not casts:
+        return df
+    return df.selectExpr(
+        *(
+            f"try_cast({ident(c)} AS {casts[c]}) AS {ident(c)}"
+            if c in casts
+            else ident(c)
+            for c in df.columns
+        )
+    )
