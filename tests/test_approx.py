@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 from ue_big_data_project_spark.observability import (
     executed_scan_metrics as _scan_metrics,
 )
-from ue_big_data_project_spark.session import load_tables
+from ue_big_data_project_spark.queries.tables import load_tables
 
 SF_DIR = "/root/testdata/sf0.001"
 

@@ -58,7 +58,7 @@ def test_string_keys_supported(spark):
 def test_prune_join_exact_vs_plain_join(spark):
     """bloom_prune_join == plain join, row for row (FPs admitted by the
     filter are removed by the join; no true match is dropped)."""
-    from ue_big_data_project_spark.session import load_tables
+    from ue_big_data_project_spark.queries.tables import load_tables
 
     t = load_tables(spark, SF_DIR, ("orders", "lineitem"))
     urgent = (
@@ -78,7 +78,7 @@ def test_prune_actually_filters_probe_side(spark):
     """The filter removes most non-matching probe rows before the join:
     pruned cardinality lands between the true-match count and well under
     the full probe side."""
-    from ue_big_data_project_spark.session import load_tables
+    from ue_big_data_project_spark.queries.tables import load_tables
 
     t = load_tables(spark, SF_DIR, ("orders", "lineitem"))
     urgent = (

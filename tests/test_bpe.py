@@ -70,7 +70,7 @@ def test_merge_table_provenance(spark):
     the sf0.001 documents fixture WITH the end-of-word marker
     (round-12 retrain) — retraining must reproduce it byte-for-byte
     (deterministic sample, deterministic tie-break)."""
-    from ue_big_data_project_spark.session import load_tables
+    from ue_big_data_project_spark.queries.tables import load_tables
 
     d = load_tables(spark, "/root/testdata/sf0.001", ("documents",))[
         "documents"

@@ -10,7 +10,7 @@ import tempfile
 from pyspark.sql import functions as F
 
 from ue_big_data_project_spark import pipelines as P
-from ue_big_data_project_spark.session import load_tables
+from ue_big_data_project_spark.queries.tables import load_tables
 
 SF_DIR = "/root/testdata/sf0.001"
 

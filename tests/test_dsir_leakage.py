@@ -322,11 +322,12 @@ def test_dsir_score_stream_equals_one_shot_and_replays_safely(
     import os
 
     from ue_big_data_project_spark import streaming as ST
+    from ue_big_data_project_spark.streaming import ingest
     from ue_big_data_project_spark.pipelines import (
         dsir_score_increment,
         write_dsir_model,
     )
-    from ue_big_data_project_spark.sources import expire_batches
+    from ue_big_data_project_spark.layout import expire_batches
 
     _, df = _corpus(spark)
     model = str(tmp_path / "model")
@@ -351,12 +352,12 @@ def test_dsir_score_stream_equals_one_shot_and_replays_safely(
         .option("maxFilesPerTrigger", 1)
         .parquet(stage)
     )
-    q = ST.dsir_score_stream(sdf, model, scores)
+    q = ingest.dsir_score_stream(sdf, model, scores)
     ST.run_until_drained(q)
 
     got = {
         (r["doc_id"], r["logw"])
-        for r in ST.read_dsir_scores(spark, scores).collect()
+        for r in ingest.read_dsir_scores(spark, scores).collect()
     }
     want = {
         (r["doc_id"], r["logw"])
@@ -379,7 +380,7 @@ def test_dsir_score_stream_equals_one_shot_and_replays_safely(
     )
     assert {
         (r["doc_id"], r["logw"])
-        for r in ST.read_dsir_scores(spark, scores).collect()
+        for r in ingest.read_dsir_scores(spark, scores).collect()
     } == want
 
     # Retention rides the batch_id layout for free.

@@ -127,6 +127,7 @@ def test_streaming_sink_roundtrip_through_hadoop_branch(
     from pyspark.sql import functions as F
 
     from ue_big_data_project_spark import streaming as ST
+    from ue_big_data_project_spark.streaming import ingest
 
     monkeypatch.setattr(
         fs, "is_local", lambda p: not str(p).startswith("file://")
@@ -152,7 +153,7 @@ def test_streaming_sink_roundtrip_through_hadoop_branch(
         "maxFilesPerTrigger", 1
     ).parquet(stage)
     snap = "file://" + str(tmp_path / "snap")
-    q = ST.bucketed_merge_ingest_stream(
+    q = ingest.bucketed_merge_ingest_stream(
         sdf,
         initial,
         snap,
@@ -162,9 +163,9 @@ def test_streaming_sink_roundtrip_through_hadoop_branch(
         n_buckets=2,
     )
     ST.run_until_drained(q)
-    assert ST._committed_batch_ids(snap + "/_ledger") == [0, 1]
+    assert ingest._committed_batch_ids(snap + "/_ledger") == [0, 1]
     got = {
         r.id: r.bal
-        for r in ST.read_bucketed_merged_snapshot(spark, snap).collect()
+        for r in ingest.read_bucketed_merged_snapshot(spark, snap).collect()
     }
     assert got == {1: 11.0, 2: 20.0, 3: 33.0}

@@ -100,10 +100,10 @@ def test_dedup_ingest_stream_two_micro_batches(spark):
     import time
 
     from ue_big_data_project_spark.streaming import (
-        dedup_ingest_stream,
         file_stream,
         run_until_drained,
     )
+    from ue_big_data_project_spark.streaming.ingest import dedup_ingest_stream
 
     with tempfile.TemporaryDirectory() as d:
         src = os.path.join(d, "src")
@@ -153,10 +153,10 @@ def test_dedup_ingest_stream_crash_replay_at_every_write(spark, failpoint):
     index layout + own-batch exclusion must make every replay
     byte-identical instead."""
     from ue_big_data_project_spark.streaming import (
-        dedup_ingest_stream,
         file_stream,
         run_until_drained,
     )
+    from ue_big_data_project_spark.streaming.ingest import dedup_ingest_stream
 
     with tempfile.TemporaryDirectory() as d:
         src = os.path.join(d, "src")
@@ -208,10 +208,10 @@ def test_dedup_ingest_stream_near_dup_across_batches_replay_safe(spark):
     import time
 
     from ue_big_data_project_spark.streaming import (
-        dedup_ingest_stream,
         file_stream,
         run_until_drained,
     )
+    from ue_big_data_project_spark.streaming.ingest import dedup_ingest_stream
 
     with tempfile.TemporaryDirectory() as d:
         src = os.path.join(d, "src")
@@ -311,10 +311,10 @@ def test_dedup_ingest_stream_bloom_sidecar(spark):
         load_bloom,
     )
     from ue_big_data_project_spark.streaming import (
-        dedup_ingest_stream,
         file_stream,
         run_until_drained,
     )
+    from ue_big_data_project_spark.streaming.ingest import dedup_ingest_stream
 
     with tempfile.TemporaryDirectory() as d:
         src = os.path.join(d, "src")
@@ -381,10 +381,10 @@ def test_dedup_ingest_stream_bloom_resize_reseeds(spark):
         load_bloom,
     )
     from ue_big_data_project_spark.streaming import (
-        dedup_ingest_stream,
         file_stream,
         run_until_drained,
     )
+    from ue_big_data_project_spark.streaming.ingest import dedup_ingest_stream
 
     with tempfile.TemporaryDirectory() as d:
         src = os.path.join(d, "src")

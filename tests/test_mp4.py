@@ -897,6 +897,7 @@ def test_video_sig_stream_equals_one_shot_guard_and_rewrite(
     import pytest
 
     from ue_big_data_project_spark import streaming as ST
+    from ue_big_data_project_spark.streaming import ingest
     from ue_big_data_project_spark.operators import multimodal as MM
     from ue_big_data_project_spark.session import apply_session_conf
 
@@ -926,7 +927,7 @@ def test_video_sig_stream_equals_one_shot_guard_and_rewrite(
         "maxFilesPerTrigger", 1
     ).parquet(stage)
     idx = os.path.join(root, "vsig")
-    q = ST.video_sig_ingest_stream(
+    q = ingest.video_sig_ingest_stream(
         sdf,
         index_path=idx,
         ledger_dir=os.path.join(root, "_ledger"),

@@ -15,7 +15,7 @@ SF_DIR = "/root/testdata/sf0.001"
 
 @pytest.fixture(scope="module")
 def media(spark):
-    from ue_big_data_project_spark.session import load_tables
+    from ue_big_data_project_spark.queries.tables import load_tables
 
     d = load_tables(spark, SF_DIR, ("documents",))["documents"]
     return MM.attach_media(d)
@@ -931,7 +931,7 @@ def test_dhash_neardup_banding_guard_and_shape(spark):
     """Parameter guard (pigeonhole over 4 bands holds only to Hamming
     3) and output shape: pairs are ordered, Hamming-bounded, and never
     include exact duplicates."""
-    from ue_big_data_project_spark.session import load_tables
+    from ue_big_data_project_spark.queries.tables import load_tables
 
     d = load_tables(spark, "/root/testdata/sf0.001", ("documents",))[
         "documents"
@@ -1005,7 +1005,7 @@ def test_audio_neardup_banding_is_lossless_vs_brute_force(spark):
     checked here directly against an in-process all-pairs sweep."""
     from itertools import combinations
 
-    from ue_big_data_project_spark.session import load_tables
+    from ue_big_data_project_spark.queries.tables import load_tables
 
     d = load_tables(spark, "/root/testdata/sf0.001", ("documents",))[
         "documents"
@@ -1037,7 +1037,7 @@ def test_fp_index_probe_equals_neardup_restriction_and_append(
     index answering like a fresh build of the larger union — banding
     is stateless, so nothing drifts. Runs on the audio fingerprint
     columns to pin the index's column-name generality too."""
-    from ue_big_data_project_spark.session import load_tables
+    from ue_big_data_project_spark.queries.tables import load_tables
 
     d = load_tables(spark, "/root/testdata/sf0.001", ("documents",))[
         "documents"
@@ -1099,7 +1099,8 @@ def test_fp_stream_equals_one_shot_guard_and_rewrite(spark, tmp_path):
     import time
 
     from ue_big_data_project_spark import streaming as ST
-    from ue_big_data_project_spark.session import load_tables
+    from ue_big_data_project_spark.streaming import ingest
+    from ue_big_data_project_spark.queries.tables import load_tables
 
     d = load_tables(spark, "/root/testdata/sf0.001", ("documents",))[
         "documents"
@@ -1131,7 +1132,7 @@ def test_fp_stream_equals_one_shot_guard_and_rewrite(spark, tmp_path):
             .option("maxFilesPerTrigger", 1)
             .parquet(stage)
         )
-        q = ST.fp_ingest_stream(
+        q = ingest.fp_ingest_stream(
             sdf,
             index_path=idx,
             ledger_dir=ledger,
@@ -1198,7 +1199,7 @@ def test_fp_band_stats_flags_hot_bands(spark, tmp_path):
     deliberately constant band (the degenerate all-zero square-wave
     fingerprints) dominates as the hottest band, and exactly top_k
     rows are flagged hot."""
-    from ue_big_data_project_spark.session import load_tables
+    from ue_big_data_project_spark.queries.tables import load_tables
 
     d = load_tables(spark, "/root/testdata/sf0.001", ("documents",))[
         "documents"
@@ -1442,7 +1443,7 @@ def test_fused_attach_hash_edges_match_composition(spark):
     to the two-stage compositions they replace in the query paths —
     the §4.1 boundary diet may remove the payload's JVM round-trip,
     never change a bit of the hashes."""
-    from ue_big_data_project_spark.session import load_tables
+    from ue_big_data_project_spark.queries.tables import load_tables
 
     d = load_tables(spark, SF_DIR, ("documents",))["documents"]
     ids = d.select("doc_id")

@@ -5,7 +5,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from ue_big_data_project_spark import observability as OB
-from ue_big_data_project_spark.session import load_tables
+from ue_big_data_project_spark.queries.tables import load_tables
 from ue_big_data_project_spark.streaming import replay_parquet
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -87,7 +87,7 @@ def test_profile_columns_approx_distinct_drops_the_expand(spark):
     envelope and (b) remove the Expand the multi-column exact distinct
     forces — the scan stops re-emitting every row once per profiled
     column."""
-    from ue_big_data_project_spark.observability import profile_columns
+    from ue_big_data_project_spark.quality import profile_columns
 
     df = spark.range(20000).select(
         (F.col("id") % 977).alias("a"),
@@ -113,7 +113,7 @@ def test_check_constraints_verdicts_and_single_pass(spark):
     names rejected, and the whole suite is ONE aggregation pass."""
     import pytest
 
-    from ue_big_data_project_spark.observability import (
+    from ue_big_data_project_spark.quality import (
         Constraint,
         c_completeness,
         c_distinct_ratio,

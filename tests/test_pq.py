@@ -11,7 +11,7 @@ from ue_big_data_project_spark.operators.similarity import (
     pq_encode,
     pq_knn,
 )
-from ue_big_data_project_spark.session import load_tables
+from ue_big_data_project_spark.queries.tables import load_tables
 
 SF_DIR = "/root/testdata/sf0.001"
 

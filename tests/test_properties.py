@@ -343,7 +343,7 @@ def test_sessionize_invariants(spark, rows, gap):
     )
 )
 def test_zorder_key_matches_python_morton(spark, xs):
-    from ue_big_data_project_spark.sources import zorder_key
+    from ue_big_data_project_spark.layout import zorder_key
 
     df = spark.createDataFrame(xs, "x int, y int")
     bounds = {"x": list(range(1, 256)), "y": list(range(1, 256))}
@@ -519,7 +519,7 @@ def test_streaming_asof_equals_batch_on_random_batch_splits(
     import json as _json
     import os as _os
 
-    from ue_big_data_project_spark.operators.asof import asof_join_stream
+    from ue_big_data_project_spark.queries.events import asof_join_stream
 
     tmp = str(tmp_path_factory.mktemp("asof_prop"))
     path = _os.path.join(tmp, "in")

@@ -90,7 +90,7 @@ def test_indexed_bm25_matches_one_shot_and_prunes(spark, tmp_path):
         build_text_index,
         bm25_topk,
     )
-    from ue_big_data_project_spark.session import load_tables
+    from ue_big_data_project_spark.queries.tables import load_tables
 
     docs = load_tables(spark, "/root/testdata/sf0.001", ("documents",))[
         "documents"
@@ -176,7 +176,7 @@ def test_bm25_oracle_normalizes_raw_query_text(spark):
 
     from ue_big_data_project_spark.operators.retrieval import bm25_topk
     from ue_big_data_project_spark.queries.textops import _bm25_sql
-    from ue_big_data_project_spark.session import load_tables
+    from ue_big_data_project_spark.queries.tables import load_tables
     from tests.test_oracle import duck_con, normalize
 
     raw = ("  Spark   JOIN  window ", "CUSTOMER  order   Data")
@@ -327,7 +327,7 @@ def test_indexed_bm25_large_batch_semi_join_fallback(spark, tmp_path):
         bm25_topk_indexed,
         build_text_index,
     )
-    from ue_big_data_project_spark.session import load_tables
+    from ue_big_data_project_spark.queries.tables import load_tables
 
     docs = load_tables(spark, "/root/testdata/sf0.001", ("documents",))[
         "documents"
@@ -367,7 +367,7 @@ def test_append_text_index_equals_fresh_full_build(spark, tmp_path):
         bm25_topk_indexed,
         build_text_index,
     )
-    from ue_big_data_project_spark.session import load_tables
+    from ue_big_data_project_spark.queries.tables import load_tables
 
     docs = load_tables(spark, "/root/testdata/sf0.001", ("documents",))[
         "documents"
@@ -433,7 +433,7 @@ def test_compaction_preserves_appended_index_layout_and_answers(
         bm25_topk_indexed,
         build_text_index,
     )
-    from ue_big_data_project_spark.sources import compact_small_files
+    from ue_big_data_project_spark.layout import compact_small_files
 
     idx = str(tmp_path / "idx")
     compacted = str(tmp_path / "compacted")
@@ -485,7 +485,7 @@ def test_rewrite_text_index_equals_fresh_kept_build(spark, tmp_path):
         build_text_index,
         rewrite_text_index,
     )
-    from ue_big_data_project_spark.session import load_tables
+    from ue_big_data_project_spark.queries.tables import load_tables
 
     docs = load_tables(spark, "/root/testdata/sf0.001", ("documents",))[
         "documents"
@@ -538,13 +538,14 @@ def test_bm25_stream_equals_one_shot_guard_and_rewrite(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from ue_big_data_project_spark import streaming as ST
+    from ue_big_data_project_spark.streaming import ingest
     from ue_big_data_project_spark.operators.retrieval import (
         append_text_index,
         bm25_topk_indexed,
         build_text_index,
         rewrite_text_index,
     )
-    from ue_big_data_project_spark.session import load_tables
+    from ue_big_data_project_spark.queries.tables import load_tables
 
     docs = load_tables(spark, "/root/testdata/sf0.001", ("documents",))[
         "documents"
@@ -579,7 +580,7 @@ def test_bm25_stream_equals_one_shot_guard_and_rewrite(spark, tmp_path):
             .parquet(stage)
         )
         ST.run_until_drained(
-            ST.bm25_ingest_stream(sdf, idx, ledger, n_buckets=8)
+            ingest.bm25_ingest_stream(sdf, idx, ledger, n_buckets=8)
         )
 
     drain()

@@ -21,7 +21,7 @@ SF_DIR = "/root/testdata/sf0.001"
 
 @pytest.fixture(scope="module")
 def events(spark):
-    from ue_big_data_project_spark.session import load_tables
+    from ue_big_data_project_spark.queries.tables import load_tables
 
     return load_tables(spark, SF_DIR, ("events",))["events"]
 

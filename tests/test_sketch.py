@@ -334,6 +334,7 @@ def test_streaming_hll_rollup_multibatch_and_replay(spark, tmp_path):
     at-least-once case) must leave the sidecar byte-equivalent — merge
     idempotence is the exactly-once mechanism, no ledger needed."""
     from ue_big_data_project_spark import streaming as ST
+    from ue_big_data_project_spark.streaming import ingest
 
     df = _ids(spark, 3000, "ev")
     stage = str(tmp_path / "stage")
@@ -344,13 +345,13 @@ def test_streaming_hll_rollup_multibatch_and_replay(spark, tmp_path):
         .parquet(stage)
     )
     reg_dir = str(tmp_path / "registers")
-    q = ST.hll_ingest_stream(sdf, reg_dir, ["grp"], "v", p=6)
+    q = ingest.hll_ingest_stream(sdf, reg_dir, ["grp"], "v", p=6)
     ST.run_until_drained(q)
     import os
 
     parts = [p for p in os.listdir(reg_dir) if p.startswith("batch_id=")]
     assert len(parts) == 3, parts  # real multi-batch ingest
-    est = ST.read_hll_rollup(spark, reg_dir, ["grp"], p=6)
+    est = ingest.read_hll_rollup(spark, reg_dir, ["grp"], p=6)
     whole = SK.hll_estimate(
         SK.hll_registers(df, ["grp"], F.col("v"), p=6), ["grp"], p=6
     )
@@ -361,7 +362,7 @@ def test_streaming_hll_rollup_multibatch_and_replay(spark, tmp_path):
     SK.hll_registers(df, ["grp"], F.col("v"), p=6).write.mode(
         "overwrite"
     ).parquet(os.path.join(reg_dir, "batch_id=0"))
-    est2 = ST.read_hll_rollup(spark, reg_dir, ["grp"], p=6)
+    est2 = ingest.read_hll_rollup(spark, reg_dir, ["grp"], p=6)
     assert _rows(est2) == _rows(whole)
 
 
@@ -411,6 +412,7 @@ def test_streaming_qhist_rollup_and_ledger(spark, tmp_path):
     a replayed foreachBatch invocation a no-op (contrast with the
     ledger-free HLL stream above)."""
     from ue_big_data_project_spark import streaming as ST
+    from ue_big_data_project_spark.streaming import ingest
 
     df = _qvals(spark, 6000, 37, tag_groups=2)
     stage = str(tmp_path / "stage")
@@ -422,9 +424,9 @@ def test_streaming_qhist_rollup_and_ledger(spark, tmp_path):
     )
     cnt_dir = str(tmp_path / "counters")
     led_dir = str(tmp_path / "ledger")
-    q = ST.qhist_ingest_stream(sdf, cnt_dir, led_dir, ["grp"], "v")
+    q = ingest.qhist_ingest_stream(sdf, cnt_dir, led_dir, ["grp"], "v")
     ST.run_until_drained(q)
-    rolled = ST.read_qhist_rollup(spark, cnt_dir, ["grp"])
+    rolled = ingest.read_qhist_rollup(spark, cnt_dir, ["grp"])
     whole = SK.qhist_counters(df, ["grp"], F.col("v"))
     assert _rows(rolled) == _rows(whole)
     # Quantiles off the rolled counters == quantiles off a fresh build.
@@ -438,9 +440,9 @@ def test_streaming_qhist_rollup_and_ledger(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(stage)
     )
-    q2 = ST.qhist_ingest_stream(sdf2, cnt_dir, led_dir, ["grp"], "v")
+    q2 = ingest.qhist_ingest_stream(sdf2, cnt_dir, led_dir, ["grp"], "v")
     ST.run_until_drained(q2)
-    assert _rows(ST.read_qhist_rollup(spark, cnt_dir, ["grp"])) == _rows(
+    assert _rows(ingest.read_qhist_rollup(spark, cnt_dir, ["grp"])) == _rows(
         whole
     )
 

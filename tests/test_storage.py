@@ -8,11 +8,11 @@ import tempfile
 
 from pyspark.sql import functions as F
 
-from ue_big_data_project_spark import sources as S
+from ue_big_data_project_spark import layout as L
 from ue_big_data_project_spark.observability import (
     executed_scan_metrics as _scan_metrics,
 )
-from ue_big_data_project_spark.session import load_tables
+from ue_big_data_project_spark.queries.tables import load_tables
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -35,13 +35,13 @@ def test_bucketed_join_has_no_exchange(spark):
     t = load_tables(spark, SF_DIR, ("orders", "lineitem"))
     _reset_table(spark, "li_bucketed")
     _reset_table(spark, "ord_bucketed")
-    S.write_bucketed(
+    L.write_bucketed(
         t["lineitem"].select("l_orderkey", "l_quantity"),
         "li_bucketed",
         ["l_orderkey"],
         num_buckets=4,
     )
-    S.write_bucketed(
+    L.write_bucketed(
         t["orders"].select("o_orderkey", "o_totalprice"),
         "ord_bucketed",
         ["o_orderkey"],
@@ -82,7 +82,7 @@ def test_partitioned_write_prunes(spark):
     e = load_tables(spark, SF_DIR, ("events",))["events"]
     with tempfile.TemporaryDirectory() as d:
         path = os.path.join(d, "events_by_type")
-        S.write_partitioned(e, path, ["event_type"])
+        L.write_partitioned(e, path, ["event_type"])
         back = spark.read.parquet(path).filter(F.col("event_type") == "click")
         n = back.count()
         assert n == e.filter(F.col("event_type") == "click").count()
@@ -146,7 +146,7 @@ def test_range_sorted_files_are_disjoint_and_skippable(spark):
     li = load_tables(spark, SF_DIR, ("lineitem",))["lineitem"]
     with tempfile.TemporaryDirectory() as d:
         out = os.path.join(d, "li_sorted")
-        S.write_range_sorted(
+        L.write_range_sorted(
             li.select("l_orderkey", "l_shipdate"), out,
             ["l_shipdate"], num_files=8,
         )
@@ -169,7 +169,7 @@ def test_range_sorted_files_are_disjoint_and_skippable(spark):
 def test_zorder_key_is_morton_interleave(spark):
     rows = [(x, y) for x in range(4) for y in range(4)]
     df = spark.createDataFrame(rows, "x int, y int")
-    key = S.zorder_key(
+    key = L.zorder_key(
         df, ["x", "y"], bits=2,
         bounds={"x": [1, 2, 3], "y": [1, 2, 3]},
     )
@@ -195,7 +195,7 @@ def test_zordered_layout_skips_files_on_either_dimension(spark):
     )
     with tempfile.TemporaryDirectory() as d:
         out = os.path.join(d, "zordered")
-        S.write_zordered(df, out, ["x", "y"], bits=6, num_files=16)
+        L.write_zordered(df, out, ["x", "y"], bits=6, num_files=16)
         files = _parquet_files(out)
         assert len(files) == 16
         for col in ("x", "y"):
@@ -218,7 +218,7 @@ def test_compact_small_files(spark):
         small, out = os.path.join(d, "small"), os.path.join(d, "compacted")
         li.repartition(64).write.parquet(small)
         assert len(_parquet_files(small)) == 64
-        n = S.compact_small_files(
+        n = L.compact_small_files(
             spark, small, out, target_file_bytes=64 * 1024 * 1024
         )
         files = _parquet_files(out)
@@ -241,7 +241,7 @@ def test_range_sorted_pruning_end_to_end(spark):
     li = load_tables(spark, SF_DIR, ("lineitem",))["lineitem"]
     with tempfile.TemporaryDirectory() as d:
         out = os.path.join(d, "li_sorted")
-        S.write_range_sorted(
+        L.write_range_sorted(
             li.select("l_orderkey", "l_shipdate"), out,
             ["l_shipdate"], num_files=8,
         )
@@ -256,12 +256,12 @@ def test_range_sorted_pruning_end_to_end(spark):
             (F.col("l_shipdate") >= F.lit(lo)) & (F.col("l_shipdate") <= F.lit(hi))
         ).count()
 
-        pruned = S.read_stat_pruned(spark, out, "l_shipdate", lo, hi)
+        pruned = L.read_stat_pruned(spark, out, "l_shipdate", lo, hi)
         assert pruned.count() == expect
         m = _scan_metrics(pruned)
         # File-level skipping: at most the 1-2 boundary-sharing files.
         assert m["numFiles"] <= 2, m
-        kept, n_total = S.prune_parquet_files(out, "l_shipdate", lo, hi)
+        kept, n_total = L.prune_parquet_files(out, "l_shipdate", lo, hi)
         assert n_total == 8 and m["numFiles"] == len(kept)
 
         # Row-group-level skipping through the vanilla full-listing path:
@@ -284,9 +284,9 @@ def test_zordered_pruning_end_to_end(spark):
     )
     with tempfile.TemporaryDirectory() as d:
         out = os.path.join(d, "zordered")
-        S.write_zordered(df, out, ["x", "y"], bits=6, num_files=16)
+        L.write_zordered(df, out, ["x", "y"], bits=6, num_files=16)
         for col in ("x", "y"):
-            pruned = S.read_stat_pruned(spark, out, col, 0, 7)
+            pruned = L.read_stat_pruned(spark, out, col, 0, 7)
             assert pruned.count() == 64 * 8
             m = _scan_metrics(pruned)
             assert m["numFiles"] < 16, (col, m)
@@ -303,14 +303,14 @@ def test_parquet_file_stats_resolve_leaf_columns_on_nested_schema(spark):
             "SELECT named_struct('a', id * 2, 'b', id + 1) AS s, "
             "id * 100 AS ts FROM range(10)"
         ).coalesce(1).write.parquet(out)
-        stats = S.parquet_file_stats(out, "ts")
+        stats = L.parquet_file_stats(out, "ts")
         assert len(stats) == 1
         _, mn, mx = stats[0]
         assert (mn, mx) == (0, 900), (mn, mx)  # ts bounds, not s.b's
-        kept, total = S.prune_parquet_files(out, "ts", 1000, 2000)
+        kept, total = L.prune_parquet_files(out, "ts", 1000, 2000)
         assert (len(kept), total) == (0, 1)
         # Unknown column: kept conservatively, no IndexError.
-        kept2, _ = S.prune_parquet_files(out, "nope", 0, 1)
+        kept2, _ = L.prune_parquet_files(out, "nope", 0, 1)
         assert len(kept2) == 1
 
 
@@ -334,7 +334,7 @@ def test_parquet_file_stats_remote_branch_fs_relative_paths(
         monkeypatch.setattr(
             fs, "is_local", lambda p: not str(p).startswith("file://")
         )
-        stats = S.parquet_file_stats("file://" + out, "ts")
+        stats = L.parquet_file_stats("file://" + out, "ts")
         assert len(stats) == 1
         _, mn, mx = stats[0]
         assert (mn, mx) == (0, 900), (mn, mx)
@@ -353,12 +353,12 @@ def test_read_stat_pruned_hive_partitioned_layout(spark):
         out = os.path.join(d, "part")
         df.write.partitionBy("cell").parquet(out)
         # Predicate on the PARTITION column: previously AnalysisException.
-        got = S.read_stat_pruned(spark, out, "cell", 1, 2)
+        got = L.read_stat_pruned(spark, out, "cell", 1, 2)
         assert sorted(r["v"] % 4 for r in got.collect()) == sorted(
             [1] * 25 + [2] * 25
         )
         # Predicate on a data column: partition columns still present.
-        got2 = S.read_stat_pruned(spark, out, "v", 10, 19)
+        got2 = L.read_stat_pruned(spark, out, "v", 10, 19)
         assert "cell" in got2.columns and got2.count() == 10
 
 
@@ -397,7 +397,7 @@ def test_compact_small_files_partitioned_count_and_sort(spark):
         li.select("l_returnflag", "l_orderkey", "l_quantity").repartition(
             16
         ).write.partitionBy("l_returnflag").parquet(small)
-        n = S.compact_small_files(
+        n = L.compact_small_files(
             spark,
             small,
             out,
@@ -437,13 +437,13 @@ def test_bloom_sidecar_prunes_point_lookups(spark):
             .write.parquet(out)
         )
         total_before = spark.read.parquet(out).count()
-        side = S.write_bloom_sidecar(spark, out, "l_orderkey")
+        side = L.write_bloom_sidecar(spark, out, "l_orderkey")
         assert os.path.basename(side).startswith("_bloom")
         # Hidden sidecar: a vanilla read of the layout is unchanged.
         assert spark.read.parquet(out).count() == total_before
 
         keys = [r.l_orderkey for r in li.select("l_orderkey").distinct().limit(3).collect()]
-        pruned = S.read_bloom_pruned(spark, out, "l_orderkey", keys)
+        pruned = L.read_bloom_pruned(spark, out, "l_orderkey", keys)
         want = sorted(
             map(tuple, spark.read.parquet(out)
                 .where(F.col("l_orderkey").isin(keys)).collect())
@@ -461,20 +461,20 @@ def test_bloom_sidecar_absent_keys_and_empty(spark):
     with tempfile.TemporaryDirectory() as d:
         out = os.path.join(d, "li")
         li.select("l_orderkey").repartition(4, "l_orderkey").write.parquet(out)
-        S.write_bloom_sidecar(spark, out, "l_orderkey")
+        L.write_bloom_sidecar(spark, out, "l_orderkey")
         # Keys no file contains: every file bloom-rejects, zero scanned.
-        gone = S.read_bloom_pruned(
+        gone = L.read_bloom_pruned(
             spark, out, "l_orderkey", [10**15, 10**15 + 1]
         )
         assert gone.count() == 0
         # Empty lookup list: empty result, schema intact.
-        empty = S.read_bloom_pruned(spark, out, "l_orderkey", [])
+        empty = L.read_bloom_pruned(spark, out, "l_orderkey", [])
         assert empty.count() == 0 and empty.columns == ["l_orderkey"]
         # Asking for a column with no sidecar is an explicit error.
         import pytest as _pt
 
         with _pt.raises(Exception):
-            S.read_bloom_pruned(spark, out, "l_partkey", [1])
+            L.read_bloom_pruned(spark, out, "l_partkey", [1])
 
 
 def test_bloom_pruned_read_refuses_hive_partitioned_layouts(spark):
@@ -489,7 +489,7 @@ def test_bloom_pruned_read_refuses_hive_partitioned_layouts(spark):
         import pytest as _pt
 
         with _pt.raises(ValueError, match="hive partition"):
-            S.read_bloom_pruned(spark, out, "l_orderkey", [1])
+            L.read_bloom_pruned(spark, out, "l_orderkey", [1])
 
 
 def test_bloom_pruned_read_detects_stale_sidecar(spark):
@@ -503,18 +503,18 @@ def test_bloom_pruned_read_detects_stale_sidecar(spark):
     with tempfile.TemporaryDirectory() as d:
         out = os.path.join(d, "li")
         li.select("l_orderkey").limit(500).repartition(2).write.parquet(out)
-        S.write_bloom_sidecar(spark, out, "l_orderkey")
+        L.write_bloom_sidecar(spark, out, "l_orderkey")
         # Fresh sidecar: reads fine.
-        S.read_bloom_pruned(spark, out, "l_orderkey", [1]).count()
+        L.read_bloom_pruned(spark, out, "l_orderkey", [1]).count()
         # Append a data file the sidecar has never seen.
         spark.createDataFrame(
             [(999_999_999,)], "l_orderkey long"
         ).write.mode("append").parquet(out)
         with _pt.raises(ValueError, match="STALE"):
-            S.read_bloom_pruned(spark, out, "l_orderkey", [999_999_999])
+            L.read_bloom_pruned(spark, out, "l_orderkey", [999_999_999])
         # Re-indexing clears it — and the appended key is found.
-        S.write_bloom_sidecar(spark, out, "l_orderkey")
-        found = S.read_bloom_pruned(spark, out, "l_orderkey", [999_999_999])
+        L.write_bloom_sidecar(spark, out, "l_orderkey")
+        found = L.read_bloom_pruned(spark, out, "l_orderkey", [999_999_999])
         assert found.count() == 1
 
 
@@ -531,11 +531,11 @@ def test_bloom_sidecar_registers_all_null_files(spark):
         spark.createDataFrame(
             [(7,), (8,)], "k long"
         ).coalesce(1).write.mode("append").parquet(out)
-        S.write_bloom_sidecar(spark, out, "k")
-        got = S.read_bloom_pruned(spark, out, "k", [7])
+        L.write_bloom_sidecar(spark, out, "k")
+        got = L.read_bloom_pruned(spark, out, "k", [7])
         assert [r.k for r in got.collect()] == [7]
         # NULL-only keys: nothing admitted, nothing scanned, no raise.
-        assert S.read_bloom_pruned(spark, out, "k", [12345]).count() == 0
+        assert L.read_bloom_pruned(spark, out, "k", [12345]).count() == 0
 
 
 def test_expire_batches_drops_oldest_partitions(spark):
@@ -552,7 +552,7 @@ def test_expire_batches_drops_oldest_partitions(spark):
             p: os.path.getmtime(os.path.join(out, "batch_id=4", p))
             for p in os.listdir(os.path.join(out, "batch_id=4"))
         }
-        dropped = S.expire_batches(spark, out, keep_last=2)
+        dropped = L.expire_batches(spark, out, keep_last=2)
         assert dropped == [0, 1, 2]
         got = sorted(r.v for r in spark.read.parquet(out).drop("batch_id").collect())
         assert got == [30, 31, 32, 40, 41, 42]
@@ -563,5 +563,5 @@ def test_expire_batches_drops_oldest_partitions(spark):
         }
         assert after == before
         # keep_last larger than history: no-op; missing layout: empty.
-        assert S.expire_batches(spark, out, keep_last=9) == []
-        assert S.expire_batches(spark, os.path.join(d, "nope"), 1) == []
+        assert L.expire_batches(spark, out, keep_last=9) == []
+        assert L.expire_batches(spark, os.path.join(d, "nope"), 1) == []

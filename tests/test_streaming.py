@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ue_big_data_project_spark import streaming as S
+from ue_big_data_project_spark.streaming import ingest
 
 EVENTS_SCHEMA = T.StructType(
     [
@@ -323,7 +324,7 @@ def test_incremental_rollup_multi_batch(spark, tmp_path):
     old = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "4")
     try:
-        q = S.incremental_windowed_rollup(
+        q = ingest.incremental_windowed_rollup(
             sdf,
             ts_col="ts",
             window_duration="15 minutes",
@@ -337,7 +338,7 @@ def test_incremental_rollup_multi_batch(spark, tmp_path):
         spark.conf.set("spark.sql.shuffle.partitions", old)
     got = {
         (r["window_us"], r["event_type"]): r["n_events"]
-        for r in S.read_rollup(spark, snap).collect()
+        for r in ingest.read_rollup(spark, snap).collect()
     }
     bdf = spark.read.schema(EVENTS_SCHEMA).json(path)
     want = {
@@ -363,7 +364,7 @@ def test_streaming_asof_join_multi_batch_improvement(spark, tmp_path):
     RE-matched when a closer (but still at-or-before) click arrives late
     in a later batch; out-of-tolerance and never-matched purchases stay
     absent; the final reduce equals the batch as-of."""
-    from ue_big_data_project_spark.operators.asof import asof_join_stream
+    from ue_big_data_project_spark.queries.events import asof_join_stream
 
     batches = [
         # user 1: click @2, purchase @10 -> first match = minute 2.
@@ -417,7 +418,7 @@ def test_streaming_asof_join_state_is_pruned(spark, tmp_path):
     """Watermark-driven pruning: once the watermark passes a purchase,
     the key's retained state shrinks — asserted via the state-store
     metrics of the final progress (total state rows < total events)."""
-    from ue_big_data_project_spark.operators.asof import asof_join_stream
+    from ue_big_data_project_spark.queries.events import asof_join_stream
 
     batches = [
         [row(i, m, "click" if i % 2 else "purchase", user=1)
@@ -465,7 +466,7 @@ def test_ivf_ingest_stream_matches_one_shot_build(spark, tmp_path):
         ivf_knn_indexed,
         kmeans_centroids,
     )
-    from ue_big_data_project_spark.session import load_tables
+    from ue_big_data_project_spark.queries.tables import load_tables
 
     e = load_tables(spark, "/root/testdata/sf0.001", ("embeddings",))[
         "embeddings"
@@ -497,7 +498,7 @@ def test_ivf_ingest_stream_matches_one_shot_build(spark, tmp_path):
             .option("maxFilesPerTrigger", 1)
             .parquet(src)
         )
-        S.run_until_drained(S.ivf_ingest_stream(sdf, idx, ledger))
+        S.run_until_drained(ingest.ivf_ingest_stream(sdf, idx, ledger))
 
     run_stream()
 
@@ -541,7 +542,7 @@ def test_ivf_ingest_stream_refuses_flat_layout(spark, tmp_path):
     from ue_big_data_project_spark.operators.similarity import (
         build_ivf_index,
     )
-    from ue_big_data_project_spark.session import load_tables
+    from ue_big_data_project_spark.queries.tables import load_tables
 
     e = load_tables(spark, "/root/testdata/sf0.001", ("embeddings",))[
         "embeddings"
@@ -559,7 +560,7 @@ def test_ivf_ingest_stream_refuses_flat_layout(spark, tmp_path):
     _shutil.move(part, _os.path.join(src, "a.parquet"))
 
     sdf = spark.readStream.schema(e.schema).parquet(src)
-    q = S.ivf_ingest_stream(sdf, idx, str(tmp_path / "ledger"))
+    q = ingest.ivf_ingest_stream(sdf, idx, str(tmp_path / "ledger"))
     import pytest
     from pyspark.errors import StreamingQueryException
 
@@ -571,7 +572,7 @@ def test_ivf_ingest_stream_refuses_flat_layout(spark, tmp_path):
 def test_streaming_asof_join_string_keys(spark, tmp_path):
     """The join key's type flows into the output schema: string-keyed
     streams work unchanged (the state machine treats the key opaquely)."""
-    from ue_big_data_project_spark.operators.asof import asof_join_stream
+    from ue_big_data_project_spark.queries.events import asof_join_stream
 
     batches = [
         [row(1, 2, "click", user=1), row(2, 10, "purchase", user=1)],
@@ -719,10 +720,10 @@ def test_merge_ingest_stream_equals_sequential_batch_merges(
 
     initial, batches, sdf, clauses = _merge_stream_fixture(spark, tmp_path)
     snap = str(tmp_path / "snap")
-    q = ST.merge_ingest_stream(sdf, initial, snap, ["id"], **clauses)
+    q = ingest.merge_ingest_stream(sdf, initial, snap, ["id"], **clauses)
     ST.run_until_drained(q)
     got = sorted(
-        map(tuple, ST.read_merged_snapshot(spark, snap).collect())
+        map(tuple, ingest.read_merged_snapshot(spark, snap).collect())
     )
 
     want_df = initial
@@ -755,7 +756,7 @@ def test_merge_ingest_stream_replay_windows_are_safe(spark, tmp_path):
 
     initial, batches, sdf, clauses = _merge_stream_fixture(spark, tmp_path)
     snap = str(tmp_path / "snap")
-    q = ST.merge_ingest_stream(sdf, initial, snap, ["id"], **clauses)
+    q = ingest.merge_ingest_stream(sdf, initial, snap, ["id"], **clauses)
     ST.run_until_drained(q)
     versions = sorted(
         d for d in os.listdir(snap) if d.startswith("v=")
@@ -769,9 +770,9 @@ def test_merge_ingest_stream_replay_windows_are_safe(spark, tmp_path):
         map(tuple, spark.read.parquet(os.path.join(snap, "v=2")).collect())
     )
     # Window 1: every batch is ledger-committed; readers resolve v=2.
-    committed = ST._committed_batch_ids(os.path.join(snap, "_ledger"))
+    committed = ingest._committed_batch_ids(os.path.join(snap, "_ledger"))
     assert committed == [0, 1, 2]
-    got = ST.read_merged_snapshot(spark, snap)
+    got = ingest.read_merged_snapshot(spark, snap)
     assert got.inputFiles()[0].find("v=2") >= 0
 
 
@@ -780,7 +781,7 @@ def test_merge_ingest_stream_prunes_old_versions(spark, tmp_path):
 
     initial, _, sdf, clauses = _merge_stream_fixture(spark, tmp_path)
     snap = str(tmp_path / "snap")
-    q = ST.merge_ingest_stream(
+    q = ingest.merge_ingest_stream(
         sdf, initial, snap, ["id"], retain_versions=1, **clauses
     )
     ST.run_until_drained(q)
@@ -799,13 +800,13 @@ def test_read_merged_snapshot_time_travel(spark, tmp_path):
     initial, batches, sdf, clauses = _merge_stream_fixture(spark, tmp_path)
     snap = str(tmp_path / "snap")
     ST.run_until_drained(
-        ST.merge_ingest_stream(sdf, initial, snap, ["id"], **clauses)
+        ingest.merge_ingest_stream(sdf, initial, snap, ["id"], **clauses)
     )
     # v=0: after batch 0 only — 2 deleted (100 >= 90), 1 updated to 15.
-    v0 = {r.id: r.bal for r in ST.read_merged_snapshot(spark, snap, 0).collect()}
+    v0 = {r.id: r.bal for r in ingest.read_merged_snapshot(spark, snap, 0).collect()}
     assert v0 == {1: 15.0, 3: 30.0}
     with _pt.raises(ValueError, match="not a committed"):
-        ST.read_merged_snapshot(spark, snap, 99)
+        ingest.read_merged_snapshot(spark, snap, 99)
 
 
 def test_bucketed_merge_stream_equals_copy_on_write_sink(spark, tmp_path):
@@ -816,14 +817,14 @@ def test_bucketed_merge_stream_equals_copy_on_write_sink(spark, tmp_path):
 
     initial, batches, sdf, clauses = _merge_stream_fixture(spark, tmp_path)
     snap = str(tmp_path / "bsnap")
-    q = ST.bucketed_merge_ingest_stream(
+    q = ingest.bucketed_merge_ingest_stream(
         sdf, initial, snap, ["id"], n_buckets=4, **clauses
     )
     ST.run_until_drained(q)
     got = sorted(
         map(
             tuple,
-            ST.read_bucketed_merged_snapshot(spark, snap)
+            ingest.read_bucketed_merged_snapshot(spark, snap)
             .select("id", "name", "bal")
             .collect(),
         )
@@ -865,7 +866,7 @@ def test_bucketed_merge_stream_rewrites_only_touched_buckets(
         "maxFilesPerTrigger", 1
     ).parquet(stage)
     snap = str(tmp_path / "snap")
-    q = ST.bucketed_merge_ingest_stream(
+    q = ingest.bucketed_merge_ingest_stream(
         sdf,
         initial,
         snap,
@@ -882,17 +883,17 @@ def test_bucketed_merge_stream_rewrites_only_touched_buckets(
     ]
     assert len(buckets) == 1, buckets
     # Manifest: exactly one bucket at v=1, the rest still at v=0.
-    m = ST._read_manifest(ST._manifest_path(snap, 1))
+    m = ingest._read_manifest(ingest._manifest_path(snap, 1))
     versions = sorted(m.values())
     assert versions.count(0) == 7 and versions.count(1) == 1, versions
     # Semantics intact (7 merged during bootstrap, 9 in batch 1).
-    got = {r.id: r.bal for r in ST.read_bucketed_merged_snapshot(spark, snap).collect()}
+    got = {r.id: r.bal for r in ingest.read_bucketed_merged_snapshot(spark, snap).collect()}
     assert got[7] == 8.0 and got[9] == 11.0 and got[0] == 0.0
     # Replay purity at bucket granularity: recompute batch 1's bucket
     # rewrite from manifest m-0's dirs + batch 1 — identical rows.
     from ue_big_data_project_spark.operators.cdc import merge_into
 
-    m0 = ST._read_manifest(ST._manifest_path(snap, 0))
+    m0 = ingest._read_manifest(ingest._manifest_path(snap, 0))
     b9 = buckets[0]
     bucket_id = int(b9.split("=")[1])
     prev = spark.read.parquet(
@@ -949,7 +950,7 @@ def test_bucketed_merge_insert_into_empty_bucket(spark, tmp_path):
     snap = str(tmp_path / "snap")
     # Bootstrap happens with batch 0 = the change batch itself; then the
     # insert lands in an empty bucket.
-    q = ST.bucketed_merge_ingest_stream(
+    q = ingest.bucketed_merge_ingest_stream(
         sdf,
         initial,
         snap,
@@ -959,7 +960,7 @@ def test_bucketed_merge_insert_into_empty_bucket(spark, tmp_path):
         insert_values={"bal": F.col("s.delta")},
     )
     ST.run_until_drained(q)
-    got = {r.id: r.bal for r in ST.read_bucketed_merged_snapshot(spark, snap).collect()}
+    got = {r.id: r.bal for r in ingest.read_bucketed_merged_snapshot(spark, snap).collect()}
     assert got == {1: 1.0, found: 5.0}
 
 
@@ -986,10 +987,10 @@ def test_cms_rollup_multibatch_and_replay_ledger(spark, tmp_path):
     ).parquet(stage)
     counters_dir = str(tmp_path / "counters")
     ledger = str(tmp_path / "ledger")
-    q = ST.cms_ingest_stream(sdf, counters_dir, ledger, "v", depth=3, width=64)
+    q = ingest.cms_ingest_stream(sdf, counters_dir, ledger, "v", depth=3, width=64)
     ST.run_until_drained(q)
-    assert len(ST._committed_batch_ids(ledger)) == 4
-    merged = ST.read_cms_rollup(spark, counters_dir)
+    assert len(ingest._committed_batch_ids(ledger)) == 4
+    merged = ingest.read_cms_rollup(spark, counters_dir)
     whole = SK.cms_counters(df, F.col("v"), depth=3, width=64)
     assert sorted(map(tuple, merged.collect())) == sorted(
         map(tuple, whole.collect())
@@ -1001,11 +1002,11 @@ def test_cms_rollup_multibatch_and_replay_ledger(spark, tmp_path):
     sdf2 = spark.readStream.schema("v string").option(
         "maxFilesPerTrigger", 1
     ).parquet(stage)
-    q2 = ST.cms_ingest_stream(
+    q2 = ingest.cms_ingest_stream(
         sdf2, counters_dir, ledger, "v", depth=3, width=64
     )
     ST.run_until_drained(q2)
-    again = ST.read_cms_rollup(spark, counters_dir)
+    again = ingest.read_cms_rollup(spark, counters_dir)
     assert sorted(map(tuple, again.collect())) == sorted(
         map(tuple, whole.collect())
     )
@@ -1068,7 +1069,7 @@ def test_bucketed_time_travel_raises_on_pruned_version(spark, tmp_path):
         "maxFilesPerTrigger", 1
     ).parquet(stage)
     snap = str(tmp_path / "ttsnap")
-    q = ST.bucketed_merge_ingest_stream(
+    q = ingest.bucketed_merge_ingest_stream(
         sdf,
         initial,
         snap,
@@ -1079,7 +1080,7 @@ def test_bucketed_time_travel_raises_on_pruned_version(spark, tmp_path):
         retain_versions=1,
     )
     ST.run_until_drained(q)
-    committed = ST._committed_batch_ids(os.path.join(snap, "_ledger"))
+    committed = ingest._committed_batch_ids(os.path.join(snap, "_ledger"))
     assert committed == [0, 1, 2, 3]
     # Version 1's dir must actually be pruned while manifest m-1 still
     # references it for bucket 0 — the silent-partial setup.
@@ -1087,7 +1088,7 @@ def test_bucketed_time_travel_raises_on_pruned_version(spark, tmp_path):
     # Latest still reads fine (bucket 0 at v=2, bucket 1 at v=3).
     got = {
         r.id: r.bal
-        for r in ST.read_bucketed_merged_snapshot(spark, snap).collect()
+        for r in ingest.read_bucketed_merged_snapshot(spark, snap).collect()
     }
     assert got == {a0: 10.0, a1: 20.0, b0: 30.0}
     # Time-travel to v=1: bucket 1's data still exists (v=0), bucket 0's
@@ -1095,7 +1096,7 @@ def test_bucketed_time_travel_raises_on_pruned_version(spark, tmp_path):
     # (Round-9 manifest retention prunes m-1 alongside v=1, so this
     # raises at manifest resolution.)
     with _pt.raises(ValueError, match="no longer fully retained"):
-        ST.read_bucketed_merged_snapshot(spark, snap, version=1)
+        ingest.read_bucketed_merged_snapshot(spark, snap, version=1)
     # The crash-window variant: a manifest SURVIVES but a version dir
     # it references is gone (manually simulated — the two prune loops
     # share a keep set, so only a crash between them leaves this
@@ -1104,7 +1105,7 @@ def test_bucketed_time_travel_raises_on_pruned_version(spark, tmp_path):
 
     _sh.rmtree(os.path.join(snap, "v=2"))
     with _pt.raises(ValueError, match="pruned version dir"):
-        ST.read_bucketed_merged_snapshot(spark, snap)
+        ingest.read_bucketed_merged_snapshot(spark, snap)
 
 
 def test_cluster_ingest_stream_equals_one_shot_clustering(spark, tmp_path):
@@ -1144,7 +1145,7 @@ def test_cluster_ingest_stream_equals_one_shot_clustering(spark, tmp_path):
         "maxFilesPerTrigger", 1
     ).parquet(stage)
     root = str(tmp_path / "cmstream")
-    q = ST.cluster_ingest_stream(
+    q = ingest.cluster_ingest_stream(
         sdf,
         map_path=os.path.join(root, "cmap"),
         band_index_path=os.path.join(root, "bands"),
@@ -1220,14 +1221,14 @@ def test_ledger_compaction_bounds_marker_files(tmp_path):
     loose = [f for f in files if f.startswith("batch-")]
     assert len(loose) < ST._LEDGER_COMPACT_THRESHOLD + 1
     assert "_watermark" in files
-    assert ST._committed_batch_ids(ledger) == list(range(200))
+    assert ingest._committed_batch_ids(ledger) == list(range(200))
     # Ids folded into the watermark still count as committed (replay
     # of a compacted batch must skip, even with its marker deleted).
     assert ST._ledger_watermark(ledger) >= 200 - ST._LEDGER_COMPACT_THRESHOLD
     # A GAP stalls the watermark but never loses ids.
     fs.write_text_atomic(os.path.join(ledger, "batch-205.done"), "done")
     ST._compact_ledger(ledger)
-    got = ST._committed_batch_ids(ledger)
+    got = ingest._committed_batch_ids(ledger)
     assert got == list(range(200)) + [205]
 
 
@@ -1240,7 +1241,6 @@ def test_ledger_bounded_helpers_match_enumeration(tmp_path):
     import os
 
     from ue_big_data_project_spark import fs
-    from ue_big_data_project_spark import streaming as ST
 
     ledger = str(tmp_path / "_ledger")
     fs.makedirs(ledger)
@@ -1248,23 +1248,23 @@ def test_ledger_bounded_helpers_match_enumeration(tmp_path):
     fs.write_text_atomic(os.path.join(ledger, "_watermark"), "149")
     for b in (152, 155):
         fs.write_text_atomic(os.path.join(ledger, f"batch-{b}.done"), "done")
-    ids = ST._committed_batch_ids(ledger)
+    ids = ingest._committed_batch_ids(ledger)
     assert ids == list(range(150)) + [152, 155]
-    assert ST._latest_committed(ledger) == 155
+    assert ingest._latest_committed(ledger) == 155
     for n in (0, 1, 2, 3, 5, 200):
-        assert ST._committed_tail(ledger, n) == (ids[-n:] if n else [])
+        assert ingest._committed_tail(ledger, n) == (ids[-n:] if n else [])
     for b in (0, 149, 150, 152, 153, 155, 156, 400):
-        assert ST._is_committed(ledger, b) == (b in ids)
-        assert ST._last_committed_before(ledger, b) == max(
+        assert ingest._is_committed(ledger, b) == (b in ids)
+        assert ingest._last_committed_before(ledger, b) == max(
             (i for i in ids if i < b), default=-1
         )
     # Empty ledger: every helper degrades to "nothing committed".
     empty = str(tmp_path / "_empty")
     fs.makedirs(empty)
-    assert ST._latest_committed(empty) == -1
-    assert ST._last_committed_before(empty, 7) == -1
-    assert ST._committed_tail(empty, 3) == []
-    assert not ST._is_committed(empty, 0)
+    assert ingest._latest_committed(empty) == -1
+    assert ingest._last_committed_before(empty, 7) == -1
+    assert ingest._committed_tail(empty, 3) == []
+    assert not ingest._is_committed(empty, 0)
 
 
 def test_ledger_compaction_in_live_stream(spark, tmp_path, monkeypatch):
@@ -1301,7 +1301,7 @@ def test_ledger_compaction_in_live_stream(spark, tmp_path, monkeypatch):
     assert seen == list(range(10))
     loose = [f for f in os.listdir(ledger) if f.startswith("batch-")]
     assert len(loose) <= 4
-    assert ST._committed_batch_ids(ledger) == list(range(10))
+    assert ingest._committed_batch_ids(ledger) == list(range(10))
 
 
 def test_constraints_ingest_stream_verdicts_and_replay(spark, tmp_path):
@@ -1311,7 +1311,7 @@ def test_constraints_ingest_stream_verdicts_and_replay(spark, tmp_path):
     import os
 
     from ue_big_data_project_spark import streaming as S
-    from ue_big_data_project_spark.observability import (
+    from ue_big_data_project_spark.quality import (
         c_completeness,
         c_row_count,
         check_constraints,
@@ -1344,7 +1344,7 @@ def test_constraints_ingest_stream_verdicts_and_replay(spark, tmp_path):
             .parquet(stage)
         )
         S.run_until_drained(
-            S.constraints_ingest_stream(sdf, verdicts, suite, ledger)
+            ingest.constraints_ingest_stream(sdf, verdicts, suite, ledger)
         )
 
     drain()

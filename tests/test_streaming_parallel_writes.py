@@ -12,7 +12,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from ue_big_data_project_spark import streaming as ST
+from ue_big_data_project_spark.streaming import ingest
 
 
 def test_parallel_batch_writes_runs_all_and_raises_first():
@@ -30,7 +30,7 @@ def test_parallel_batch_writes_runs_all_and_raises_first():
         raise ValueError("second failure")
 
     with pytest.raises(RuntimeError, match="first failure"):
-        ST._parallel_batch_writes(ok_a, boom_b, boom_c)
+        ingest._parallel_batch_writes(ok_a, boom_b, boom_c)
     # Every thunk was attempted (threads all join before the raise),
     # and the FIRST failure by thunk order is the one raised — the
     # ValueError from the later thunk is logged, not lost as the
@@ -40,7 +40,7 @@ def test_parallel_batch_writes_runs_all_and_raises_first():
 
 def test_parallel_batch_writes_success_path():
     ran = []
-    ST._parallel_batch_writes(lambda: ran.append(1), lambda: ran.append(2))
+    ingest._parallel_batch_writes(lambda: ran.append(1), lambda: ran.append(2))
     assert sorted(ran) == [1, 2]
 
 
@@ -55,7 +55,7 @@ def test_failed_overlapped_write_blocks_ledger_and_replay_redoes_batch(
         winnow_probe_index,
         write_winnow_index,
     )
-    from ue_big_data_project_spark.session import load_tables
+    from ue_big_data_project_spark.queries.tables import load_tables
 
     d = load_tables(spark, sf_dir, ("documents",))["documents"]
     corpus = d.filter(F.col("doc_id") % 2 == 0)
@@ -69,7 +69,7 @@ def test_failed_overlapped_write_blocks_ledger_and_replay_redoes_batch(
     idx = os.path.join(root, "widx")
     ledger = os.path.join(root, "_ledger")
 
-    real = ST._parallel_batch_writes
+    real = ingest._parallel_batch_writes
 
     def with_injected_failure(*thunks):
         def boom():
@@ -77,7 +77,7 @@ def test_failed_overlapped_write_blocks_ledger_and_replay_redoes_batch(
 
         real(*(list(thunks) + [boom]))
 
-    monkeypatch.setattr(ST, "_parallel_batch_writes", with_injected_failure)
+    monkeypatch.setattr(ingest, "_parallel_batch_writes", with_injected_failure)
     with pytest.raises(Exception):
         _drain_winnow_stream(spark, stage, idx, ledger)
     for q in spark.streams.active:  # the failed query may linger
@@ -94,7 +94,7 @@ def test_failed_overlapped_write_blocks_ledger_and_replay_redoes_batch(
     # Clean replay over the same stage + ledger re-does every batch
     # (nothing was committed) and converges: the streamed index answers
     # the probe exactly like a one-shot build of the same corpus.
-    monkeypatch.setattr(ST, "_parallel_batch_writes", real)
+    monkeypatch.setattr(ingest, "_parallel_batch_writes", real)
     _drain_winnow_stream(spark, stage, idx, ledger)
     got = {
         (r["id_a"], r["id_b"], r["n_shared"])

@@ -10,7 +10,7 @@ import os
 import pytest
 from pyspark.sql import types as T
 
-from ue_big_data_project_spark.session import load_tables
+from ue_big_data_project_spark.queries.tables import load_tables
 
 SFS = [d for d in ("sf0.001", "sf0.01", "sf0.1")
        if os.path.isdir(f"/root/testdata/{d}")]

@@ -151,7 +151,7 @@ def test_winnow_index_append_equals_rebuild(spark, sf_dir, tmp_path):
         winnow_probe_index,
         write_winnow_index,
     )
-    from ue_big_data_project_spark.session import load_tables
+    from ue_big_data_project_spark.queries.tables import load_tables
 
     from pyspark.sql import functions as F
 
@@ -190,7 +190,7 @@ def test_winnow_index_rewrite_prunes_and_compacts(spark, sf_dir, tmp_path):
         winnow_probe_index,
         write_winnow_index,
     )
-    from ue_big_data_project_spark.session import load_tables
+    from ue_big_data_project_spark.queries.tables import load_tables
 
     from pyspark.sql import functions as F
 
@@ -278,13 +278,14 @@ def _stage_winnow_batches(spark, docs, root, n_batches=3):
 
 def _drain_winnow_stream(spark, stage, idx, ledger):
     from ue_big_data_project_spark import streaming as ST
+    from ue_big_data_project_spark.streaming import ingest
 
     sdf = (
         spark.readStream.schema("doc_id long, text string")
         .option("maxFilesPerTrigger", 1)
         .parquet(stage)
     )
-    q = ST.winnow_ingest_stream(sdf, index_path=idx, ledger_dir=ledger)
+    q = ingest.winnow_ingest_stream(sdf, index_path=idx, ledger_dir=ledger)
     ST.run_until_drained(q)
 
 
@@ -303,7 +304,7 @@ def test_winnow_stream_equals_one_shot_and_replays_safely(
         winnow_probe_index,
         write_winnow_index,
     )
-    from ue_big_data_project_spark.session import load_tables
+    from ue_big_data_project_spark.queries.tables import load_tables
 
     d = load_tables(spark, sf_dir, ("documents",))["documents"]
     corpus = d.filter(F.col("doc_id") % 2 == 0)
@@ -373,7 +374,7 @@ def test_winnow_stream_append_guard_and_rewrite_retires_layout(
         winnow_probe_index,
         write_winnow_index,
     )
-    from ue_big_data_project_spark.session import load_tables
+    from ue_big_data_project_spark.queries.tables import load_tables
 
     d = load_tables(spark, sf_dir, ("documents",))["documents"]
     corpus = d.filter(F.col("doc_id") % 2 == 0)

@@ -3,21 +3,26 @@
 A brand-new, Spark-first implementation of the query and data-processing
 capabilities demonstrated by the reference repo
 ``nathan-claeys/UE_BIG_DATA_PROJECT`` (a Kafka + PySpark open-data
-pipeline project), re-expressed as a clean, testable, cluster-scale
-library:
+pipeline project), re-expressed as a clean, testable library.
 
-- ``session``    — SparkSession factory tuned for AQE / Arrow / UTC.
-- ``schemas``    — explicit StructType registry per source (SURVEY §1.2).
-- ``sources``    — batch & streaming Source API (kafka/file/rate/memory).
-- ``functions``  — scalar kit (time, geo, text, vectors) as native
-                   Catalyst expressions; UDFs only where unavoidable.
-- ``operators``  — composite relational operators: as-of / range joins,
-                   per-group top-k, dedup (exact/minhash/simhash/jaccard),
-                   similarity search, haversine k-NN.
-- ``queries``    — the reference's four declared queries + wind pipeline,
-                   re-expressed over neutral fixture schemas.
-- ``streaming``  — watermarked windowed aggregation, streaming dedup,
-                   foreachBatch sinks, query lifecycle helpers.
+The transit system (the reference's four queries plus the wind
+pipeline) is this closed set of modules, pinned by tests/test_boundary.py:
+
+- ``session``         — SparkSession factory (Arrow, RocksDB state, UTC).
+- ``schemas``         — explicit StructType registry per source (SURVEY §1.2).
+- ``sources``         — batch sources (kafka/file/rows/HTTP).
+- ``functions``       — transit scalars as SQL fragments.
+- ``fs``              — local/Hadoop filesystem seam.
+- ``observability``   — observed metrics, listeners, scan metrics.
+- ``operators.asof``  — the as-of join.
+- ``operators.geo``   — haversine k-NN.
+- ``streaming``       — stream sources, windowed aggregation, dedup, sinks.
+- ``queries.reference`` — Q1–Q4 and the wind pipeline.
+
+Everything else is an extension built on that core: ``layout``,
+``quality``, ``pipelines``, ``topics``, ``streaming.ingest``, the other
+``operators`` and ``functions`` modules, and the registry's other
+``queries`` modules (``queries.tables`` reads the driver's parquet).
 
 Everything here is built only on the public Apache Spark / PySpark API.
 """

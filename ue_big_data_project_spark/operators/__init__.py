@@ -1,11 +1,13 @@
 """Composite relational operators.
 
-Each module composes public DataFrame primitives into an operator the
-reference exercises (or that a 100 TB training-data pipeline needs):
+Each module composes public DataFrame primitives into one operator
+family. Two belong to the transit system:
 
-- ``asof``       — as-of / range joins (reference's only join, SURVEY §2.5).
-- ``topk``       — per-group and global top-k (SURVEY §2.8).
+- ``asof``       — the as-of join (reference's only join, SURVEY §2.5).
 - ``geo``        — haversine k-NN (internalized REST pushdown, SURVEY S5/O3).
-- ``dedup``      — exact / minhash-LSH / simhash / n-gram-Jaccard dedup.
-- ``similarity`` — embedding similarity search (brute-force + LSH-bucketed).
+
+The rest are extensions the transit queries never import: ``bloom``,
+``bpe``, ``cdc``, ``classify``, ``dedup``, ``graph``, ``interval``,
+``multimodal``, ``retrieval``, ``sessions``, ``similarity``, ``sketch``
+and ``skew``.
 """

@@ -620,7 +620,7 @@ def append_winnow_index(
     n_buckets = int(meta["n_buckets"])
     if "batch_id" in spark.read.parquet(root).columns:
         # The ivf_index_append guard, same hazard: a STREAM-ingested
-        # layout (streaming.winnow_ingest_stream writes
+        # layout (streaming.ingest.winnow_ingest_stream writes
         # batch_id=N/_hbucket=M) with flat _hbucket=M dirs appended
         # next to it gives conflicting partition schemas and bricks
         # every subsequent read. Route increments through the stream,
@@ -762,7 +762,7 @@ def rewrite_winnow_index(spark, path: str, keep_docs: DataFrame) -> int:
 
     Accepts BOTH layouts: the flat ``_hbucket=M`` sharding and the
     stream-ingested ``batch_id=N/_hbucket=M`` one
-    (``streaming.winnow_ingest_stream``) — the rewrite always emits
+    (``streaming.ingest.winnow_ingest_stream``) — the rewrite always emits
     the canonical flat layout, so it doubles as the COMPACTION that
     retires a streamed index into an ``append_winnow_index``-able
     artifact (the overwrite drops the old batch directories with the

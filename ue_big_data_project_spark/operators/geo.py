@@ -24,7 +24,6 @@ from ue_big_data_project_spark.functions import (
     haversine_km,
     ident,
 )
-from ue_big_data_project_spark.operators.topk import topk_global
 
 
 def nearest_points(
@@ -50,4 +49,4 @@ def nearest_points(
     out = df.withColumn(dist_col, F.expr(dist))
     if radius_km is not None:
         out = out.where(f"{ident(dist_col)} <= {double_lit(radius_km)}")
-    return topk_global(out, [dist_col, *([tie_breaker] if tie_breaker else [])], k)
+    return out.orderBy(dist_col, *([tie_breaker] if tie_breaker else [])).limit(k)

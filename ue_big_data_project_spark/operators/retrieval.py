@@ -319,7 +319,7 @@ def append_text_index(
     already holds duplicates its postings (re-crawls are an upsert —
     route them through ``cdc.upsert_latest`` and rebuild, or delta-
     encode outside this layout). Compact bucket directories
-    (``sources.compact_small_files`` with
+    (``layout.compact_small_files`` with
     ``partition_by=["term_bucket"]``, which preserves the directory
     layout probes prune on) when frequent increments fragment them.
     """
@@ -332,7 +332,7 @@ def append_text_index(
         raise ValueError(
             f"{root} uses the stream-ingested batch_id=N/term_bucket=M "
             "layout; a flat append would conflict with it — ingest the "
-            "increment via streaming.bm25_ingest_stream, or compact "
+            "increment via streaming.ingest.bm25_ingest_stream, or compact "
             "with rewrite_text_index first"
         )
     stats_row = spark.read.schema(BM25_STATS_SCHEMA).parquet(
@@ -415,7 +415,7 @@ def bm25_topk_indexed(
         root + "_stats"
     )
     n_buckets = int(stats.select("n_buckets").first()[0])
-    # On the stream-ingested layout (streaming.bm25_ingest_stream lands
+    # On the stream-ingested layout (streaming.ingest.bm25_ingest_stream lands
     # per-batch DELTA rows under batch_id=N partitions) the sidecars
     # AGGREGATE ON READ: n_docs/total_len sum across batches, and a
     # term's df_t is the sum of its per-batch document frequencies —

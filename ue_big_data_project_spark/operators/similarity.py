@@ -940,7 +940,7 @@ def build_ivf_index(
     partition pruning does the candidate cut before any row is scanned
     (asserted via scan metrics in tests/test_approx.py). Cell-local
     file counts follow the write's upstream partitioning; run
-    :func:`~ue_big_data_project_spark.sources.compact_small_files` per
+    :func:`~ue_big_data_project_spark.layout.compact_small_files` per
     cell directory if increments fragment it.
     """
     if centroids is not None:
@@ -1049,7 +1049,7 @@ def ivf_index_append(
     bit-identical fold-left scoring this engine pins for oracle
     determinism. Each append adds one
     file per touched cell; compact cell directories
-    (``sources.compact_small_files`` with ``partition_by=["cell"]``,
+    (``layout.compact_small_files`` with ``partition_by=["cell"]``,
     which keeps the cell dirs and their pruning) when increments
     fragment them.
     Quantizer drift (the corpus distribution moving away from the
@@ -1057,7 +1057,7 @@ def ivf_index_append(
     monitor via :func:`ivf_cell_stats`.
 
     Guards against the STREAM-ingested layout
-    (``streaming.ivf_ingest_stream`` writes ``batch_id=N/cell=C``):
+    (``streaming.ingest.ivf_ingest_stream`` writes ``batch_id=N/cell=C``):
     appending flat ``cell=C`` dirs next to batch partitions would brick
     every subsequent read with conflicting partition schemas — route
     increments for a streamed index through the stream (or a
@@ -1074,7 +1074,7 @@ def ivf_index_append(
         raise ValueError(
             f"{index_path} uses the stream-ingested batch_id=N/cell=C "
             "layout; a flat append would conflict with it — ingest the "
-            "increment via streaming.ivf_ingest_stream instead"
+            "increment via streaming.ingest.ivf_ingest_stream instead"
         )
     _write_tagged(
         new_items, centroids, index_path, item_id, item_vec, score_scale,

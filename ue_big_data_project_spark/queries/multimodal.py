@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 from ue_big_data_project_spark.operators import multimodal as MM
 from ue_big_data_project_spark.queries import QuerySpec
 from ue_big_data_project_spark.queries._replay import stage_batches
-from ue_big_data_project_spark.session import load_tables
+from ue_big_data_project_spark.queries.tables import load_tables
 
 _MEDIA_TYPE_SQL = (
     "CASE doc_id % 3 WHEN 0 THEN 'image' WHEN 1 THEN 'audio' "
@@ -578,7 +578,7 @@ WHERE ((a.doc_id % 2 = 0 AND a.doc_id % 16 != 0) OR a.doc_id % 4 = 1)
 def streaming_fp_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Continuous media-fingerprint index maintenance end-to-end: the
     even half of the corpus replays as 3 REAL micro-batches through
-    ``streaming.fp_ingest_stream`` — each batch attaches its BMP
+    ``streaming.ingest.fp_ingest_stream`` — each batch attaches its BMP
     payloads, dHashes them in the Arrow workers, and lands its band
     rows in a crash-safe ``batch_id=N`` partition — then the odd
     quarter probes the STREAMED index. Banding is stateless, so
@@ -590,6 +590,7 @@ def streaming_fp_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile as _tf
 
     from ue_big_data_project_spark import streaming as ST
+    from ue_big_data_project_spark.streaming import ingest
     from ue_big_data_project_spark.session import apply_session_conf
 
     apply_session_conf(spark)
@@ -613,7 +614,7 @@ def streaming_fp_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         prev = spark.conf.get(key)
         spark.conf.set(key, "8")
         try:
-            q = ST.fp_ingest_stream(
+            q = ingest.fp_ingest_stream(
                 sdf,
                 index_path=_os.path.join(root, "fpidx"),
                 ledger_dir=_os.path.join(root, "_ledger"),
@@ -797,7 +798,7 @@ def streaming_video_sig_index(
 ) -> DataFrame:
     """Continuous video-signature index maintenance end-to-end: the
     even half of the corpus replays as 3 REAL micro-batches through
-    ``streaming.video_sig_ingest_stream`` — each batch attaches its
+    ``streaming.ingest.video_sig_ingest_stream`` — each batch attaches its
     textured MP4 containers, demux+decode+dHashes every frame in the
     Arrow workers, and lands its distinct signature rows + per-video
     sizes in crash-safe ``batch_id=N`` partitions — then the odd
@@ -810,6 +811,7 @@ def streaming_video_sig_index(
     import tempfile as _tf
 
     from ue_big_data_project_spark import streaming as ST
+    from ue_big_data_project_spark.streaming import ingest
     from ue_big_data_project_spark.session import apply_session_conf
 
     apply_session_conf(spark)
@@ -833,7 +835,7 @@ def streaming_video_sig_index(
         spark.conf.set(key, "8")
         try:
             par = spark.sparkContext.defaultParallelism
-            q = ST.video_sig_ingest_stream(
+            q = ingest.video_sig_ingest_stream(
                 sdf,
                 index_path=_os.path.join(root, "vsig"),
                 ledger_dir=_os.path.join(root, "_ledger"),

@@ -128,9 +128,11 @@ def q2_affluence_per_hour(
     hours = affluence_df.selectExpr(
         "stop", "numLigne AS line", f"{hour_bucket('heure')} AS hour"
     )
+    # At most 25 groups: COALESCE(1) + SORT BY sorts them in one task,
+    # where ORDER BY would plan a range exchange and a sampling job.
     return affluence_df.sparkSession.sql(
-        "SELECT hour, count(1) AS bus_count FROM {df}"
-        f" {'WHERE ' + where if where else ''} GROUP BY hour ORDER BY hour",
+        "SELECT /*+ COALESCE(1) */ hour, count(1) AS bus_count FROM {df}"
+        f" {'WHERE ' + where if where else ''} GROUP BY hour SORT BY hour",
         args=args,
         df=hours,
     )

@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 from ue_big_data_project_spark.functions import pround, sql_round
 from ue_big_data_project_spark.operators import sketch as SK
 from ue_big_data_project_spark.queries import QuerySpec
-from ue_big_data_project_spark.session import load_tables
+from ue_big_data_project_spark.queries.tables import load_tables
 
 _P = 6  # 64 HLL registers: ±13% typical; fixture groups sit in the
 #         harmonic range (≥ 2.5·m distinct) the raw estimator targets.
@@ -426,6 +426,7 @@ def streaming_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile as _tf
 
     from ue_big_data_project_spark import streaming as ST
+    from ue_big_data_project_spark.streaming import ingest
     from ue_big_data_project_spark.session import apply_session_conf
 
     apply_session_conf(spark)
@@ -443,11 +444,11 @@ def streaming_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
             .option("maxFilesPerTrigger", 1)
             .parquet(stage)
         )
-        q = ST.hll_ingest_stream(
+        q = ingest.hll_ingest_stream(
             sdf, _os.path.join(root, "registers"), grp, "event_id", p=_P
         )
         ST.run_until_drained(q)
-        est = ST.read_hll_rollup(
+        est = ingest.read_hll_rollup(
             spark, _os.path.join(root, "registers"), grp, p=_P
         )
         exact = ev.groupBy(*grp).agg(
@@ -942,6 +943,7 @@ def streaming_cms_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile as _tf
 
     from ue_big_data_project_spark import streaming as ST
+    from ue_big_data_project_spark.streaming import ingest
     from ue_big_data_project_spark.functions.text import normalize_text
     from ue_big_data_project_spark.session import apply_session_conf
 
@@ -966,7 +968,7 @@ def streaming_cms_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         # Tokenize INSIDE the stream: the counter build consumes the
         # token stream per micro-batch.
-        q = ST.cms_ingest_stream(
+        q = ingest.cms_ingest_stream(
             toks_of(sdf),
             _os.path.join(root, "counters"),
             _os.path.join(root, "ledger"),
@@ -975,7 +977,7 @@ def streaming_cms_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
             width=_CMS_W,
         )
         ST.run_until_drained(q)
-        counters = ST.read_cms_rollup(spark, _os.path.join(root, "counters"))
+        counters = ingest.read_cms_rollup(spark, _os.path.join(root, "counters"))
         toks = toks_of(d)
         top = (
             toks.groupBy("token")

@@ -31,7 +31,8 @@ from ue_big_data_project_spark.operators.similarity import (
 )
 from ue_big_data_project_spark.queries import QuerySpec
 from ue_big_data_project_spark.queries._replay import stage_batches
-from ue_big_data_project_spark.session import load_tables, local_relation
+from ue_big_data_project_spark.queries.tables import load_tables
+from ue_big_data_project_spark.session import local_relation
 
 # Shared SQL fragments ------------------------------------------------------
 # Normalization must mirror functions.text.normalize_text exactly.
@@ -407,7 +408,7 @@ WHERE (id_a % 4 = 1 OR id_b % 4 = 1)
 def streaming_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Continuous cluster maintenance end-to-end (round-9): documents
     replay as 4 REAL micro-batches through
-    ``streaming.cluster_ingest_stream`` — each batch LSH-bands its
+    ``streaming.ingest.cluster_ingest_stream`` — each batch LSH-bands its
     docs, folds candidate pairs (vs the growing band index + in-batch)
     into the persisted cluster map via the contracted-graph append, and
     appends its band rows. The oracle clusters the WHOLE corpus at once
@@ -422,6 +423,7 @@ def streaming_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile as _tf
 
     from ue_big_data_project_spark import streaming as ST
+    from ue_big_data_project_spark.streaming import ingest
     from ue_big_data_project_spark.operators.dedup import read_cluster_map
     from ue_big_data_project_spark.session import apply_session_conf
 
@@ -455,7 +457,7 @@ def streaming_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         prev = spark.conf.get(key)
         spark.conf.set(key, "8")
         try:
-            q = ST.cluster_ingest_stream(
+            q = ingest.cluster_ingest_stream(
                 sdf,
                 map_path=_os.path.join(root, "cmap"),
                 band_index_path=_os.path.join(root, "bands"),
@@ -1687,7 +1689,7 @@ def streaming_winnow_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Continuous winnow-index maintenance end-to-end — the streaming
     drain for the fourth persisted-index family: the even half of the
     corpus replays as 3 REAL micro-batches through
-    ``streaming.winnow_ingest_stream`` (each batch fingerprints ONLY
+    ``streaming.ingest.winnow_ingest_stream`` (each batch fingerprints ONLY
     itself and lands its (id, h) rows + df delta rows in its own
     crash-safe ``batch_id=N`` partition of the bucket sharding), then
     a disjoint quarter probes the STREAMED index. The oracle is
@@ -1700,6 +1702,7 @@ def streaming_winnow_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile as _tf
 
     from ue_big_data_project_spark import streaming as ST
+    from ue_big_data_project_spark.streaming import ingest
     from ue_big_data_project_spark.operators.dedup import (
         winnow_probe_index,
     )
@@ -1727,7 +1730,7 @@ def streaming_winnow_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         prev = spark.conf.get(key)
         spark.conf.set(key, "8")
         try:
-            q = ST.winnow_ingest_stream(
+            q = ingest.winnow_ingest_stream(
                 sdf,
                 index_path=_os.path.join(root, "widx"),
                 ledger_dir=_os.path.join(root, "_ledger"),
@@ -2605,7 +2608,7 @@ def pipeline_expectations(spark: SparkSession, sf_dir: str) -> DataFrame:
     whose fixtures always pass can't prove it fails). One scan, one
     scalar row, a literal unpivot — verification costs what one
     aggregation of the ingest already costs."""
-    from ue_big_data_project_spark.observability import check_constraints
+    from ue_big_data_project_spark.quality import check_constraints
 
     d = load_tables(spark, sf_dir, ("documents",))["documents"]
     return check_constraints(d, _documents_suite())
@@ -2613,7 +2616,7 @@ def pipeline_expectations(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def streaming_expectations(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Continuous data-quality monitoring end-to-end
-    (streaming.constraints_ingest_stream): the documents corpus
+    (streaming.ingest.constraints_ingest_stream): the documents corpus
     replays as 3 REAL micro-batches, each batch's suite verdict
     landing crash-safe under its own ``batch_id=N`` partition of the
     verdict ledger table — the quality timeline a 100 TB ingest alerts
@@ -2627,6 +2630,7 @@ def streaming_expectations(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile as _tf
 
     from ue_big_data_project_spark import streaming as ST
+    from ue_big_data_project_spark.streaming import ingest
     from ue_big_data_project_spark.session import apply_session_conf
 
     apply_session_conf(spark)
@@ -2650,7 +2654,7 @@ def streaming_expectations(spark: SparkSession, sf_dir: str) -> DataFrame:
         prev = spark.conf.get(key)
         spark.conf.set(key, "8")
         try:
-            q = ST.constraints_ingest_stream(
+            q = ingest.constraints_ingest_stream(
                 sdf,
                 verdict_path=_os.path.join(root, "verdicts"),
                 constraints=_documents_suite(),
@@ -2676,7 +2680,7 @@ def streaming_expectations(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _documents_suite():
     """The shared 8-constraint documents suite (batch entry + the
     streaming drain's per-batch evaluation)."""
-    from ue_big_data_project_spark.observability import (
+    from ue_big_data_project_spark.quality import (
         c_completeness,
         c_distinct_ratio,
         c_in_set,
@@ -2755,9 +2759,9 @@ STREAMING_EXPECTATIONS_SQL = "\nUNION ALL\n".join(
 def pipeline_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Single-pass table profile of the documents table (per-column row/
     null/exact-distinct counts + numeric min/max —
-    observability.profile_columns): the pre-ingest audit step, computed
+    quality.profile_columns): the pre-ingest audit step, computed
     as ONE scan with partial aggregation, then unpivoted."""
-    from ue_big_data_project_spark.observability import profile_columns
+    from ue_big_data_project_spark.quality import profile_columns
 
     d = load_tables(spark, sf_dir, ("documents",))["documents"]
     return profile_columns(d, ["doc_id", "lang", "n_chars", "text"])
@@ -2842,7 +2846,7 @@ def pipeline_source_quota(spark: SparkSession, sf_dir: str) -> DataFrame:
     One shuffle on the source key; the window sorts within source
     partitions only. Skew lever at 100 TB: sources big enough to
     overflow a partition get pre-pruned by a salted partial top-k
-    (operators/topk.py) before the exact window.
+    before the exact window.
     """
     d = load_tables(spark, sf_dir, ("documents",))["documents"]
     w = Window.partitionBy("source").orderBy(
@@ -3296,7 +3300,7 @@ def text_bm25_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
 def streaming_bm25_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Continuous BM25-index maintenance end-to-end — the streaming
     drain for the text-retrieval persisted family: the corpus replays
-    as 3 REAL micro-batches through ``streaming.bm25_ingest_stream``
+    as 3 REAL micro-batches through ``streaming.ingest.bm25_ingest_stream``
     (each batch tokenizes ONLY itself and lands its term-bucket posting
     rows plus df/stats DELTA rows in its own crash-safe ``batch_id=N``
     partitions), then the standard query batch probes the STREAMED
@@ -3309,6 +3313,7 @@ def streaming_bm25_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile as _tf
 
     from ue_big_data_project_spark import streaming as ST
+    from ue_big_data_project_spark.streaming import ingest
     from ue_big_data_project_spark.operators.retrieval import (
         bm25_topk_indexed,
     )
@@ -3331,7 +3336,7 @@ def streaming_bm25_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         prev = spark.conf.get(key)
         spark.conf.set(key, "8")
         try:
-            q = ST.bm25_ingest_stream(
+            q = ingest.bm25_ingest_stream(
                 sdf,
                 index_path=_os.path.join(root, "bm25idx"),
                 ledger_dir=_os.path.join(root, "_ledger"),
@@ -3574,7 +3579,7 @@ SELECT doc_id, logw, rank FROM ranked WHERE rank <= 20
 def streaming_dsir_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Continuous DSIR scoring end-to-end: the model fits once on ¾ of
     the corpus, then the remaining quarter arrives as 3 REAL
-    micro-batches through ``streaming.dsir_score_stream`` — each batch
+    micro-batches through ``streaming.ingest.dsir_score_stream`` — each batch
     scores against the frozen model and lands in its own ``batch_id=N``
     partition (deterministic overwrite = replay-safe with no ledger,
     the HLL-sink class). The oracle is ``pipeline_dsir_incremental``'s
@@ -3586,6 +3591,7 @@ def streaming_dsir_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile as _tf
 
     from ue_big_data_project_spark import streaming as ST
+    from ue_big_data_project_spark.streaming import ingest
     from ue_big_data_project_spark.pipelines import write_dsir_model
     from ue_big_data_project_spark.session import apply_session_conf
 
@@ -3612,13 +3618,13 @@ def streaming_dsir_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
         prev = spark.conf.get(key)
         spark.conf.set(key, "8")
         try:
-            q = ST.dsir_score_stream(
+            q = ingest.dsir_score_stream(
                 sdf, model, _os.path.join(root, "scores")
             )
             ST.run_until_drained(q)
         finally:
             spark.conf.set(key, prev)
-        scored = ST.read_dsir_scores(spark, _os.path.join(root, "scores"))
+        scored = ingest.read_dsir_scores(spark, _os.path.join(root, "scores"))
         scored = scored.orderBy(
             F.col("logw").desc(), F.col("doc_id").asc()
         ).limit(20)

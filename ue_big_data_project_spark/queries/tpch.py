@@ -15,7 +15,7 @@ from ue_big_data_project_spark.functions import pround, sql_round
 from ue_big_data_project_spark.operators.asof import asof_join
 from ue_big_data_project_spark.operators.geo import nearest_points
 from ue_big_data_project_spark.queries import QuerySpec
-from ue_big_data_project_spark.session import load_tables
+from ue_big_data_project_spark.queries.tables import load_tables
 
 
 # Exact-aggregation discipline: cast the BASE columns (whose values are

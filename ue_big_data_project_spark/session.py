@@ -3,12 +3,13 @@
 The reference builds its sessions by hand in every consumer with
 ``SparkConf().setMaster("spark://spark:7077").set("spark.sql.shuffle.partitions",
 "10")`` (reference: src/naolib_consumer.py:25-29, src/bike_consumer.py:27-37,
-src/plane_naolib_consumer.py:14-24). We centralize that into one factory with
-scale-appropriate defaults:
+src/plane_naolib_consumer.py:14-24). We centralize that into one factory.
+It sets only what differs from Spark's defaults; adaptive execution
+(partition coalescing, skew-join splitting) and parquet filter pushdown
+are on by default and are not restated:
 
-- AQE on (runtime coalescing, skew-join splitting) — at 100 TB the static
-  shuffle-partition count is always wrong for some stage; AQE fixes it.
 - Arrow on — every ``toPandas``/pandas-UDF boundary is Arrow-batched.
+- RocksDB state store for the streaming queries' state.
 - Session timezone pinned UTC — the reference mixes naive ISO strings,
   epoch seconds and Europe/Paris offsets (src/bike_producer.py:39); we
   convert at the edges instead (SURVEY §7 watch-items).
@@ -18,8 +19,6 @@ from __future__ import annotations
 
 import os
 
-from ue_big_data_project_spark import fs
-
 from pyspark.sql import SparkSession
 
 
@@ -28,7 +27,8 @@ from pyspark.sql import SparkSession
 SESSION_CONF = {
     # The driver's events.parquet stores TIMESTAMP(NANOS); Spark has no
     # nanos timestamp type, so read as long and rebuild micros in
-    # load_tables (DuckDB coerces the same way → values agree).
+    # queries.tables.load_tables (DuckDB coerces the same way → values
+    # agree).
     "spark.sql.legacy.parquet.nanosAsLong": "true",
     # Micros parquet timestamps written without isAdjustedToUTC would
     # otherwise infer TIMESTAMP_NTZ, which unix_micros/window() reject;
@@ -39,7 +39,7 @@ SESSION_CONF = {
     # Write timestamps as TIMESTAMP_MICROS (not legacy INT96): INT96
     # columns carry no usable row-group min/max statistics, which
     # silently disables footer-stat file skipping for range-sorted /
-    # z-ordered layouts on timestamp sort keys (sources.py).
+    # z-ordered layouts on timestamp sort keys (layout.py).
     "spark.sql.parquet.outputTimestampType": "TIMESTAMP_MICROS",
 }
 
@@ -62,17 +62,13 @@ def get_spark(
         SparkSession.builder.master(master)
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.parquet.filterPushdown", "true")
         .config(
             "spark.driver.memory",
             os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"),
         )
         .config("spark.ui.enabled", "false")
-        # Streaming: deterministic micro-batch tests need a stable checkpoint root.
+        # Streaming state lives in RocksDB rather than on the JVM heap.
         .config(
             "spark.sql.streaming.stateStore.providerClass",
             "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
@@ -92,54 +88,11 @@ def apply_session_conf(spark: SparkSession) -> None:
     and pass it in; these four settings are required for parquet timestamp
     decoding + writing and UTC-agreement with DuckDB on any host JVM
     timezone. Every entry point that may receive a foreign session
-    (load_tables, the streaming query functions) calls this.
+    (``queries.tables.load_tables``, the streaming query functions)
+    calls this.
     """
     for k, v in SESSION_CONF.items():
         spark.conf.set(k, v)
-
-
-def load_tables(spark: SparkSession, sf_dir: str, names: tuple[str, ...] | None = None):
-    """Read the driver's parquet tables and register them as temp views.
-
-    Returns ``{name: DataFrame}``. Mirrors DuckDB's pre-registered views so
-    that ``spark.sql`` text matches the oracle SQL shape.
-    """
-    names = names or (
-        "region",
-        "nation",
-        "customer",
-        "supplier",
-        "part",
-        "orders",
-        "lineitem",
-        "events",
-        "documents",
-        "embeddings",
-    )
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
-    # Runtime-set so these also hold on sessions we didn't build (the
-    # graft driver creates its own plain SparkSession and passes it in):
-    # nanos parquet decoding, and UTC so hour()/epoch extraction agrees
-    # with DuckDB's UTC-naive timestamps on any host JVM timezone.
-    apply_session_conf(spark)
-    out = {}
-    for name in names:
-        path = os.path.join(sf_dir, f"{name}.parquet")
-        if fs.exists(path):
-            df = spark.read.parquet(path)
-            if name == "events" and isinstance(
-                df.schema["ts"].dataType, T.LongType
-            ):
-                # TIMESTAMP(NANOS) read as long nanos (see get_spark);
-                # truncate to micros exactly like DuckDB's coercion.
-                df = df.withColumn(
-                    "ts", F.timestamp_micros(F.expr("ts div 1000"))
-                )
-            df.createOrReplaceTempView(name)
-            out[name] = df
-    return out
 
 
 def local_relation(spark: SparkSession, rows, schema):
