@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import json
 import os
+import tempfile
 
 import pytest
 from pyspark.sql import functions as F
@@ -225,6 +226,79 @@ def test_drain_to_table_with_artifacts_single_pass(spark, tmp_path, stream_rows)
         map(tuple, S.drain_to_table(spark, agg(sdf2), mode="complete").collect())
     )
     assert got == want
+    # Replay the same source: the ledger skips every artifact (same
+    # files, same mtimes) while the snapshot is still taken.
+    before = {f: os.path.getmtime(os.path.join(out, f)) for f in artifacts}
+    sdf3 = S.file_stream(spark, path, EVENTS_SCHEMA, max_files_per_trigger=1)
+    again = S.drain_to_table_with_artifacts(spark, agg(sdf3), out)
+    after = {
+        f: os.path.getmtime(os.path.join(out, f))
+        for f in os.listdir(out)
+        if f.startswith("batch-")
+    }
+    assert after == before
+    assert sorted(map(tuple, again.collect())) == want
+
+
+def test_drain_to_table_leaves_no_view_or_checkpoint(
+    spark, tmp_path, monkeypatch, stream_rows
+):
+    """The drained table is detached from the memory sink: the sink's
+    temp view is dropped and the scratch checkpoint removed."""
+    path = write_batches(str(tmp_path), stream_rows)
+    scratch = tmp_path / "tmp"
+    scratch.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(scratch))
+
+    def temp_views():
+        return {t.name for t in spark.catalog.listTables() if t.isTemporary}
+
+    views = temp_views()
+    sdf = S.file_stream(spark, path, EVENTS_SCHEMA, max_files_per_trigger=1)
+    got = S.drain_to_table(spark, sdf.groupBy("event_type").count())
+    assert temp_views() == views
+    assert os.listdir(scratch) == []
+    assert sum(r["count"] for r in got.collect()) == 8
+
+
+def test_drain_restores_shuffle_partitions_when_start_raises(spark):
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "13")
+    seen = []
+
+    def start():
+        seen.append(spark.conf.get(key))
+        raise RuntimeError("start failed")
+
+    try:
+        with pytest.raises(RuntimeError, match="start failed"):
+            S.drain(spark, start)
+        assert seen == [str(S.DRAIN_SHUFFLE_PARTITIONS)]
+        assert spark.conf.get(key) == "13"
+    finally:
+        spark.conf.set(key, prev)
+
+
+def test_replay_parquet_reads_one_file_and_stages_nothing(
+    spark, tmp_path, monkeypatch
+):
+    """The replay is a file-stream glob matching only the given file,
+    even when its path holds glob characters; no staging dir is made."""
+    import pandas as pd
+
+    src = tmp_path / "in[1]{a,b}*?"
+    src.mkdir()
+    pd.DataFrame({"x": [1, 2, 3]}).to_parquet(src / "rows.parquet")
+    pd.DataFrame({"x": [9]}).to_parquet(src / "rows.parquet2")
+    pd.DataFrame({"x": [9]}).to_parquet(src / "other.parquet")
+    scratch = tmp_path / "tmp"
+    scratch.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(scratch))
+    sdf = S.replay_parquet(spark, str(src / "rows.parquet"))
+    got = S.drain_to_table(spark, sdf, mode="append")
+    assert os.listdir(scratch) == []
+    assert sorted(r["x"] for r in got.collect()) == [1, 2, 3]
 
 
 def test_parse_json_value_flat_and_array(spark):

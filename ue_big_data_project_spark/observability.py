@@ -1,15 +1,14 @@
 """Pipeline observability: metrics that ride the job, and expectation
 gates that split bad records out instead of failing the run.
 
-At 100 TB you cannot afford a second scan to know what a pipeline did —
-row counts, null rates, and domain violations must be accumulated BY the
-job that does the work. ``observe`` attaches named aggregate metrics to
-a plan (computed during the existing pass, exchanged as a few scalars);
-for streams the same metrics surface per micro-batch through the query
-progress events. Expectations split a batch into (passing, quarantined)
-with the violated rule names attached — the dead-letter pattern — so one
-malformed crawl shard quarantines instead of poisoning the corpus or
-killing a 10-hour job.
+Row counts, null rates and domain violations are accumulated BY the
+job that does the work, not by a second scan. ``observe`` attaches
+named aggregate metrics to a plan (computed during the existing pass,
+exchanged as a few scalars); for streams the same metrics surface per
+micro-batch through the query progress events. Expectations split a
+batch into (passing, quarantined) with the violated rule names attached
+— the dead-letter pattern — so one malformed crawl shard quarantines
+instead of poisoning the corpus or killing a 10-hour job.
 
 The table-level constraint suite and the column profile live in
 :mod:`ue_big_data_project_spark.quality`.
@@ -20,7 +19,7 @@ from __future__ import annotations
 import json
 from collections.abc import Mapping
 
-from ue_big_data_project_spark import fs
+from ue_big_data_project_spark.streaming import _drain_memory
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -104,40 +103,18 @@ def drain_with_metrics(
     counterpart of :func:`observed`.
 
     Metrics are read synchronously from the query's own progress history
-    before it stops (listener events are delivered on a separate thread,
-    so a drain-then-read via :class:`MetricsListener` would race; the
+    (listener events are delivered on a separate thread, so a
+    drain-then-read via :class:`MetricsListener` would race; the
     listener is for long-running queries, this is for bounded drains).
     """
-    import tempfile
-    import uuid
-
-    name = f"metrics_{uuid.uuid4().hex[:12]}"
-    ckpt = tempfile.mkdtemp(prefix="spark_graft_ckpt_")
-    q = (
-        observed_stream(sdf, "gate", metrics)
-        .writeStream.outputMode(mode)
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", ckpt)
-        .start()
+    result, progress = _drain_memory(
+        spark, observed_stream(sdf, "gate", metrics), mode
     )
-    try:
-        q.processAllAvailable()
-        batches = []
-        for p in q.recentProgress:
-            progress = json.loads(p.json) if hasattr(p, "json") else p
-            row = (progress.get("observedMetrics") or {}).get("gate")
-            if row is not None:
-                batches.append(dict(row))
-        # Detach the result from the memory sink so both the sink table
-        # and the checkpoint can be dropped — otherwise every drain in a
-        # long-lived session leaks a registered table holding the full
-        # batch result plus an orphan checkpoint dir.
-        result = spark.table(name).localCheckpoint(eager=True)
-    finally:
-        q.stop()
-        spark.catalog.dropTempView(name)
-        fs.rmtree(ckpt)
+    batches = []
+    for p in progress:
+        row = (json.loads(p.json).get("observedMetrics") or {}).get("gate")
+        if row is not None:
+            batches.append(dict(row))
     return result, batches
 
 

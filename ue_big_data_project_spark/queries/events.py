@@ -9,12 +9,16 @@ logic runs in streaming via ``ue_big_data_project_spark.streaming``
 
 from __future__ import annotations
 
+import os
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ue_big_data_project_spark import schemas
+from ue_big_data_project_spark import streaming as ST
 from ue_big_data_project_spark.functions import pround, sql_round
 from ue_big_data_project_spark.operators.asof import asof_join
 from ue_big_data_project_spark.queries import QuerySpec
@@ -369,6 +373,16 @@ GROUP BY event_id
 """
 
 
+def _replay_events(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``events.parquet`` as a bounded stream, with a ``ts`` read as
+    nanos ``LongType`` (``spark.sql.legacy.parquet.nanosAsLong``)
+    decoded to a timestamp."""
+    sdf = ST.replay_parquet(spark, os.path.join(sf_dir, "events.parquet"))
+    if isinstance(sdf.schema["ts"].dataType, T.LongType):
+        sdf = sdf.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    return sdf
+
+
 def streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TRUE stream-stream interval join: two file-replay streams of the
     events table (clicks, errors), joined per user on
@@ -382,20 +396,12 @@ def streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     window, so state is O(rate × (watermark + interval)) regardless of
     stream length.
     """
-    import os as _os
-
-    from pyspark.sql import types as T
-
-    from ue_big_data_project_spark import streaming as ST
-
     apply_session_conf(spark)
-    path = _os.path.join(sf_dir, "events.parquet")
 
     def replay(event_type: str) -> DataFrame:
-        sdf = ST.replay_parquet(spark, path)
-        if isinstance(sdf.schema["ts"].dataType, T.LongType):
-            sdf = sdf.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        return sdf.filter(F.col("event_type") == event_type)
+        return _replay_events(spark, sf_dir).filter(
+            F.col("event_type") == event_type
+        )
 
     clicks = replay("click").select(
         "user_id",
@@ -613,20 +619,12 @@ def streaming_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     purchase whose best match improved; the final ``max(asof_us)``
     reduce over the drained table hash-matches the batch as-of SQL.
     """
-    import os as _os
-
-    from pyspark.sql import types as T
-
-    from ue_big_data_project_spark import streaming as ST
-
     apply_session_conf(spark)
-    path = _os.path.join(sf_dir, "events.parquet")
 
     def replay(event_type: str) -> DataFrame:
-        sdf = ST.replay_parquet(spark, path)
-        if isinstance(sdf.schema["ts"].dataType, T.LongType):
-            sdf = sdf.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        return sdf.filter(F.col("event_type") == event_type)
+        return _replay_events(spark, sf_dir).filter(
+            F.col("event_type") == event_type
+        )
 
     purchases = replay("purchase").select("user_id", "event_id", "ts")
     clicks = replay("click").select("user_id", "ts")
@@ -677,23 +675,17 @@ def streaming_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     touched, so maintaining a year-long rollup costs O(changed windows)
     per batch.
     """
-    import os as _os
+    import shutil as _sh
     import tempfile as _tf
 
-    from pyspark.sql import types as T
-
-    from ue_big_data_project_spark import streaming as ST
     from ue_big_data_project_spark.streaming import ingest
 
     apply_session_conf(spark)
-    sdf = ST.replay_parquet(spark, _os.path.join(sf_dir, "events.parquet"))
-    if isinstance(sdf.schema["ts"].dataType, T.LongType):
-        sdf = sdf.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    sdf = _replay_events(spark, sf_dir)
     snap_dir = _tf.mkdtemp(prefix="spark_graft_rollup_")
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = ingest.incremental_windowed_rollup(
+    ST.drain(
+        spark,
+        lambda: ingest.incremental_windowed_rollup(
             sdf,
             ts_col="ts",
             window_duration="15 minutes",
@@ -704,11 +696,8 @@ def streaming_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
             ],
             snapshot_dir=snap_dir,
             watermark="1 hour",
-        )
-        ST.run_until_drained(q)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-    import shutil as _sh
+        ),
+    )
 
     out = (
         ingest.read_rollup(spark, snap_dir)
@@ -730,18 +719,10 @@ def streaming_tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounds it on unbounded input. Complete mode here because the drain
     snapshot is the product; production pipelines use append + sink.
     """
-    import os as _os
-
-    from pyspark.sql import types as T
-
-    from ue_big_data_project_spark import streaming as ST
-
     # Vanilla sessions need the nanos decode + UTC contract (same runtime
     # settings load_tables applies for batch reads).
     apply_session_conf(spark)
-    sdf = ST.replay_parquet(spark, _os.path.join(sf_dir, "events.parquet"))
-    if isinstance(sdf.schema["ts"].dataType, T.LongType):
-        sdf = sdf.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    sdf = _replay_events(spark, sf_dir)
     agg = ST.windowed_agg(
         sdf,
         ts_col="ts",
@@ -762,8 +743,7 @@ def streaming_tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The drain ALSO exercises the reference's render-per-micro-batch
     # sink shape (plot_bus_positions, src/naolib_consumer.py:119-162):
     # one foreachBatch both writes the bounded ledgered artifact and
-    # takes the hash-checked snapshot, so the stream replays ONCE (the
-    # round-3 form drained it twice — artifact pass + memory-sink pass).
+    # takes the hash-checked snapshot, so the stream replays ONCE.
     # Executes under the driver's gate run, not only pytest; artifacts
     # land in a scratch dir and are asserted non-empty.
     import tempfile as _tf
@@ -775,7 +755,7 @@ def streaming_tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         snap = ST.drain_to_table_with_artifacts(
             spark, out, art_dir, mode="complete"
         )
-        wrote = any(e.startswith("batch-") for e in _os.listdir(art_dir))
+        wrote = any(e.startswith("batch-") for e in os.listdir(art_dir))
     finally:
         _sh.rmtree(art_dir, ignore_errors=True)
     if not wrote:
@@ -791,16 +771,8 @@ def streaming_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     equivalence proof for the overlapping-window state shape. State is
     keyed by (window, event_type) with each row feeding 2 windows, so
     the watermark bounds exactly 2× the tumbling state."""
-    import os as _os
-
-    from pyspark.sql import types as T
-
-    from ue_big_data_project_spark import streaming as ST
-
     apply_session_conf(spark)
-    sdf = ST.replay_parquet(spark, _os.path.join(sf_dir, "events.parquet"))
-    if isinstance(sdf.schema["ts"].dataType, T.LongType):
-        sdf = sdf.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    sdf = _replay_events(spark, sf_dir)
     agg = ST.windowed_agg(
         sdf,
         ts_col="ts",
@@ -1089,17 +1061,10 @@ def streaming_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     (events_sessionize), proving the per-key state machine is
     semantics-equivalent.
     """
-    import os as _os
-
-    from pyspark.sql import types as T
-
-    from ue_big_data_project_spark import streaming as ST
     from ue_big_data_project_spark.operators.sessions import sessionize_stream
 
     apply_session_conf(spark)
-    sdf = ST.replay_parquet(spark, _os.path.join(sf_dir, "events.parquet"))
-    if isinstance(sdf.schema["ts"].dataType, T.LongType):
-        sdf = sdf.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    sdf = _replay_events(spark, sf_dir)
     drained = ST.drain_to_table(
         spark,
         # watermark= enables event-time-timeout state eviction — the

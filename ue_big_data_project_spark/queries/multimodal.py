@@ -610,19 +610,15 @@ def streaming_fp_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         sdf = spark.readStream.schema("doc_id long").option(
             "maxFilesPerTrigger", 1
         ).parquet(stage)
-        key = "spark.sql.shuffle.partitions"
-        prev = spark.conf.get(key)
-        spark.conf.set(key, "8")
-        try:
-            q = ingest.fp_ingest_stream(
+        ST.drain(
+            spark,
+            lambda: ingest.fp_ingest_stream(
                 sdf,
                 index_path=_os.path.join(root, "fpidx"),
                 ledger_dir=_os.path.join(root, "_ledger"),
                 fingerprint=lambda bdf: MM.attach_bmp_dhash(bdf),
-            )
-            ST.run_until_drained(q)
-        finally:
-            spark.conf.set(key, prev)
+            ),
+        )
         return MM.fp_probe_index(spark, _os.path.join(root, "fpidx"), new)
     finally:
         _sh.rmtree(root, ignore_errors=True)
@@ -830,12 +826,10 @@ def streaming_video_sig_index(
         sdf = spark.readStream.schema("doc_id long").option(
             "maxFilesPerTrigger", 1
         ).parquet(stage)
-        key = "spark.sql.shuffle.partitions"
-        prev = spark.conf.get(key)
-        spark.conf.set(key, "8")
-        try:
-            par = spark.sparkContext.defaultParallelism
-            q = ingest.video_sig_ingest_stream(
+        par = spark.sparkContext.defaultParallelism
+        ST.drain(
+            spark,
+            lambda: ingest.video_sig_ingest_stream(
                 sdf,
                 index_path=_os.path.join(root, "vsig"),
                 ledger_dir=_os.path.join(root, "_ledger"),
@@ -849,10 +843,8 @@ def streaming_video_sig_index(
                     bdf.repartition(par, "doc_id"), every=1
                 ),
                 sig_cols=("dhash_hi", "dhash_lo"),
-            )
-            ST.run_until_drained(q)
-        finally:
-            spark.conf.set(key, prev)
+            ),
+        )
         return MM.video_probe_sig_index(
             spark, _os.path.join(root, "vsig"), new
         )

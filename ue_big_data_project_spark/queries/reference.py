@@ -34,7 +34,7 @@ from ue_big_data_project_spark.functions import (
     parse_wait_minutes,
 )
 from ue_big_data_project_spark.operators.asof import asof_join
-from ue_big_data_project_spark.streaming import windowed_agg
+from ue_big_data_project_spark.streaming import dedup_stream, windowed_agg
 
 
 # ---------------------------------------------------------------------------
@@ -294,17 +294,16 @@ def wind_rolling_average(
     AnalysisException if run), and the watermark is only attached to
     streaming input.
     """
-    df = (
+    df = dedup_stream(
         wind_df.select(
             F.col("created_at").try_cast("timestamp").alias("created_at"),
             F.col("entry_id").try_cast("int").alias("entry_id"),
             F.col("wind_speed").try_cast("float").alias("wind_speed"),
-        )
-        .filter(F.col("wind_speed").isNotNull())
+        ).filter(F.col("wind_speed").isNotNull()),
+        ["entry_id"],
+        "created_at",
+        watermark,
     )
-    if df.isStreaming:
-        df = df.withWatermark("created_at", watermark)
-    df = df.dropDuplicates(["entry_id"])
     agg = windowed_agg(
         df,
         "created_at",

@@ -447,25 +447,15 @@ def streaming_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         sdf = spark.readStream.schema("doc_id long, text string").option(
             "maxFilesPerTrigger", 1
         ).parquet(stage)
-        # Right-size the per-batch shuffles for a bounded replay (the
-        # drain_to_table precedent): the contracted CC and candidate
-        # joins run a dozen tiny jobs per micro-batch, and a vanilla
-        # session's 200 (or the engine's 32) partitions pay pure task
-        # overhead at this batch size. Scoped to the drain, restored
-        # after; production streams size this to real batch width.
-        key = "spark.sql.shuffle.partitions"
-        prev = spark.conf.get(key)
-        spark.conf.set(key, "8")
-        try:
-            q = ingest.cluster_ingest_stream(
+        ST.drain(
+            spark,
+            lambda: ingest.cluster_ingest_stream(
                 sdf,
                 map_path=_os.path.join(root, "cmap"),
                 band_index_path=_os.path.join(root, "bands"),
                 ledger_dir=_os.path.join(root, "_ledger"),
-            )
-            ST.run_until_drained(q)
-        finally:
-            spark.conf.set(key, prev)
+            ),
+        )
         return (
             read_cluster_map(spark, _os.path.join(root, "cmap"))
             .select("doc_id", "component")
@@ -1723,21 +1713,14 @@ def streaming_winnow_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         sdf = spark.readStream.schema("doc_id long, text string").option(
             "maxFilesPerTrigger", 1
         ).parquet(stage)
-        # Right-size per-batch shuffles for the bounded replay (the
-        # cluster-stream precedent); production streams size this to
-        # real batch width.
-        key = "spark.sql.shuffle.partitions"
-        prev = spark.conf.get(key)
-        spark.conf.set(key, "8")
-        try:
-            q = ingest.winnow_ingest_stream(
+        ST.drain(
+            spark,
+            lambda: ingest.winnow_ingest_stream(
                 sdf,
                 index_path=_os.path.join(root, "widx"),
                 ledger_dir=_os.path.join(root, "_ledger"),
-            )
-            ST.run_until_drained(q)
-        finally:
-            spark.conf.set(key, prev)
+            ),
+        )
         return winnow_probe_index(
             spark, _os.path.join(root, "widx"), new
         )
@@ -2650,19 +2633,15 @@ def streaming_expectations(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id long, text string, lang string, source string, "
             "n_chars long"
         ).option("maxFilesPerTrigger", 1).parquet(stage)
-        key = "spark.sql.shuffle.partitions"
-        prev = spark.conf.get(key)
-        spark.conf.set(key, "8")
-        try:
-            q = ingest.constraints_ingest_stream(
+        ST.drain(
+            spark,
+            lambda: ingest.constraints_ingest_stream(
                 sdf,
                 verdict_path=_os.path.join(root, "verdicts"),
                 constraints=_documents_suite(),
                 ledger_dir=_os.path.join(root, "_ledger"),
-            )
-            ST.run_until_drained(q)
-        finally:
-            spark.conf.set(key, prev)
+            ),
+        )
         return (
             spark.read.parquet(_os.path.join(root, "verdicts"))
             .select(
@@ -3330,21 +3309,15 @@ def streaming_bm25_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         sdf = spark.readStream.schema("doc_id long, text string").option(
             "maxFilesPerTrigger", 1
         ).parquet(stage)
-        # Right-size per-batch shuffles for the bounded replay (the
-        # cluster-stream precedent).
-        key = "spark.sql.shuffle.partitions"
-        prev = spark.conf.get(key)
-        spark.conf.set(key, "8")
-        try:
-            q = ingest.bm25_ingest_stream(
+        ST.drain(
+            spark,
+            lambda: ingest.bm25_ingest_stream(
                 sdf,
                 index_path=_os.path.join(root, "bm25idx"),
                 ledger_dir=_os.path.join(root, "_ledger"),
                 n_buckets=16,
-            )
-            ST.run_until_drained(q)
-        finally:
-            spark.conf.set(key, prev)
+            ),
+        )
         queries = local_relation(spark, 
             list(_BM25_QUERIES), "query_id int, query_text string"
         )
@@ -3614,16 +3587,12 @@ def streaming_dsir_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
         sdf = spark.readStream.schema("doc_id long, text string").option(
             "maxFilesPerTrigger", 1
         ).parquet(stage)
-        key = "spark.sql.shuffle.partitions"
-        prev = spark.conf.get(key)
-        spark.conf.set(key, "8")
-        try:
-            q = ingest.dsir_score_stream(
+        ST.drain(
+            spark,
+            lambda: ingest.dsir_score_stream(
                 sdf, model, _os.path.join(root, "scores")
-            )
-            ST.run_until_drained(q)
-        finally:
-            spark.conf.set(key, prev)
+            ),
+        )
         scored = ingest.read_dsir_scores(spark, _os.path.join(root, "scores"))
         scored = scored.orderBy(
             F.col("logw").desc(), F.col("doc_id").asc()

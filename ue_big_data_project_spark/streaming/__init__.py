@@ -18,15 +18,19 @@ in ``session.get_spark``). Late data beyond the watermark is dropped —
 identical semantics to the reference's append-mode pipelines.
 
 This module is the transit system's streaming core: sources, the JSON
-parse, windowed aggregation, dedup, the sinks, and the batch-id ledger
-behind :func:`idempotent_foreach_batch`. The incremental ingest
-streams, MERGE and the windowed-rollup table built on that ledger live
-in :mod:`ue_big_data_project_spark.streaming.ingest`.
+parse, windowed aggregation, dedup, the sinks, the batch-id ledger
+behind :func:`idempotent_foreach_batch`, and :func:`drain`, the one
+bounded replay policy every drain harness is built on. The incremental
+ingest streams, MERGE and the windowed-rollup table built on that
+ledger live in :mod:`ue_big_data_project_spark.streaming.ingest`.
 """
 
 from __future__ import annotations
 
 import os
+import re
+import tempfile
+import uuid
 from typing import Callable
 
 from ue_big_data_project_spark import fs
@@ -198,23 +202,18 @@ def foreach_batch(
     return df.writeStream.outputMode(mode).foreachBatch(fn).start()
 
 
-def idempotent_foreach_batch(
-    df: DataFrame,
-    fn: Callable[[DataFrame, int], None],
-    ledger_dir: str,
-    mode: str = "append",
-) -> StreamingQuery:
-    """Exactly-once ``foreachBatch``: skip batch ids already committed.
+def _ledgered(
+    fn: Callable[[DataFrame, int], None], ledger_dir: str
+) -> Callable[[DataFrame, int], None]:
+    """Wrap a ``foreachBatch`` callback so it runs once per batch id.
 
     Spark's foreachBatch is at-least-once across restarts (a batch can
     re-run after a crash between side effect and checkpoint commit).
-    The standard fix is an idempotence ledger keyed by ``batchId``: the
-    wrapper runs ``fn`` only for unseen ids and records the id AFTER the
-    side effect succeeds. The ledger here is marker files, portable to
-    object stores: all marker IO goes through the ``fs`` seam (POSIX
-    locally, Hadoop FileSystem API for hdfs/s3a/gs paths). Production
-    sinks with native txn/batchId support (Delta, JDBC upsert) subsume
-    it.
+    The wrapper runs ``fn`` only for ids not yet in the ledger and
+    records the id AFTER the side effect succeeds. The ledger is marker
+    files, portable to object stores: all marker IO goes through the
+    ``fs`` seam (POSIX locally, Hadoop FileSystem API for hdfs/s3a/gs
+    paths).
     """
     fs.makedirs(ledger_dir)
 
@@ -226,15 +225,57 @@ def idempotent_foreach_batch(
         fs.write_text_atomic(marker, "done")
         _compact_ledger(ledger_dir)
 
-    return df.writeStream.outputMode(mode).foreachBatch(wrapper).start()
+    return wrapper
+
+
+def idempotent_foreach_batch(
+    df: DataFrame,
+    fn: Callable[[DataFrame, int], None],
+    ledger_dir: str,
+    mode: str = "append",
+) -> StreamingQuery:
+    """Exactly-once ``foreachBatch``: skip batch ids already committed
+    to the ``ledger_dir`` idempotence ledger. Production sinks with
+    native txn/batchId support (Delta, JDBC upsert) subsume it.
+    """
+    return (
+        df.writeStream.outputMode(mode)
+        .foreachBatch(_ledgered(fn, ledger_dir))
+        .start()
+    )
+
+
+# Rows a per-batch artifact renders at most: a driver-side render must
+# never collect an unbounded batch.
+ARTIFACT_ROW_LIMIT = 10_000
+
+
+def default_render(pdf, batch_id: int) -> str:
+    """The default per-batch artifact: the batch slice as CSV."""
+    return pdf.to_csv(index=False)
+
+
+def _artifact_writer(
+    out_dir: str, render: Callable[..., str]
+) -> Callable[[DataFrame, int], None]:
+    """``foreachBatch`` callback writing ``render(pdf, batch_id)`` of the
+    batch's first :data:`ARTIFACT_ROW_LIMIT` rows to
+    ``out_dir/batch-<id>.txt``."""
+    fs.makedirs(out_dir)
+
+    def write(batch_df: DataFrame, batch_id: int) -> None:
+        pdf = batch_df.limit(ARTIFACT_ROW_LIMIT).toPandas()
+        path = os.path.join(out_dir, f"batch-{batch_id}.txt")
+        fs.write_text_atomic(path, render(pdf, batch_id))
+
+    return write
 
 
 def per_batch_artifact_sink(
     df: DataFrame,
     out_dir: str,
-    render: Callable[..., str] | None = None,
+    render: Callable[..., str] = default_render,
     mode: str = "append",
-    limit: int = 10_000,
 ) -> StreamingQuery:
     """Worked example of the reference's render-per-micro-batch sink
     (plot_bus_positions, src/naolib_consumer.py:119-162): each batch, a
@@ -244,26 +285,15 @@ def per_batch_artifact_sink(
 
     The reference's matplotlib figure becomes an artifact string here
     (default: CSV) since the render payload is interchangeable; what the
-    example pins is the SINK SHAPE: ``limit()`` before ``toPandas()``
-    (a driver render must never collect an unbounded batch), and the
-    batch-id ledger from :func:`idempotent_foreach_batch`, so a batch
-    replayed after a crash does not re-write its artifact.
+    example pins is the SINK SHAPE: ``limit()`` before ``toPandas()``,
+    and the batch-id ledger, so a batch replayed after a crash does not
+    re-write its artifact.
     """
-    fs.makedirs(out_dir)
-
-    def default_render(pdf, batch_id: int) -> str:
-        return pdf.to_csv(index=False)
-
-    render_fn = render or default_render
-
-    def cb(batch_df: DataFrame, batch_id: int) -> None:
-        pdf = batch_df.limit(limit).toPandas()
-        artifact = render_fn(pdf, batch_id)
-        path = os.path.join(out_dir, f"batch-{batch_id}.txt")
-        fs.write_text_atomic(path, artifact)
-
     return idempotent_foreach_batch(
-        df, cb, ledger_dir=os.path.join(out_dir, "_ledger"), mode=mode
+        df,
+        _artifact_writer(out_dir, render),
+        ledger_dir=os.path.join(out_dir, "_ledger"),
+        mode=mode,
     )
 
 
@@ -340,82 +370,107 @@ def stream_interval_join(
 def run_until_drained(query: StreamingQuery) -> None:
     """Process everything currently available, then stop (K7 lifecycle,
     deterministic test variant of ``awaitTermination``)."""
-    query.processAllAvailable()
-    query.stop()
+    try:
+        query.processAllAvailable()
+    finally:
+        query.stop()
 
 
-def replay_parquet(
-    spark: SparkSession, *files: str
-) -> DataFrame:
-    """Replay existing parquet file(s) as a bounded stream.
+# Shuffle width of a bounded replay. A stateful query instantiates one
+# state store per shuffle partition per micro-batch, and an ingest
+# stream's per-batch joins run one task per partition, so a vanilla
+# session's 200 partitions pay ~25x the per-batch fixed cost on
+# megabyte-scale replays. Production streams size this to state key
+# cardinality instead.
+DRAIN_SHUFFLE_PARTITIONS = 8
 
-    Spark's file-stream source only accepts directories, so the files are
-    symlinked into a scratch staging dir — zero copy, the source still
-    reads the original bytes. This is how the engine replays any batch
-    table through its streaming operators (batch-vs-stream equivalence
-    testing, backfill-through-the-streaming-path).
+
+def drain(
+    spark: SparkSession, start: Callable[[], StreamingQuery]
+) -> list:
+    """Run a bounded stream to completion: ``start()`` it, process
+    everything available, stop it, and return its ``recentProgress``.
+
+    ``spark.sql.shuffle.partitions`` is pinned to
+    :data:`DRAIN_SHUFFLE_PARTITIONS` from before ``start()`` until the
+    query stops, then restored, also when ``start()`` or the drain
+    raises. The pin must cover the start because the stream binds its
+    state partitioning then, and it must last for the whole drain
+    because ingest streams run batch jobs inside ``foreachBatch`` that
+    read the setting when they run.
     """
-    import tempfile
+    key = "spark.sql.shuffle.partitions"
+    old = spark.conf.get(key)
+    spark.conf.set(key, str(DRAIN_SHUFFLE_PARTITIONS))
+    try:
+        query = start()
+        run_until_drained(query)
+        return query.recentProgress
+    finally:
+        spark.conf.set(key, old)
 
-    schema = spark.read.parquet(files[0]).schema
-    stage = tempfile.mkdtemp(prefix="spark_graft_replay_")
-    for f in files:
-        os.symlink(
-            os.path.abspath(f), os.path.join(stage, os.path.basename(f))
+
+def _drain_checkpointed(spark: SparkSession, writer) -> list:
+    """:func:`drain` a ``DataStreamWriter`` with a scratch checkpoint,
+    removed afterwards: repeated drains must not pile up state dirs."""
+    ckpt = tempfile.mkdtemp(prefix="spark_graft_ckpt_")
+    try:
+        return drain(
+            spark, lambda: writer.option("checkpointLocation", ckpt).start()
         )
-    return spark.readStream.schema(schema).parquet(stage)
+    finally:
+        fs.rmtree(ckpt)
+
+
+def _glob_escape(path: str) -> str:
+    return re.sub(r"[\\{}\[\]*?^!]", lambda m: "\\" + m.group(), path)
+
+
+def replay_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """Replay an existing parquet file as a bounded stream.
+
+    Spark's file-stream source reads directories or globs, so the stream
+    reads the glob ``<path minus last char>[<last char>]``, which
+    matches only this file; glob characters already in ``path`` are
+    escaped. The schema read takes ``path`` literally instead (Spark's
+    ``__globPaths__`` reader option): given the glob, Spark's probe for
+    a streaming sink's metadata log looks up the glob as a file name and
+    logs a stack trace on every replay. This is how the engine replays
+    a batch table through its streaming operators (batch-vs-stream
+    equivalence testing, backfill-through-the-streaming-path).
+    """
+    schema = spark.read.option("__globPaths__", "false").parquet(path).schema
+    glob = f"{_glob_escape(path[:-1])}[{_glob_escape(path[-1])}]"
+    return spark.readStream.schema(schema).parquet(glob)
+
+
+def _drain_memory(
+    spark: SparkSession, df: DataFrame, mode: str
+) -> tuple[DataFrame, list]:
+    """:func:`drain_to_table` that also returns the drain's progress."""
+    name = f"drain_{uuid.uuid4().hex[:12]}"
+    writer = df.writeStream.outputMode(mode).format("memory").queryName(name)
+    try:
+        progress = _drain_checkpointed(spark, writer)
+        # Detach the result from the memory sink so its table can be
+        # dropped: otherwise every drain in a long-lived session keeps a
+        # registered table holding the full result.
+        return spark.table(name).localCheckpoint(eager=True), progress
+    finally:
+        spark.catalog.dropTempView(name)
 
 
 def drain_to_table(
-    spark: SparkSession,
-    df: DataFrame,
-    mode: str = "complete",
-    shuffle_partitions: int | None = 8,
+    spark: SparkSession, df: DataFrame, mode: str = "complete"
 ) -> DataFrame:
     """Run a streaming DataFrame until the source is drained; return the
     final result as a BATCH DataFrame (memory sink snapshot).
 
     The deterministic end-to-end harness: bounded replay in, one
-    ``processAllAvailable`` drain, stable table out — which makes whole
-    streaming pipelines value-hash-checkable against a SQL oracle.
-
-    ``shuffle_partitions`` right-sizes the STATEFUL shuffle for a
-    bounded replay: a stateful query instantiates one state store (and,
-    for applyInPandasWithState, one Python worker round) per shuffle
-    partition per micro-batch, so a vanilla session's default 200
-    partitions pay ~25× the per-batch fixed cost for megabyte-scale
-    replays. The conf is set only for the drain (the stream binds its
-    state partitioning at start) and restored after; pass ``None`` to
-    keep the session's setting — production streams size this to state
-    key cardinality, not to the gate's replay.
+    :func:`drain`, stable table out — which makes whole streaming
+    pipelines value-hash-checkable against a SQL oracle.
     """
-    import tempfile
-    import uuid
-
-    name = f"drain_{uuid.uuid4().hex[:12]}"
-    ckpt = tempfile.mkdtemp(prefix="spark_graft_ckpt_")
-    key = "spark.sql.shuffle.partitions"
-    old = spark.conf.get(key)
-    if shuffle_partitions:
-        spark.conf.set(key, str(shuffle_partitions))
-    try:
-        q = (
-            df.writeStream.outputMode(mode)
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-    finally:
-        if shuffle_partitions:
-            spark.conf.set(key, old)
-        # The memory-sink table holds the drained result; the (RocksDB)
-        # checkpoint is dead weight once the query stops — repeated
-        # drains must not accumulate state dirs in /tmp.
-        fs.rmtree(ckpt)
-    return spark.table(name)
+    return _drain_memory(spark, df, mode)[0]
 
 
 def drain_to_table_with_artifacts(
@@ -423,9 +478,6 @@ def drain_to_table_with_artifacts(
     df: DataFrame,
     art_dir: str,
     mode: str = "complete",
-    render: Callable[..., str] | None = None,
-    limit: int = 10_000,
-    shuffle_partitions: int | None = 8,
 ) -> DataFrame:
     """Single-drain fusion of :func:`drain_to_table` and
     :func:`per_batch_artifact_sink`: ONE pass over the stream whose
@@ -440,16 +492,10 @@ def drain_to_table_with_artifacts(
     inside the ledger guard; the snapshot capture sits outside it, so a
     ledger-skipped replay still refreshes the returned table.
     """
-    import tempfile
-
-    fs.makedirs(art_dir)
-    ledger = os.path.join(art_dir, "_ledger")
-    fs.makedirs(ledger)
-
-    def default_render(pdf, batch_id: int) -> str:
-        return pdf.to_csv(index=False)
-
-    render_fn = render or default_render
+    write_artifact = _ledgered(
+        _artifact_writer(art_dir, default_render),
+        os.path.join(art_dir, "_ledger"),
+    )
     holder: dict[str, DataFrame] = {}
 
     def cb(batch_df: DataFrame, batch_id: int) -> None:
@@ -457,32 +503,9 @@ def drain_to_table_with_artifacts(
         holder["snapshot"] = batch_df.localCheckpoint(eager=True)
         if prev is not None:
             prev.unpersist()
-        marker = os.path.join(ledger, f"batch-{batch_id}.done")
-        if fs.exists(marker):
-            return
-        pdf = holder["snapshot"].limit(limit).toPandas()
-        path = os.path.join(art_dir, f"batch-{batch_id}.txt")
-        fs.write_text_atomic(path, render_fn(pdf, batch_id))
-        fs.write_text_atomic(marker, "done")
+        write_artifact(holder["snapshot"], batch_id)
 
-    ckpt = tempfile.mkdtemp(prefix="spark_graft_ckpt_")
-    key = "spark.sql.shuffle.partitions"
-    old = spark.conf.get(key)
-    if shuffle_partitions:
-        spark.conf.set(key, str(shuffle_partitions))
-    try:
-        q = (
-            df.writeStream.outputMode(mode)
-            .foreachBatch(cb)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-    finally:
-        if shuffle_partitions:
-            spark.conf.set(key, old)
-        fs.rmtree(ckpt)
+    _drain_checkpointed(spark, df.writeStream.outputMode(mode).foreachBatch(cb))
     if "snapshot" not in holder:
         return local_relation(spark, [], df.schema)
     return holder["snapshot"]
@@ -519,8 +542,7 @@ def _compact_ledger(ledger_dir: str) -> None:
     """Fold the contiguous committed prefix into the ``_watermark``
     file and delete its loose markers — WITHOUT this, the per-batch
     ledger listing is O(total batches ever) and a long-lived stream
-    goes quadratic (round-9 finding; the 100 TB deployment runs
-    forever). Crash-safe: the watermark is written atomically BEFORE
+    goes quadratic. Crash-safe: the watermark is written atomically BEFORE
     any marker is deleted and ids ≤ watermark short-circuit the replay
     check, so a crash between the two steps only leaves redundant
     markers."""
