@@ -45,11 +45,8 @@ CORE = tuple(
 # ``queries.reference`` is imported.
 PARENTS = (PKG, f"{PKG}.operators", f"{PKG}.queries")
 
-# numpy and pandas stay out of the core. The one exception: the lazy
-# pandas import inside ``session.local_relation``, which builds a
-# LocalRelation through Arrow.
+# numpy and pandas stay out of the core.
 HEAVY = ("numpy", "pandas")
-HEAVY_ALLOWED = {(f"{PKG}.session", "local_relation", "pandas")}
 
 # Names that left the core, by old module: (new module, names).
 MOVED = {
@@ -170,7 +167,7 @@ def _violations(module: str, top_level_only: bool = False) -> list[str]:
         head = name.split(".")[0]
         if head == PKG and name not in CORE + PARENTS:
             out.append(f"{module} ({fn or 'module level'}) imports {name}")
-        if head in HEAVY and (module, fn, head) not in HEAVY_ALLOWED:
+        if head in HEAVY:
             out.append(f"{module} ({fn or 'module level'}) imports {name}")
     return out
 

@@ -62,6 +62,17 @@ def test_local_roundtrip(tmp_path):
     fs.rmtree(str(tmp_path / "a"))  # idempotent on missing
 
 
+def test_read_parquet_is_none_until_a_file_lands(spark, tmp_path):
+    """A missing index and an existing directory with no data file both
+    read as None; once a file lands, the read returns its rows."""
+    path = str(tmp_path / "idx")
+    assert fs.read_parquet(spark, path) is None
+    fs.makedirs(path)
+    assert fs.read_parquet(spark, path) is None
+    spark.range(3).write.mode("append").parquet(path)
+    assert fs.read_parquet(spark, path).count() == 3
+
+
 def test_local_walk_files_skips_hidden(tmp_path):
     (tmp_path / "x.parquet").write_bytes(b"d")
     (tmp_path / "_hidden").mkdir()

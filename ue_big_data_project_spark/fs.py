@@ -68,6 +68,22 @@ def exists(path: str) -> bool:
     return bool(fs.exists(p))
 
 
+def read_parquet(spark, path: str):
+    """``spark.read.parquet(path)``, or None while nothing readable is
+    there. Existence is checked first: Spark's own probe of a missing
+    path logs a FileNotFoundException stack trace before it raises."""
+    from pyspark.errors import AnalysisException
+
+    if not exists(path):
+        return None
+    try:
+        return spark.read.parquet(path)
+    except AnalysisException:
+        # The directory exists but holds no data file yet: a first
+        # write that failed before it committed one.
+        return None
+
+
 def isdir(path: str) -> bool:
     if is_local(path):
         return os.path.isdir(_strip_file_scheme(path))

@@ -86,16 +86,13 @@ def hour_bucket(heure: str) -> str:
     return f"CASE WHEN {h} IS NOT NULL THEN format_string('%02d:00', {h}) END"
 
 
-def parse_wait_minutes(temps: Column | str) -> Column:
+def parse_wait_minutes(temps: str) -> str:
     """``"proche"`` → 0, ``"3mn"`` → 3 (reference: src/naolib_consumer.py:70-76).
 
-    Non-numeric leftovers become null (cast semantics), matching the
+    Non-numeric leftovers become null (``digits_only``), matching the
     PERMISSIVE contract.
     """
-    c = F.col(temps) if isinstance(temps, str) else temps
-    return F.when(c == "proche", F.lit(0)).otherwise(
-        F.regexp_replace(c, "[^0-9]", "").try_cast("int")
-    )
+    return f"CASE WHEN {temps} = 'proche' THEN 0 ELSE {digits_only(temps)} END"
 
 
 def digits_only(col: str) -> str:
@@ -103,9 +100,7 @@ def digits_only(col: str) -> str:
     return f"try_cast(regexp_replace({col}, '[^0-9]', '') AS INT)"
 
 
-def occupancy_bar(
-    bikes: Column, stands: Column, total: Column, no_data: str = "[No data]"
-) -> Column:
+def occupancy_bar(bikes: Column, stands: Column, total: Column) -> Column:
     """ASCII occupancy bar — native rewrite of U2 (src/bike_consumer.py:103-122).
 
     ``"#" * bikes + "-" * stands + "?" * |total - bikes - stands|``; the
@@ -122,7 +117,7 @@ def occupancy_bar(
         F.repeat(F.lit("?"), F.greatest(disc, F.lit(0))),
     )
     return F.when(
-        bikes.isNull() | stands.isNull() | total.isNull(), F.lit(no_data)
+        bikes.isNull() | stands.isNull() | total.isNull(), F.lit("[No data]")
     ).otherwise(bar)
 
 

@@ -508,8 +508,8 @@ def read_bloom_pruned(
     if not values:
         return spark.read.parquet(path).where(F.lit(False))
     side_path = os.path.join(path, f"_bloom_{col}")
-    side = spark.read.parquet(side_path)
-    meta = side.select("m_bits", "k", "col").first()
+    side = fs.read_parquet(spark, side_path)
+    meta = None if side is None else side.select("m_bits", "k", "col").first()
     if meta is None or meta["col"] != col:
         raise ValueError(f"no bloom sidecar for column {col!r} at {path}")
     m_bits, k = int(meta["m_bits"]), int(meta["k"])

@@ -37,6 +37,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ue_big_data_project_spark import fs
 from ue_big_data_project_spark.session import local_relation
 
 from ue_big_data_project_spark.functions import hex_digit_value, pround
@@ -937,18 +938,12 @@ def update_dedup_index(
     yields zero survivors (all fingerprints are then indexed) — safe
     under at-least-once batch delivery.
 
-    Index existence is probed THROUGH Spark (not the local filesystem),
+    Index existence is probed through ``fs`` (Hadoop for a URI path),
     so hdfs:///s3a:// index paths behave identically to local ones — a
     local-only probe would silently screen against an empty index on
     remote stores and admit every duplicate.
     """
-    from pyspark.errors import AnalysisException
-
-    try:
-        seen = spark.read.parquet(index_path)
-        seen.schema  # force resolution; missing/empty path raises here
-    except AnalysisException:
-        seen = None
+    seen = fs.read_parquet(spark, index_path)
     survivors = incremental_exact_dedup(new_docs, seen, id_col, text_col)
     survivors = survivors.localCheckpoint(eager=True)
     survivors.select("fingerprint").write.mode("append").parquet(index_path)
@@ -985,8 +980,6 @@ def write_cluster_map(
     out-of-band config."""
     import json
     import os
-
-    from ue_big_data_project_spark import fs
 
     df = assign.select(node_col, comp_col).withColumn(
         "_cbucket", _comp_bucket(comp_col, n_buckets)
@@ -1050,7 +1043,6 @@ def append_cluster_map(
     import json
     import os
 
-    from ue_big_data_project_spark import fs
     from ue_big_data_project_spark.operators.graph import (
         append_components_detail,
     )
@@ -1492,8 +1484,6 @@ def rewrite_cluster_map(spark, path: str, keep_docs: DataFrame) -> int:
     Returns the surviving row count."""
     import json
     import os
-
-    from ue_big_data_project_spark import fs
 
     meta = json.loads(fs.read_text(os.path.join(path, _CLUSTER_META)))
     n_buckets = int(meta["n_buckets"])

@@ -23,6 +23,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ue_big_data_project_spark import fs
 from ue_big_data_project_spark.functions import pround
 from ue_big_data_project_spark.session import local_relation
 from ue_big_data_project_spark.functions.vectors import cosine, dot, norm2
@@ -1063,14 +1064,10 @@ def ivf_index_append(
     increments for a streamed index through the stream (or a
     ``batch_id=...`` subdir write) instead.
     """
-    from pyspark.errors import AnalysisException
-
     centroids = spark.read.parquet(index_path.rstrip("/") + "_centroids")
-    try:
-        existing_cols = spark.read.parquet(index_path).columns
-    except AnalysisException:
-        existing_cols = []  # no data yet: the append creates the layout
-    if "batch_id" in existing_cols:
+    # None: no data yet, and the append creates the layout.
+    existing = fs.read_parquet(spark, index_path)
+    if existing is not None and "batch_id" in existing.columns:
         raise ValueError(
             f"{index_path} uses the stream-ingested batch_id=N/cell=C "
             "layout; a flat append would conflict with it — ingest the "

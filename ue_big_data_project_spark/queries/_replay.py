@@ -15,6 +15,8 @@ import time
 
 from pyspark.sql import Column, DataFrame
 
+from ue_big_data_project_spark.session import _arrow_table
+
 
 def stage_batches(
     df: DataFrame,
@@ -77,16 +79,9 @@ def _write_empty_batch(df: DataFrame, pdir: str) -> None:
     placeholders only (the file-stream source reads the caller's
     explicit schema; a zero-row footer just has to parse), so paying a
     filter-scan + write job per empty value bought nothing."""
-    import pyarrow as pa
     import pyarrow.parquet as pq
-    from pyspark.sql.pandas.types import to_arrow_schema
 
-    schema = to_arrow_schema(df.schema)
     os.makedirs(pdir, exist_ok=True)
     pq.write_table(
-        pa.table(
-            {f.name: pa.array([], type=f.type) for f in schema},
-            schema=schema,
-        ),
-        os.path.join(pdir, "part-empty.parquet"),
+        _arrow_table([], df.schema), os.path.join(pdir, "part-empty.parquet")
     )

@@ -203,7 +203,7 @@ def q3_bus_positions(
         df = df.filter(F.col("numLigne") == line)
     df = (
         df.filter(F.col("tempsReel") == "true")
-        .withColumn("minutes", parse_wait_minutes("temps"))
+        .withColumn("minutes", F.expr(parse_wait_minutes("temps")))
         .withColumn("created_at", F.col("created_at").try_cast("timestamp"))
     )
     agg = windowed_agg(

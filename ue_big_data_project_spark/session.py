@@ -8,7 +8,8 @@ It sets only what differs from Spark's defaults; adaptive execution
 (partition coalescing, skew-join splitting) and parquet filter pushdown
 are on by default and are not restated:
 
-- Arrow on — every ``toPandas``/pandas-UDF boundary is Arrow-batched.
+- Arrow on for ``toPandas`` and pandas UDFs. Driver rows reach the JVM
+  as a ``pyarrow.Table`` (``local_relation``), which needs no conf.
 - RocksDB state store for the streaming queries' state.
 - Session timezone pinned UTC — the reference mixes naive ISO strings,
   epoch seconds and Europe/Paris offsets (src/bike_producer.py:39); we
@@ -17,6 +18,7 @@ are on by default and are not restated:
 
 from __future__ import annotations
 
+import datetime
 import os
 
 from pyspark.sql import SparkSession
@@ -53,8 +55,9 @@ def get_spark(
     """Build (or reuse) the engine's SparkSession.
 
     Local-mode defaults come from env: ``SPARK_GRAFT_CPUS`` (threads) and
-    ``SPARK_GRAFT_DRIVER_MEM``. On a real cluster, pass ``master`` or set
-    it via spark-submit and everything else still applies.
+    ``SPARK_GRAFT_DRIVER_MEM`` (else half the machine's memory). On a real
+    cluster, pass ``master`` or set it via spark-submit and everything
+    else still applies.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     master = master or os.environ.get("SPARK_MASTER", f"local[{cpus}]")
@@ -65,7 +68,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config(
             "spark.driver.memory",
-            os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"),
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM", _default_driver_memory()),
         )
         .config("spark.ui.enabled", "false")
         # Streaming state lives in RocksDB rather than on the JVM heap.
@@ -79,6 +82,13 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def _default_driver_memory() -> str:
+    """Half the machine's physical memory in whole GiB, at least 1g: the
+    driver heap must leave room for the Python side and the OS."""
+    total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1, total // 2**31)}g"
 
 
 def apply_session_conf(spark: SparkSession) -> None:
@@ -98,24 +108,23 @@ def apply_session_conf(spark: SparkSession) -> None:
 def local_relation(spark: SparkSession, rows, schema):
     """Bounded local rows → DataFrame as a pure-JVM ``LocalRelation``.
 
-    ``createDataFrame(list, schema)`` builds a PYTHON-backed RDD with
-    ``defaultParallelism`` slices, and every downstream materialization
-    then pays a Python worker round-trip per slice — measured ~140 ms
-    per slice at local[32], i.e. multiple seconds per action for a
-    3-row stats frame, and the same waste as executor-side Python
-    worker spin-up on a cluster. Routing the same rows through a
-    pandas frame + Arrow (under
-    ``spark.sql.execution.arrow.localRelationThreshold``) yields a
-    ``LocalRelation`` instead: no Python at runtime, no job to build a
-    broadcast from it, and the optimizer can fold/size it. The Arrow
-    path validates values against ``schema``; any conversion failure
-    falls back to the classic list path, so behavior can only match.
+    ``createDataFrame(list, schema)`` builds a Python-backed RDD, and
+    every action on it pays a Python worker round trip per slice
+    (~140 ms per slice measured at local[32]). The same rows as a
+    ``pyarrow.Table`` (``_arrow_table``) become a ``LocalRelation``
+    under ``spark.sql.execution.arrow.localRelationThreshold``: no
+    Python at runtime, and the optimizer can fold and size it. Spark
+    takes a table whatever ``spark.sql.execution.arrow.pyspark.enabled``
+    says, so the session's conf is neither read nor set. A value Arrow
+    cannot convert to its field's type (a list for a struct) falls back
+    to the classic path, which accepts or rejects it as
+    ``createDataFrame`` does.
 
     Use for BOUNDED driver-side results (union-find labels, centroid
     tables, stats sidecars, VALUES-style fixtures) — never for
     unbounded data, which must not be on the driver at all (guide §5).
     """
-    import pandas as pd
+    import pyarrow as pa
     from pyspark.sql import types as T
 
     if isinstance(schema, str):
@@ -123,50 +132,35 @@ def local_relation(spark: SparkSession, rows, schema):
     # Materialize once: a generator would be consumed by the Arrow
     # attempt and leave the fallback below with nothing to read.
     rows = list(rows)
-    # pandas/Arrow read a float NaN as a missing value, so a frame
-    # holding one must take the classic path to keep it a NaN.
-    if _has_nan(rows):
-        return spark.createDataFrame(rows, schema)
     try:
-        names = [f.name for f in schema.fields]
-        data = [
-            tuple(r.get(n) for n in names) if isinstance(r, dict) else tuple(r)
-            for r in rows
-        ]
-        if not data:
-            # Zero rows: an empty pyarrow table with the exact Arrow
-            # schema (the pandas path cannot type empty columns).
-            import pyarrow as pa
-            from pyspark.sql.pandas.types import to_arrow_schema
-
-            pa_schema = to_arrow_schema(schema)
-            return spark.createDataFrame(
-                pa.table(
-                    {f.name: pa.array([], type=f.type) for f in pa_schema},
-                    schema=pa_schema,
-                )
-            )
-        pdf = pd.DataFrame.from_records(data, columns=names)
-        arrow_prev = spark.conf.get(
-            "spark.sql.execution.arrow.pyspark.enabled", "true"
-        )
-        spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
-        try:
-            df = spark.createDataFrame(pdf, schema=schema)
-        finally:
-            spark.conf.set(
-                "spark.sql.execution.arrow.pyspark.enabled", arrow_prev
-            )
-        return df
-    except Exception:
+        return spark.createDataFrame(_arrow_table(rows, schema), schema)
+    except pa.ArrowException:
         return spark.createDataFrame(rows, schema)
 
 
-def _has_nan(v) -> bool:
-    if isinstance(v, float):
-        return v != v
-    if isinstance(v, (list, tuple)):
-        return any(_has_nan(x) for x in v)
-    if isinstance(v, dict):
-        return any(_has_nan(x) for x in v.values())
-    return False
+def _arrow_table(rows, schema):
+    """Rows → a ``pyarrow.Table`` typed by the Spark ``schema``: one
+    array per field, tuple rows by position, dict rows by field name.
+    ``from_pandas=False`` keeps a float NaN distinct from a null."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    arrow_schema = to_arrow_schema(schema)
+    data = [
+        tuple(r.get(n) for n in schema.names) if isinstance(r, dict) else tuple(r)
+        for r in rows
+    ]
+    arrays = []
+    for i, f in enumerate(arrow_schema):
+        column = [r[i] for r in data]
+        if pa.types.is_timestamp(f.type):
+            # Under PYARROW_IGNORE_TIMEZONE (pandas-on-Spark sets it)
+            # pa.array keeps an aware datetime's wall time and drops its
+            # offset; as UTC the wall time is the instant. A naive
+            # datetime is read as UTC, the session's zone.
+            column = [
+                v.astimezone(datetime.timezone.utc) if getattr(v, "tzinfo", None) else v
+                for v in column
+            ]
+        arrays.append(pa.array(column, type=f.type, from_pandas=False))
+    return pa.Table.from_arrays(arrays, schema=arrow_schema)

@@ -189,14 +189,8 @@ def _read_partitioned_index(
     (a crashed earlier attempt of this same batch id) — partition
     pruning on the hive ``batch_id`` column, so the exclusion never
     scans the excluded files. None when the index does not exist yet."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        df = sp.read.parquet(path)
-        df.schema
-    except AnalysisException:
-        return None
-    if "batch_id" in df.columns:
+    df = fs.read_parquet(sp, path)
+    if df is not None and "batch_id" in df.columns:
         df = df.filter(F.col("batch_id") != F.lit(batch_id)).drop(
             "batch_id"
         )
@@ -266,8 +260,6 @@ def dedup_ingest_stream(
     write ("bloom_update", "corpus_write", "band_index_append",
     "fingerprint_append") to exercise the crash windows above.
     """
-    from pyspark.errors import AnalysisException
-
     from ue_big_data_project_spark.operators.dedup import (
         incremental_exact_dedup,
         incremental_minhash_filter,
@@ -789,8 +781,6 @@ def ivf_ingest_stream(
     independent of index size. Quantizer drift under a shifting stream
     is a rebuild decision; watch ``similarity.ivf_cell_stats``.
     """
-    from pyspark.errors import AnalysisException
-
     from ue_big_data_project_spark.operators.similarity import _write_tagged
 
     centroids_path = index_path.rstrip("/") + "_centroids"
@@ -809,16 +799,15 @@ def ivf_ingest_stream(
             # A one-shot build/append layout (flat cell=C dirs) at this
             # path would conflict with the batch_id=N/cell=C partitions
             # this stream writes — refuse rather than brick the index.
-            try:
-                if "batch_id" not in sp.read.parquet(index_path).columns:
-                    raise ValueError(
-                        f"{index_path} uses the flat build_ivf_index "
-                        "layout; stream batches would conflict with it "
-                        "— append via similarity.ivf_index_append, or "
-                        "point the stream at a fresh index path"
-                    )
-            except AnalysisException:
-                pass  # no data yet: this stream creates the layout
+            # None: no data yet, and this stream creates the layout.
+            existing = fs.read_parquet(sp, index_path)
+            if existing is not None and "batch_id" not in existing.columns:
+                raise ValueError(
+                    f"{index_path} uses the flat build_ivf_index "
+                    "layout; stream batches would conflict with it "
+                    "— append via similarity.ivf_index_append, or "
+                    "point the stream at a fresh index path"
+                )
             layout_checked = True
         centroids = sp.read.parquet(centroids_path)
         _write_tagged(
@@ -877,8 +866,6 @@ def bm25_ingest_stream(
     Per-batch cost: one tokenize + one (doc, term) shuffle of the
     batch plus a batch-vocabulary aggregate — O(batch), independent of
     index size."""
-    from pyspark.errors import AnalysisException
-
     from ue_big_data_project_spark.operators.retrieval import build_postings
 
     root = index_path.rstrip("/")
@@ -890,16 +877,15 @@ def bm25_ingest_stream(
         sp = batch_df.sparkSession
         nonlocal layout_checked
         if not layout_checked:
-            try:
-                if "batch_id" not in sp.read.parquet(root).columns:
-                    raise ValueError(
-                        f"{root} uses the flat build_text_index layout; "
-                        "stream batches would conflict with it — append "
-                        "via retrieval.append_text_index, or point the "
-                        "stream at a fresh index path"
-                    )
-            except AnalysisException:
-                pass  # no data yet: this stream creates the layout
+            # None: no data yet, and this stream creates the layout.
+            existing = fs.read_parquet(sp, root)
+            if existing is not None and "batch_id" not in existing.columns:
+                raise ValueError(
+                    f"{root} uses the flat build_text_index layout; "
+                    "stream batches would conflict with it — append "
+                    "via retrieval.append_text_index, or point the "
+                    "stream at a fresh index path"
+                )
             layout_checked = True
         postings, _doclen = build_postings(batch_df, id_col, text_col)
         # One eager materialization of the increment's postings feeds
