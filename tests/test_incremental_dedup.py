@@ -906,3 +906,21 @@ def test_jaccard_index_staleness_audit(spark, tmp_path):
     append_jaccard_index(spark, path, docs("b", 1000, 40))
     drifted = jaccard_index_staleness(spark, path)
     assert drifted["staleness_ratio"] > fresh["staleness_ratio"]
+
+
+def test_positional_prune_keeps_a_pair_through_a_hash_collision(spark):
+    """The positional bound takes each rank's minimum on its own: a
+    collision row with a smaller a-rank but a larger b-rank than the
+    true first match must not tighten the bound and drop the pair."""
+    schema = "id_a long, id_b long, _ia int, _jb int, _na int, _nb int"
+
+    def kept(matches):
+        pairs = spark.createDataFrame(
+            [(1, 2, ia, jb, 10, 10) for ia, jb in matches], schema
+        )
+        return DD._positional_prune(pairs, "id_a", "id_b", 0.5).collect()
+
+    # J >= 0.5 needs |A∩B| >= 0.5/1.5 * 20 = 6.67; the true match at
+    # ranks (3, 2) bounds the overlap at 1 + min(7, 8) = 8.
+    assert [tuple(r) for r in kept([(3, 2)])] == [(1, 2)]
+    assert [tuple(r) for r in kept([(3, 2), (1, 9)])] == [(1, 2)]

@@ -159,8 +159,9 @@ def test_idempotent_foreach_batch_skips_committed(spark, tmp_path, stream_rows):
     S.run_until_drained(S.idempotent_foreach_batch(sdf, effect, ledger))
     first = list(calls)
     assert first  # ran at least one batch and recorded markers
-    # Replay the SAME source without a checkpoint: every batch id is
-    # re-delivered, but the ledger suppresses the side effect.
+    # Replay the SAME source: the checkpoint beside the ledger resumes
+    # past every committed batch, and a batch id re-delivered after a
+    # crash would meet the ledger, which suppresses the side effect.
     sdf2 = S.file_stream(spark, path, EVENTS_SCHEMA, max_files_per_trigger=1)
     S.run_until_drained(S.idempotent_foreach_batch(sdf2, effect, ledger))
     assert calls == first
@@ -185,8 +186,9 @@ def test_per_batch_artifact_sink(spark, tmp_path, stream_rows):
     with open(os.path.join(out, artifacts[0])) as f:
         head = f.readline()
     assert head.startswith("batch=") and "rows=" in head
-    # Replay without a checkpoint: ledger suppresses re-rendering, so
-    # artifact mtimes (and count) are unchanged.
+    # Replay the same source: the checkpoint beside the ledger resumes
+    # past every rendered batch (and the ledger would suppress a
+    # re-delivered one), so artifact mtimes (and count) are unchanged.
     before = {
         f: os.path.getmtime(os.path.join(out, f)) for f in artifacts
     }
@@ -278,6 +280,74 @@ def test_drain_restores_shuffle_partitions_when_start_raises(spark):
         assert spark.conf.get(key) == "13"
     finally:
         spark.conf.set(key, prev)
+
+
+def test_drain_removes_its_checkpoint_when_the_callback_raises(
+    spark, tmp_path, monkeypatch, stream_rows
+):
+    """Spark keeps the temporary checkpoint of a failed query; a drain
+    re-raises the failure and still leaves no checkpoint behind."""
+    path = write_batches(str(tmp_path), stream_rows)
+    scratch = tmp_path / "tmp"
+    scratch.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(scratch))
+    key = "spark.sql.streaming.checkpointLocation"
+    prev = spark.conf.get(key, None)
+    queries = []
+
+    def fail(batch_df, batch_id):
+        raise RuntimeError("sink failed")
+
+    def start():
+        sdf = S.file_stream(spark, path, EVENTS_SCHEMA)
+        queries.append(S.foreach_batch(sdf, fail))
+        return queries[0]
+
+    with pytest.raises(Exception, match="sink failed"):
+        S.drain(spark, start)
+    root = queries[0]._jsq.streamingQuery().resolvedCheckpointRoot()
+    assert not os.path.exists(root.removeprefix("file:"))
+    assert os.listdir(scratch) == []
+    assert spark.conf.get(key, None) == prev
+
+
+def test_ledgered_stream_restart_keeps_new_rows(spark, tmp_path):
+    """A ledgered stream restarted on the same ledger resumes from its
+    checkpoint, so rows that landed between the runs reach the callback
+    instead of being skipped as already-committed batch ids."""
+    src = tmp_path / "in"
+    src.mkdir()
+    ledger = str(tmp_path / "ledger")
+    seen: list[int] = []
+
+    def effect(batch_df, batch_id):
+        seen.extend(r["event_id"] for r in batch_df.collect())
+
+    def land_and_drain(name, ids):
+        with open(src / name, "w") as f:
+            f.writelines(json.dumps(row(i, 0)) + "\n" for i in ids)
+        sdf = S.file_stream(spark, str(src), EVENTS_SCHEMA)
+        S.drain(spark, lambda: S.idempotent_foreach_batch(sdf, effect, ledger))
+
+    land_and_drain("f0.json", [1, 2])
+    land_and_drain("f1.json", [3, 4])
+    assert sorted(seen) == [1, 2, 3, 4]
+
+
+def test_to_console_drains_untruncated(spark, tmp_path, stream_rows):
+    """K1: the console sink runs through a drain, sees every row and
+    prints untruncated, like the reference's."""
+    path = write_batches(str(tmp_path), stream_rows)
+    queries = []
+
+    def start():
+        sdf = S.file_stream(spark, path, EVENTS_SCHEMA, max_files_per_trigger=1)
+        queries.append(S.to_console(sdf.select("event_id", "event_type")))
+        return queries[0]
+
+    progress = S.drain(spark, start)
+    assert sum(p.numInputRows for p in progress) == 8
+    assert "truncate=false" in queries[0]._jsq.explainInternal(False)
 
 
 def test_replay_parquet_reads_one_file_and_stages_nothing(

@@ -270,21 +270,21 @@ def ngram_jaccard_pairs(
     prefix = ranked.filter(F.col("_rn") <= prefix_len)
     a, b = prefix.alias("a"), prefix.alias("b")
     # Positional filter (PPJoin, lossless — round-12 verdict task 4):
-    # take the lexicographically MINIMAL matched (a-rank, b-rank) pair
-    # (i, j) per candidate. Every truly-shared shingle s has global
-    # order ≥ the minimum matched hash's (if o(s) were smaller, s's
-    # ranks in BOTH docs would precede (i, j), putting s inside both
+    # take the minimal matched a-rank i and, separately, the minimal
+    # matched b-rank j per candidate. Every truly-shared shingle s has
+    # global order ≥ the minimum matched hash's (if o(s) were smaller,
+    # s's ranks in BOTH docs would precede it, putting s inside both
     # prefixes and making s's hash an earlier match — contradiction),
     # so s occupies a rank ≥ i in A and ≥ j in B, giving
     # |A∩B| ≤ 1 + min(n_a − i, n_b − j). J ≥ t requires
     # |A∩B| ≥ t/(1+t)·(n_a+n_b); pairs whose positional bound cannot
     # reach that are dropped BEFORE the full-array verification join.
-    # Hash collisions only ADD matched rows, which can only move the
-    # minimum earlier and LOOSEN the bound — a collision never drops a
-    # true pair (the r12 deferral's concern), and spurious survivors
-    # are still rejected by the exact string-array verification. The
-    # former `.distinct()` on (id_a, id_b) becomes a groupBy on the
-    # same keys — one exchange either way, no new shuffle.
+    # Hash collisions only ADD matched rows, which can only lower the
+    # componentwise minima and LOOSEN the bound — a collision never
+    # drops a true pair (the r12 deferral's concern), and spurious
+    # survivors are still rejected by the exact string-array
+    # verification. The former `.distinct()` on (id_a, id_b) becomes a
+    # groupBy on the same keys — one exchange either way, no new shuffle.
     candidates = (
         a.join(
             b,
@@ -1161,32 +1161,34 @@ def _positional_prune(
     ``pairs`` carries one row per matched prefix hash with the ranks
     ``_ia``/``_jb`` of the matched rows in each document's frozen-order
     list and the documents' distinct-shingle counts ``_na``/``_nb``.
-    Take the lexicographically MINIMAL matched ``(_ia, _jb)`` per
-    ``(left, right)`` pair: every truly-shared shingle has global order
-    ≥ the minimum matched hash's (were it smaller, its ranks in both
-    documents would precede the minimum and put it inside both
-    prefixes, making it an earlier match), so it occupies a rank ≥ _ia
-    in A and ≥ _jb in B, giving |A∩B| ≤ 1 + min(n_a−_ia, n_b−_jb).
-    J ≥ t requires |A∩B| ≥ t/(1+t)·(n_a+n_b); pairs whose bound cannot
-    reach it are dropped BEFORE the full-array verification join. Hash
-    collisions only ADD matched rows — the minimum can only move
-    earlier, which LOOSENS the bound, so a collision never drops a
-    true pair; spurious survivors are rejected by the exact
-    verification. The former per-pair ``.distinct()`` becomes a
+    Take the minimal matched ``_ia`` and, separately, the minimal
+    matched ``_jb`` per ``(left, right)`` pair: every truly-shared
+    shingle has global order ≥ the minimum matched hash's (were it
+    smaller, its ranks in both documents would precede the minimum and
+    put it inside both prefixes, making it an earlier match), so it
+    occupies a rank ≥ min _ia in A and ≥ min _jb in B, giving
+    |A∩B| ≤ 1 + min(n_a−min _ia, n_b−min _jb). J ≥ t requires
+    |A∩B| ≥ t/(1+t)·(n_a+n_b); pairs whose bound cannot reach it are
+    dropped BEFORE the full-array verification join. Hash collisions
+    only ADD matched rows, and an added row can only lower each
+    componentwise minimum, which LOOSENS the bound, so a collision
+    never drops a true pair; spurious survivors are rejected by the
+    exact verification. The former per-pair ``.distinct()`` becomes a
     groupBy on the same keys — one exchange either way. The 1e-9 nudge
     means float error can only KEEP a borderline pair."""
     return (
         pairs.groupBy(left, right)
         .agg(
-            F.min(F.struct("_ia", "_jb")).alias("_m"),
+            F.min("_ia").alias("_ia"),
+            F.min("_jb").alias("_jb"),
             F.first("_na").alias("_na"),
             F.first("_nb").alias("_nb"),
         )
         .filter(
             F.lit(1)
             + F.least(
-                F.col("_na") - F.col("_m._ia"),
-                F.col("_nb") - F.col("_m._jb"),
+                F.col("_na") - F.col("_ia"),
+                F.col("_nb") - F.col("_jb"),
             )
             >= F.lit(threshold / (1.0 + threshold))
             * (F.col("_na") + F.col("_nb"))

@@ -1478,7 +1478,7 @@ def streaming_cdc_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             "maxFilesPerTrigger", 1
         ).parquet(stage)
         snap = _os.path.join(root, "snap")
-        q = ingest.merge_ingest_stream(
+        ST.drain(spark, lambda: ingest.merge_ingest_stream(
             sdf,
             t["customer"],
             snap,
@@ -1493,8 +1493,7 @@ def streaming_cdc_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "c_acctbal": F.col("s.n").cast("double"),
                 "c_mktsegment": F.lit("NEW"),
             },
-        )
-        ST.run_until_drained(q)
+        ))
         out = ingest.read_merged_snapshot(spark, snap).select(
             "c_custkey",
             "c_name",
@@ -1589,7 +1588,7 @@ def streaming_cdc_merge_bucketed(
             "maxFilesPerTrigger", 1
         ).parquet(stage)
         snap = _os.path.join(root, "snap")
-        q = ingest.bucketed_merge_ingest_stream(
+        ST.drain(spark, lambda: ingest.bucketed_merge_ingest_stream(
             sdf,
             t["customer"],
             snap,
@@ -1605,8 +1604,7 @@ def streaming_cdc_merge_bucketed(
                 "c_acctbal": F.col("s.n").cast("double"),
                 "c_mktsegment": F.lit("NEW"),
             },
-        )
-        ST.run_until_drained(q)
+        ))
         out = ingest.read_bucketed_merged_snapshot(spark, snap).select(
             "c_custkey",
             "c_name",

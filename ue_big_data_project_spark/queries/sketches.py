@@ -444,10 +444,9 @@ def streaming_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
             .option("maxFilesPerTrigger", 1)
             .parquet(stage)
         )
-        q = ingest.hll_ingest_stream(
+        ST.drain(spark, lambda: ingest.hll_ingest_stream(
             sdf, _os.path.join(root, "registers"), grp, "event_id", p=_P
-        )
-        ST.run_until_drained(q)
+        ))
         est = ingest.read_hll_rollup(
             spark, _os.path.join(root, "registers"), grp, p=_P
         )
@@ -968,15 +967,14 @@ def streaming_cms_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         # Tokenize INSIDE the stream: the counter build consumes the
         # token stream per micro-batch.
-        q = ingest.cms_ingest_stream(
+        ST.drain(spark, lambda: ingest.cms_ingest_stream(
             toks_of(sdf),
             _os.path.join(root, "counters"),
             _os.path.join(root, "ledger"),
             "token",
             depth=_CMS_D,
             width=_CMS_W,
-        )
-        ST.run_until_drained(q)
+        ))
         counters = ingest.read_cms_rollup(spark, _os.path.join(root, "counters"))
         toks = toks_of(d)
         top = (

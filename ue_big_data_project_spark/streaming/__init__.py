@@ -6,7 +6,7 @@ sink → ``awaitTermination`` (src/naolib_consumer.py:49-175,
 src/bike_consumer.py:62-151, src/previous_tp_code.py:191-240).
 
 This engine exposes the same shapes source-agnostically: any streaming
-DataFrame (file-stream, rate, kafka, memory) flows through the same
+DataFrame (file-stream, kafka, memory) flows through the same
 operators, so every streaming pipeline is testable without Kafka by
 replaying files — and the *logic* is shared with batch (same column
 expressions), giving batch-vs-stream equivalence tests for free.
@@ -19,10 +19,13 @@ identical semantics to the reference's append-mode pipelines.
 
 This module is the transit system's streaming core: sources, the JSON
 parse, windowed aggregation, dedup, the sinks, the batch-id ledger
-behind :func:`idempotent_foreach_batch`, and :func:`drain`, the one
-bounded replay policy every drain harness is built on. The incremental
-ingest streams, MERGE and the windowed-rollup table built on that
-ledger live in :mod:`ue_big_data_project_spark.streaming.ingest`.
+behind :func:`idempotent_foreach_batch`, and :func:`drain`. The
+incremental ingest streams, MERGE and the windowed-rollup table built
+on that ledger live in :mod:`ue_big_data_project_spark.streaming.ingest`.
+
+Lifecycle: a query starts only in the four sinks (:func:`to_console`,
+:func:`to_memory`, :func:`foreach_batch`, :func:`idempotent_foreach_batch`),
+and every bounded run goes through :func:`drain`.
 """
 
 from __future__ import annotations
@@ -60,15 +63,6 @@ def file_stream(
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     return reader.load(path)
-
-
-def rate_stream(spark: SparkSession, rows_per_second: int = 10) -> DataFrame:
-    """Synthetic ``rate`` source (timestamp, value) for load tests."""
-    return (
-        spark.readStream.format("rate")
-        .option("rowsPerSecond", rows_per_second)
-        .load()
-    )
 
 
 def kafka_stream(
@@ -158,12 +152,10 @@ def dedup_stream(
 
 
 def to_console(
-    df: DataFrame,
-    mode: str = "append",
-    truncate: bool = False,
-    trigger_interval: str | None = None,
+    df: DataFrame, mode: str = "append", trigger_interval: str | None = None
 ) -> StreamingQuery:
-    """K1/K2 console sink (append or complete).
+    """K1/K2 console sink (append or complete), untruncated like the
+    reference's (src/previous_tp_code.py:231-236).
 
     ``trigger_interval`` (e.g. ``"60 seconds"``) replaces the
     reference's hand-rolled producer polling threads (S4,
@@ -171,7 +163,7 @@ def to_console(
     cadence.
     """
     w = df.writeStream.outputMode(mode).format("console").option(
-        "truncate", str(truncate).lower()
+        "truncate", "false"
     )
     if trigger_interval:
         w = w.trigger(processingTime=trigger_interval)
@@ -237,9 +229,14 @@ def idempotent_foreach_batch(
     """Exactly-once ``foreachBatch``: skip batch ids already committed
     to the ``ledger_dir`` idempotence ledger. Production sinks with
     native txn/batchId support (Delta, JDBC upsert) subsume it.
+
+    It checkpoints into the sibling ``<ledger_dir>_checkpoint``, so a
+    restart resumes its batch ids; from a fresh checkpoint they would
+    restart at 0 and the ledger would skip new rows as done.
     """
     return (
         df.writeStream.outputMode(mode)
+        .option("checkpointLocation", ledger_dir.rstrip("/") + "_checkpoint")
         .foreachBatch(_ledgered(fn, ledger_dir))
         .start()
     )
@@ -369,7 +366,8 @@ def stream_interval_join(
 
 def run_until_drained(query: StreamingQuery) -> None:
     """Process everything currently available, then stop (K7 lifecycle,
-    deterministic test variant of ``awaitTermination``)."""
+    deterministic test variant of ``awaitTermination``). Package code
+    calls it only through :func:`drain`."""
     try:
         query.processAllAvailable()
     finally:
@@ -391,35 +389,36 @@ def drain(
     """Run a bounded stream to completion: ``start()`` it, process
     everything available, stop it, and return its ``recentProgress``.
 
-    ``spark.sql.shuffle.partitions`` is pinned to
-    :data:`DRAIN_SHUFFLE_PARTITIONS` from before ``start()`` until the
-    query stops, then restored, also when ``start()`` or the drain
-    raises. The pin must cover the start because the stream binds its
-    state partitioning then, and it must last for the whole drain
-    because ingest streams run batch jobs inside ``foreachBatch`` that
-    read the setting when they run.
+    From before ``start()`` until the query stops, even when either
+    raises, two settings are pinned and then restored (or unset):
+    ``spark.sql.shuffle.partitions`` to :data:`DRAIN_SHUFFLE_PARTITIONS`
+    (the stream binds its state partitioning at the start, and ingest
+    streams run batch jobs inside ``foreachBatch`` that read it), and
+    ``spark.sql.streaming.checkpointLocation`` to a scratch root that is
+    removed afterwards, so no drain leaves a checkpoint behind. A query
+    that sets its own checkpoint (:func:`idempotent_foreach_batch`)
+    keeps it.
     """
-    key = "spark.sql.shuffle.partitions"
-    old = spark.conf.get(key)
-    spark.conf.set(key, str(DRAIN_SHUFFLE_PARTITIONS))
+    pins = {
+        "spark.sql.shuffle.partitions": str(DRAIN_SHUFFLE_PARTITIONS),
+        "spark.sql.streaming.checkpointLocation": tempfile.mkdtemp(
+            prefix="spark_graft_ckpt_"
+        ),
+    }
+    old = {key: spark.conf.get(key, None) for key in pins}
+    for key, value in pins.items():
+        spark.conf.set(key, value)
     try:
         query = start()
         run_until_drained(query)
         return query.recentProgress
     finally:
-        spark.conf.set(key, old)
-
-
-def _drain_checkpointed(spark: SparkSession, writer) -> list:
-    """:func:`drain` a ``DataStreamWriter`` with a scratch checkpoint,
-    removed afterwards: repeated drains must not pile up state dirs."""
-    ckpt = tempfile.mkdtemp(prefix="spark_graft_ckpt_")
-    try:
-        return drain(
-            spark, lambda: writer.option("checkpointLocation", ckpt).start()
-        )
-    finally:
-        fs.rmtree(ckpt)
+        for key, value in old.items():
+            if value is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, value)
+        fs.rmtree(pins["spark.sql.streaming.checkpointLocation"])
 
 
 def _glob_escape(path: str) -> str:
@@ -449,9 +448,8 @@ def _drain_memory(
 ) -> tuple[DataFrame, list]:
     """:func:`drain_to_table` that also returns the drain's progress."""
     name = f"drain_{uuid.uuid4().hex[:12]}"
-    writer = df.writeStream.outputMode(mode).format("memory").queryName(name)
     try:
-        progress = _drain_checkpointed(spark, writer)
+        progress = drain(spark, lambda: to_memory(df, name, mode))
         # Detach the result from the memory sink so its table can be
         # dropped: otherwise every drain in a long-lived session keeps a
         # registered table holding the full result.
@@ -505,7 +503,7 @@ def drain_to_table_with_artifacts(
             prev.unpersist()
         write_artifact(holder["snapshot"], batch_id)
 
-    _drain_checkpointed(spark, df.writeStream.outputMode(mode).foreachBatch(cb))
+    drain(spark, lambda: foreach_batch(df, cb, mode))
     if "snapshot" not in holder:
         return local_relation(spark, [], df.schema)
     return holder["snapshot"]

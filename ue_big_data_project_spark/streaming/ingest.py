@@ -28,6 +28,7 @@ from ue_big_data_project_spark.session import local_relation
 from ue_big_data_project_spark.streaming import (
     _ledger_watermark,
     _loose_marker_ids,
+    foreach_batch,
     idempotent_foreach_batch,
 )
 
@@ -1007,7 +1008,7 @@ def hll_ingest_stream(
             os.path.join(registers_path, f"batch_id={batch_id}")
         )
 
-    return sdf.writeStream.outputMode("append").foreachBatch(ingest).start()
+    return foreach_batch(sdf, ingest)
 
 
 def read_hll_rollup(
@@ -1164,7 +1165,7 @@ def dsir_score_stream(
             os.path.join(scores_path, f"batch_id={batch_id}")
         )
 
-    return sdf.writeStream.outputMode("append").foreachBatch(ingest).start()
+    return foreach_batch(sdf, ingest)
 
 
 def read_dsir_scores(spark: SparkSession, scores_path: str) -> DataFrame:
