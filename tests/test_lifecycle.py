@@ -1,11 +1,14 @@
 """The bounded-stream lifecycle.
 
 A streaming query starts in one of the four sink functions of
-``streaming``; a bounded run goes through ``streaming.drain``, the one
-caller of ``run_until_drained``; and only ``drain`` (the checkpoint
-root of a drain) and ``idempotent_foreach_batch`` (the checkpoint
-beside its ledger) choose a checkpoint. These tests pin that over the
-package's source, as ``test_boundary`` pins the core's imports.
+``streaming``, each through ``streaming._start``; a bounded run goes
+through ``streaming.drain``, the one caller of ``run_until_drained``;
+only ``drain`` (the checkpoint root of a drain) and
+``idempotent_foreach_batch`` (the checkpoint beside its ledger) choose
+a checkpoint; and only ``_start`` and ``drain`` set the shuffle width,
+besides ``session.get_spark``'s batch default. These tests pin that
+over the package's source, as ``test_boundary`` pins the core's
+imports.
 """
 
 from __future__ import annotations
@@ -101,3 +104,36 @@ def test_checkpoint_set_only_by_drain_and_the_ledgered_sink():
         and "checkpointLocation" in n.value
     )
     assert got == {(STREAMING, "drain"), (STREAMING, "idempotent_foreach_batch")}
+
+
+def test_queries_start_only_through_start():
+    started = _sites(
+        lambda n: isinstance(n, ast.Call)
+        and isinstance(n.func, ast.Attribute)
+        and n.func.attr == "start"
+    )
+    assert {site for site in started if site[0] == STREAMING} == {
+        (STREAMING, "_start")
+    }
+    assert _sites(_calls("_start")) == {(STREAMING, f) for f in SINKS}
+
+
+def test_shuffle_width_set_only_by_start_and_drain():
+    """Every use of the width's key that is not a ``.get`` read: the two
+    stream pins and ``get_spark``'s builder default."""
+    key = "spark.sql.shuffle.partitions"
+
+    def uses_key(node) -> bool:
+        if isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute):
+            if node.func.attr == "get":
+                return False
+        return any(
+            isinstance(c, ast.Constant) and c.value == key
+            for c in ast.iter_child_nodes(node)
+        )
+
+    assert _sites(uses_key) == {
+        (STREAMING, "_start"),
+        (STREAMING, "drain"),
+        (f"{PKG}.session", "get_spark"),
+    }

@@ -121,6 +121,29 @@ def test_local_relation_maps_dict_rows_by_field_name(spark):
     assert sorted(tuple(r) for r in df.collect()) == [("x", "y"), ("z", None)]
 
 
+_AWARE = dt.datetime(2024, 5, 1, 12, 0, tzinfo=_PARIS_SUMMER)
+NESTED_TIMESTAMPS = {
+    "array": ([(1, [_AWARE])], "id int, v array<timestamp>", "v[0]"),
+    "struct": ([(1, Row(u=_AWARE))], "id int, v struct<u:timestamp>", "v.u"),
+    "map": ([(1, {"k": _AWARE})], "id int, v map<string,timestamp>", "v['k']"),
+}
+
+
+@pytest.mark.parametrize("shape", sorted(NESTED_TIMESTAMPS))
+def test_local_relation_keeps_the_offset_of_a_nested_timestamp(
+    spark, monkeypatch, shape
+):
+    """12:00+02:00 is 10:00 UTC at any depth, also under
+    ``PYARROW_IGNORE_TIMEZONE`` (pandas-on-Spark sets it), where Arrow
+    keeps an aware datetime's wall time and drops its offset."""
+    monkeypatch.setenv("PYARROW_IGNORE_TIMEZONE", "1")
+    rows, schema, path = NESTED_TIMESTAMPS[shape]
+    df = local_relation(spark, rows, schema)
+    assert _analysed_root(df) == "LocalRelation"
+    got = df.selectExpr(f"unix_seconds({path}) AS s").first()["s"]
+    assert got == int(_AWARE.timestamp())
+
+
 @pytest.mark.parametrize("gib", [None, 1.5, 15.7, 64])
 def test_default_driver_memory_fits_the_machine(monkeypatch, gib):
     """Half the physical memory in whole GiB, at least 1g, never more

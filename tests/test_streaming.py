@@ -276,7 +276,7 @@ def test_drain_restores_shuffle_partitions_when_start_raises(spark):
     try:
         with pytest.raises(RuntimeError, match="start failed"):
             S.drain(spark, start)
-        assert seen == [str(S.DRAIN_SHUFFLE_PARTITIONS)]
+        assert seen == [str(S.STREAM_PARTITIONS)]
         assert spark.conf.get(key) == "13"
     finally:
         spark.conf.set(key, prev)
@@ -332,6 +332,119 @@ def test_ledgered_stream_restart_keeps_new_rows(spark, tmp_path):
     land_and_drain("f0.json", [1, 2])
     land_and_drain("f1.json", [3, 4])
     assert sorted(seen) == [1, 2, 3, 4]
+
+
+def _state_widths(progress) -> set[int]:
+    return {op.numShufflePartitions for p in progress for op in p.stateOperators}
+
+
+@pytest.fixture()
+def width_8(spark, tmp_path):
+    """The session at batch width 8, with queries checkpointing under
+    ``tmp_path``; both restored afterwards."""
+    keys = {
+        "spark.sql.shuffle.partitions": "8",
+        "spark.sql.streaming.checkpointLocation": str(tmp_path / "ckpt"),
+    }
+    old = {k: spark.conf.get(k, None) for k in keys}
+    for k, v in keys.items():
+        spark.conf.set(k, v)
+    yield
+    for k, v in old.items():
+        if v is None:
+            spark.conf.unset(k)
+        else:
+            spark.conf.set(k, v)
+
+
+def _consume(batch_df, batch_id):
+    """A foreachBatch callback that runs the whole batch: Spark fails a
+    batch whose state stores did not all commit."""
+    batch_df.count()
+
+
+SINK_STARTS = {
+    "to_console": lambda df, tmp: S.to_console(df, mode="complete"),
+    "to_memory": lambda df, tmp: S.to_memory(df, "width_pin", mode="complete"),
+    "foreach_batch": lambda df, tmp: S.foreach_batch(
+        df, _consume, mode="complete"
+    ),
+    "idempotent_foreach_batch": lambda df, tmp: S.idempotent_foreach_batch(
+        df, _consume, str(tmp / "ledger"), mode="complete"
+    ),
+}
+
+
+@pytest.mark.parametrize("sink", sorted(SINK_STARTS))
+def test_sinks_start_stateful_streams_at_stream_width(
+    spark, tmp_path, stream_rows, width_8, sink
+):
+    """Each sink gives the stream's state :data:`STREAM_PARTITIONS`
+    stores whatever the session's batch width, and leaves that width
+    as it found it."""
+    path = write_batches(str(tmp_path), stream_rows)
+    sdf = S.file_stream(spark, path, EVENTS_SCHEMA, max_files_per_trigger=1)
+    q = SINK_STARTS[sink](sdf.groupBy("event_type").count(), tmp_path)
+    try:
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "8"
+        S.run_until_drained(q)
+    finally:
+        spark.catalog.dropTempView("width_pin")
+    assert len(q.recentProgress) == 3
+    assert _state_widths(q.recentProgress) == {S.STREAM_PARTITIONS}
+    assert spark.conf.get("spark.sql.shuffle.partitions") == "8"
+
+
+def test_sink_restores_width_when_start_raises(spark, tmp_path, stream_rows, width_8):
+    """Append mode on an aggregation without a watermark fails inside
+    ``start()``; the session's width is still restored."""
+    path = write_batches(str(tmp_path), stream_rows)
+    sdf = S.file_stream(spark, path, EVENTS_SCHEMA)
+    with pytest.raises(Exception, match="(?i)append"):
+        S.to_memory(sdf.groupBy("event_type").count(), "width_fail", mode="append")
+    assert spark.conf.get("spark.sql.shuffle.partitions") == "8"
+
+
+def test_restart_keeps_an_older_checkpoints_width(spark, tmp_path, width_8):
+    """A stream checkpointed at width 4 before the sinks pinned a width
+    resumes at width 4 through :func:`idempotent_foreach_batch`, and
+    its callback sees exactly the rows landed in between: the re-sent
+    id 1 is dropped by the dedup state the checkpoint kept."""
+    src = tmp_path / "in"
+    src.mkdir()
+    ledger = str(tmp_path / "ledger")
+
+    def land(name, ids):
+        with open(src / name, "w") as f:
+            f.writelines(json.dumps(row(i, 0)) + "\n" for i in ids)
+
+    def deduped():
+        sdf = S.file_stream(spark, str(src), EVENTS_SCHEMA)
+        return sdf.dropDuplicates(["event_id"])
+
+    land("f0.json", [1, 2])
+    spark.conf.set("spark.sql.shuffle.partitions", "4")
+    q = (
+        deduped()
+        .writeStream.option("checkpointLocation", ledger + "_checkpoint")
+        .foreachBatch(_consume)
+        .start()
+    )
+    S.run_until_drained(q)
+    assert _state_widths(q.recentProgress) == {4}
+
+    spark.conf.set("spark.sql.shuffle.partitions", "8")
+    land("f1.json", [3, 1, 4, 3])
+    seen: list[int] = []
+
+    def effect(batch_df, batch_id):
+        seen.extend(r["event_id"] for r in batch_df.collect())
+
+    progress = S.drain(
+        spark, lambda: S.idempotent_foreach_batch(deduped(), effect, ledger)
+    )
+    assert _state_widths(progress) == {4}
+    assert sorted(seen) == [3, 4]
 
 
 def test_to_console_drains_untruncated(spark, tmp_path, stream_rows):

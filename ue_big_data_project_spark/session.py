@@ -153,14 +153,50 @@ def _arrow_table(rows, schema):
     arrays = []
     for i, f in enumerate(arrow_schema):
         column = [r[i] for r in data]
-        if pa.types.is_timestamp(f.type):
-            # Under PYARROW_IGNORE_TIMEZONE (pandas-on-Spark sets it)
-            # pa.array keeps an aware datetime's wall time and drops its
-            # offset; as UTC the wall time is the instant. A naive
-            # datetime is read as UTC, the session's zone.
-            column = [
-                v.astimezone(datetime.timezone.utc) if getattr(v, "tzinfo", None) else v
-                for v in column
-            ]
+        if _has_timestamp(f.type):
+            column = [_utc(v, f.type) for v in column]
         arrays.append(pa.array(column, type=f.type, from_pandas=False))
     return pa.Table.from_arrays(arrays, schema=arrow_schema)
+
+
+def _has_timestamp(t) -> bool:
+    """Whether the Arrow type ``t`` holds a timestamp at any depth."""
+    import pyarrow as pa
+
+    if pa.types.is_timestamp(t):
+        return True
+    if pa.types.is_map(t):
+        return _has_timestamp(t.key_type) or _has_timestamp(t.item_type)
+    if pa.types.is_list(t):
+        return _has_timestamp(t.value_type)
+    if pa.types.is_struct(t):
+        return any(_has_timestamp(f.type) for f in t)
+    return False
+
+
+def _utc(value, t):
+    """``value`` with each aware datetime at a timestamp of the Arrow
+    type ``t``, at any depth, turned to UTC. Under
+    PYARROW_IGNORE_TIMEZONE (pandas-on-Spark sets it) ``pa.array``
+    keeps an aware datetime's wall time and drops its offset; as UTC
+    the wall time is the instant. A naive datetime is read as UTC, the
+    session's zone. A value of another shape is left for Arrow to take
+    or reject."""
+    import pyarrow as pa
+
+    if value is None:
+        return None
+    if pa.types.is_timestamp(t):
+        if getattr(value, "tzinfo", None):
+            return value.astimezone(datetime.timezone.utc)
+        return value
+    if pa.types.is_map(t) and isinstance(value, dict):
+        return {_utc(k, t.key_type): _utc(v, t.item_type) for k, v in value.items()}
+    if pa.types.is_list(t) and isinstance(value, (list, tuple)):
+        return [_utc(v, t.value_type) for v in value]
+    if pa.types.is_struct(t):
+        if isinstance(value, dict):
+            return {f.name: _utc(value.get(f.name), f.type) for f in t}
+        if isinstance(value, tuple) and len(value) == t.num_fields:
+            return tuple(_utc(v, f.type) for v, f in zip(value, t))
+    return value

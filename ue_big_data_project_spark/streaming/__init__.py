@@ -11,10 +11,12 @@ operators, so every streaming pipeline is testable without Kafka by
 replaying files — and the *logic* is shared with batch (same column
 expressions), giving batch-vs-stream equivalence tests for free.
 
-Scale notes: stateful aggs shuffle on (window, keys); the watermark
+Scale notes: stateful aggs shuffle on (window, keys) into
+:data:`STREAM_PARTITIONS` partitions, which the sinks pin when a query
+starts, whatever the session's batch width: one state store per
+stateful operator (RocksDB, set in ``session.get_spark``). The watermark
 bounds window state, and dedup state only under the condition
-:func:`dedup_stream` states. For large state, RocksDB state store (set
-in ``session.get_spark``). Late data beyond the watermark is dropped —
+:func:`dedup_stream` states. Late data beyond the watermark is dropped —
 identical semantics to the reference's append-mode pipelines.
 
 This module is the transit system's streaming core: sources, the JSON
@@ -30,6 +32,7 @@ and every bounded run goes through :func:`drain`.
 
 from __future__ import annotations
 
+import contextlib
 import os
 import re
 import tempfile
@@ -43,7 +46,7 @@ from pyspark.sql import functions as F
 
 from ue_big_data_project_spark.session import local_relation
 from pyspark.sql import types as T
-from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 
 def file_stream(
@@ -151,6 +154,43 @@ def dedup_stream(
     return df.dropDuplicates(keys)
 
 
+# Shuffle width of every stream the package starts. A stateful operator
+# opens one state store per shuffle partition in every micro-batch, and
+# committing the stores is most of a batch's cost: one store per operator
+# is the cheapest commit, and the transit streams' state is thousands of
+# keys. The stream binds the width when it starts; a restart takes it
+# from its checkpoint's offset log, so an older checkpoint keeps its own.
+STREAM_PARTITIONS = 1
+
+
+@contextlib.contextmanager
+def _pinned(spark: SparkSession, pins: dict[str, str]):
+    """Set ``pins`` in the session's conf for the block, then restore
+    each old value (or unset it), also when the block raises."""
+    old = {key: spark.conf.get(key, None) for key in pins}
+    for key, value in pins.items():
+        spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        for key, value in old.items():
+            if value is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, value)
+
+
+def _start(df: DataFrame, writer: DataStreamWriter) -> StreamingQuery:
+    """Start ``writer``'s query with ``spark.sql.shuffle.partitions``
+    pinned to :data:`STREAM_PARTITIONS` on ``df``'s session. The query
+    clones the session while it starts, so it keeps the width and the
+    caller's session gets its own value back."""
+    with _pinned(
+        df.sparkSession, {"spark.sql.shuffle.partitions": str(STREAM_PARTITIONS)}
+    ):
+        return writer.start()
+
+
 def to_console(
     df: DataFrame, mode: str = "append", trigger_interval: str | None = None
 ) -> StreamingQuery:
@@ -167,7 +207,7 @@ def to_console(
     )
     if trigger_interval:
         w = w.trigger(processingTime=trigger_interval)
-    return w.start()
+    return _start(df, w)
 
 
 def to_memory(
@@ -175,8 +215,8 @@ def to_memory(
 ) -> StreamingQuery:
     """Memory sink — the deterministic test sink; query results with
     ``spark.sql(f"SELECT * FROM {name}")``."""
-    return (
-        df.writeStream.outputMode(mode).format("memory").queryName(name).start()
+    return _start(
+        df, df.writeStream.outputMode(mode).format("memory").queryName(name)
     )
 
 
@@ -191,7 +231,7 @@ def foreach_batch(
     micro-batch (plot_bus_positions, src/naolib_consumer.py:119-162);
     any driver-side consumer fits.
     """
-    return df.writeStream.outputMode(mode).foreachBatch(fn).start()
+    return _start(df, df.writeStream.outputMode(mode).foreachBatch(fn))
 
 
 def _ledgered(
@@ -234,11 +274,11 @@ def idempotent_foreach_batch(
     restart resumes its batch ids; from a fresh checkpoint they would
     restart at 0 and the ledger would skip new rows as done.
     """
-    return (
+    return _start(
+        df,
         df.writeStream.outputMode(mode)
         .option("checkpointLocation", ledger_dir.rstrip("/") + "_checkpoint")
-        .foreachBatch(_ledgered(fn, ledger_dir))
-        .start()
+        .foreachBatch(_ledgered(fn, ledger_dir)),
     )
 
 
@@ -349,7 +389,9 @@ def stream_interval_join(
     Scale: the join shuffles both streams on ``keys`` (or broadcasts
     nothing — there is no bounded side); skewed keys salt the same way
     as batch joins, and AQE does not apply (streaming plans are fixed
-    at start), so size shuffle partitions to key cardinality up front.
+    at start). The sinks start every stream at
+    :data:`STREAM_PARTITIONS` partitions, which its checkpoint keeps,
+    so one task per batch holds the whole join state.
     """
     if left.isStreaming:
         left = left.withWatermark(left_ts, watermark)
@@ -374,15 +416,6 @@ def run_until_drained(query: StreamingQuery) -> None:
         query.stop()
 
 
-# Shuffle width of a bounded replay. A stateful query instantiates one
-# state store per shuffle partition per micro-batch, and an ingest
-# stream's per-batch joins run one task per partition, so a vanilla
-# session's 200 partitions pay ~25x the per-batch fixed cost on
-# megabyte-scale replays. Production streams size this to state key
-# cardinality instead.
-DRAIN_SHUFFLE_PARTITIONS = 8
-
-
 def drain(
     spark: SparkSession, start: Callable[[], StreamingQuery]
 ) -> list:
@@ -391,34 +424,28 @@ def drain(
 
     From before ``start()`` until the query stops, even when either
     raises, two settings are pinned and then restored (or unset):
-    ``spark.sql.shuffle.partitions`` to :data:`DRAIN_SHUFFLE_PARTITIONS`
-    (the stream binds its state partitioning at the start, and ingest
-    streams run batch jobs inside ``foreachBatch`` that read it), and
-    ``spark.sql.streaming.checkpointLocation`` to a scratch root that is
-    removed afterwards, so no drain leaves a checkpoint behind. A query
-    that sets its own checkpoint (:func:`idempotent_foreach_batch`)
-    keeps it.
+    ``spark.sql.shuffle.partitions`` to :data:`STREAM_PARTITIONS` (the
+    width the sinks give the stream itself; ingest streams run batch
+    jobs on the caller's session inside ``foreachBatch`` that read it
+    too), and ``spark.sql.streaming.checkpointLocation`` to a scratch
+    root that is removed afterwards, so no drain leaves a checkpoint
+    behind. A query that sets its own checkpoint
+    (:func:`idempotent_foreach_batch`) keeps it.
     """
-    pins = {
-        "spark.sql.shuffle.partitions": str(DRAIN_SHUFFLE_PARTITIONS),
-        "spark.sql.streaming.checkpointLocation": tempfile.mkdtemp(
-            prefix="spark_graft_ckpt_"
-        ),
-    }
-    old = {key: spark.conf.get(key, None) for key in pins}
-    for key, value in pins.items():
-        spark.conf.set(key, value)
+    root = tempfile.mkdtemp(prefix="spark_graft_ckpt_")
     try:
-        query = start()
-        run_until_drained(query)
-        return query.recentProgress
+        with _pinned(
+            spark,
+            {
+                "spark.sql.shuffle.partitions": str(STREAM_PARTITIONS),
+                "spark.sql.streaming.checkpointLocation": root,
+            },
+        ):
+            query = start()
+            run_until_drained(query)
+            return query.recentProgress
     finally:
-        for key, value in old.items():
-            if value is None:
-                spark.conf.unset(key)
-            else:
-                spark.conf.set(key, value)
-        fs.rmtree(pins["spark.sql.streaming.checkpointLocation"])
+        fs.rmtree(root)
 
 
 def _glob_escape(path: str) -> str:
