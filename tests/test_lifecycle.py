@@ -120,7 +120,8 @@ def test_queries_start_only_through_start():
 
 def test_shuffle_width_set_only_by_start_and_drain():
     """Every use of the width's key that is not a ``.get`` read: the two
-    stream pins and ``get_spark``'s builder default."""
+    stream pins, the ``foreachBatch`` callbacks' batch width and
+    ``get_spark``'s builder default."""
     key = "spark.sql.shuffle.partitions"
 
     def uses_key(node) -> bool:
@@ -135,5 +136,6 @@ def test_shuffle_width_set_only_by_start_and_drain():
     assert _sites(uses_key) == {
         (STREAMING, "_start"),
         (STREAMING, "drain"),
+        (STREAMING, "_at_batch_width"),
         (f"{PKG}.session", "get_spark"),
     }

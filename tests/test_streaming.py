@@ -11,6 +11,8 @@ from __future__ import annotations
 import json
 import os
 import tempfile
+import threading
+import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -395,6 +397,34 @@ def test_sinks_start_stateful_streams_at_stream_width(
     assert spark.conf.get("spark.sql.shuffle.partitions") == "8"
 
 
+@pytest.mark.parametrize("sink", ["foreach_batch", "idempotent_foreach_batch"])
+def test_callbacks_run_batch_jobs_at_core_width(
+    spark, tmp_path, stream_rows, width_8, sink
+):
+    """A ``foreachBatch`` callback's batch jobs run at one shuffle
+    partition per core while the stream's state stays at
+    :data:`STREAM_PARTITIONS`."""
+    seen: list[str] = []
+
+    def record(batch_df, batch_id):
+        seen.append(batch_df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+        batch_df.count()
+
+    path = write_batches(str(tmp_path), stream_rows)
+    sdf = S.file_stream(spark, path, EVENTS_SCHEMA, max_files_per_trigger=1)
+    counts = sdf.groupBy("event_type").count()
+    if sink == "foreach_batch":
+        q = S.foreach_batch(counts, record, mode="complete")
+    else:
+        q = S.idempotent_foreach_batch(
+            counts, record, str(tmp_path / "ledger"), mode="complete"
+        )
+    S.run_until_drained(q)
+    cores = str(spark.sparkContext.defaultParallelism)
+    assert seen == [cores] * 3
+    assert _state_widths(q.recentProgress) == {S.STREAM_PARTITIONS}
+
+
 def test_sink_restores_width_when_start_raises(spark, tmp_path, stream_rows, width_8):
     """Append mode on an aggregation without a watermark fails inside
     ``start()``; the session's width is still restored."""
@@ -402,6 +432,32 @@ def test_sink_restores_width_when_start_raises(spark, tmp_path, stream_rows, wid
     sdf = S.file_stream(spark, path, EVENTS_SCHEMA)
     with pytest.raises(Exception, match="(?i)append"):
         S.to_memory(sdf.groupBy("event_type").count(), "width_fail", mode="append")
+    assert spark.conf.get("spark.sql.shuffle.partitions") == "8"
+
+
+def test_concurrent_starts_restore_the_sessions_width(spark, width_8):
+    """Two starts on different threads each see the stream width and
+    leave the session at its own: one start's restore cannot land
+    inside the other's pin."""
+
+    class SlowWriter:
+        def start(self):
+            time.sleep(0.3)
+            return spark.conf.get("spark.sql.shuffle.partitions")
+
+    class Frame:
+        sparkSession = spark
+
+    seen: list[str] = []
+    threads = [
+        threading.Thread(target=lambda: seen.append(S._start(Frame, SlowWriter())))
+        for _ in range(2)
+    ]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    assert seen == [str(S.STREAM_PARTITIONS)] * 2
     assert spark.conf.get("spark.sql.shuffle.partitions") == "8"
 
 

@@ -36,6 +36,7 @@ import contextlib
 import os
 import re
 import tempfile
+import threading
 import uuid
 from typing import Callable
 
@@ -160,6 +161,8 @@ def dedup_stream(
 # is the cheapest commit, and the transit streams' state is thousands of
 # keys. The stream binds the width when it starts; a restart takes it
 # from its checkpoint's offset log, so an older checkpoint keeps its own.
+# A foreachBatch callback's own batch jobs hold no state and run at one
+# partition per core instead (:func:`_at_batch_width`).
 STREAM_PARTITIONS = 1
 
 
@@ -180,12 +183,20 @@ def _pinned(spark: SparkSession, pins: dict[str, str]):
                 spark.conf.set(key, value)
 
 
+# Serializes the save/set/start/restore of :func:`_start`: two starts
+# interleaved on different threads would otherwise restore each other's
+# pin and leave the session at the stream width.
+_START_LOCK = threading.Lock()
+
+
 def _start(df: DataFrame, writer: DataStreamWriter) -> StreamingQuery:
     """Start ``writer``'s query with ``spark.sql.shuffle.partitions``
     pinned to :data:`STREAM_PARTITIONS` on ``df``'s session. The query
     clones the session while it starts, so it keeps the width and the
-    caller's session gets its own value back."""
-    with _pinned(
+    caller's session gets its own value back. A batch query running on
+    the same session on another thread during ``start()`` also reads the
+    stream width."""
+    with _START_LOCK, _pinned(
         df.sparkSession, {"spark.sql.shuffle.partitions": str(STREAM_PARTITIONS)}
     ):
         return writer.start()
@@ -231,7 +242,26 @@ def foreach_batch(
     micro-batch (plot_bus_positions, src/naolib_consumer.py:119-162);
     any driver-side consumer fits.
     """
-    return _start(df, df.writeStream.outputMode(mode).foreachBatch(fn))
+    return _start(
+        df, df.writeStream.outputMode(mode).foreachBatch(_at_batch_width(df, fn))
+    )
+
+
+def _at_batch_width(
+    df: DataFrame, fn: Callable[[DataFrame, int], None]
+) -> Callable[[DataFrame, int], None]:
+    """Wrap a ``foreachBatch`` callback so its own batch jobs run at one
+    shuffle partition per core. ``batch_df.sparkSession`` is the stream's
+    clone, at :data:`STREAM_PARTITIONS`: that width sizes state stores,
+    and the callback's index joins and repartitioned writes hold no
+    state, so in one task they only lose the cores."""
+    width = str(df.sparkSession.sparkContext.defaultParallelism)
+
+    def run(batch_df: DataFrame, batch_id: int) -> None:
+        with _pinned(batch_df.sparkSession, {"spark.sql.shuffle.partitions": width}):
+            fn(batch_df, batch_id)
+
+    return run
 
 
 def _ledgered(
@@ -278,7 +308,7 @@ def idempotent_foreach_batch(
         df,
         df.writeStream.outputMode(mode)
         .option("checkpointLocation", ledger_dir.rstrip("/") + "_checkpoint")
-        .foreachBatch(_ledgered(fn, ledger_dir)),
+        .foreachBatch(_at_batch_width(df, _ledgered(fn, ledger_dir))),
     )
 
 
@@ -424,13 +454,20 @@ def drain(
 
     From before ``start()`` until the query stops, even when either
     raises, two settings are pinned and then restored (or unset):
-    ``spark.sql.shuffle.partitions`` to :data:`STREAM_PARTITIONS` (the
-    width the sinks give the stream itself; ingest streams run batch
-    jobs on the caller's session inside ``foreachBatch`` that read it
-    too), and ``spark.sql.streaming.checkpointLocation`` to a scratch
-    root that is removed afterwards, so no drain leaves a checkpoint
-    behind. A query that sets its own checkpoint
-    (:func:`idempotent_foreach_batch`) keeps it.
+    ``spark.sql.shuffle.partitions`` to :data:`STREAM_PARTITIONS`, and
+    ``spark.sql.streaming.checkpointLocation`` to a scratch root that is
+    removed afterwards, so no drain leaves a checkpoint behind. A query
+    that sets its own checkpoint (:func:`idempotent_foreach_batch`)
+    keeps it.
+
+    The stream's own width comes from the sink's :func:`_start`, and
+    that of the jobs its ``foreachBatch`` callbacks run on
+    ``batch_df.sparkSession`` from :func:`_at_batch_width`, not from
+    this pin. The pin reaches only batch jobs
+    that ``start`` runs on ``spark`` before the query starts, such as
+    the scorer :func:`~ue_big_data_project_spark.streaming.ingest.dsir_score_stream`
+    materializes. Both pins are session-wide for the whole drain, so
+    drains sharing one session must not overlap on different threads.
     """
     root = tempfile.mkdtemp(prefix="spark_graft_ckpt_")
     try:
